@@ -209,15 +209,6 @@ object TrainQueries {
   private def packSequences(spark: SparkSession, dir: String): DataFrame =
     packSequencesWith(spark, dir, PackBuckets)
 
-  /** The PRODUCTION packing entry point: buckets sized to the cluster
-    * (`defaultParallelism`), not to the oracle's fixed 8 — on a
-    * 1000-executor cluster the verify query's 8 buckets would leave 992
-    * slots idle through the running-offset window. Same semantics per
-    * bucket; only the degree of independent packing scales. `PackProbe`
-    * measures the knob (8 → 64 buckets) at the scale SFs. */
-  def packSequencesScaled(spark: SparkSession, dir: String): DataFrame =
-    packSequencesWith(spark, dir, spark.sparkContext.defaultParallelism)
-
   /** [[packSequences]] at an explicit bucket count — the parallelism
     * knob: buckets pack independently (the running-offset window and the
     * per-sequence assembly both partition by bucket), so a production
@@ -1409,7 +1400,9 @@ object TrainQueries {
     val art = graft.data.IndexManifest.writeArtifact(spark, path, "manifest",
       shardTokenManifest(spark, path))
     graft.data.IndexManifest.commit(spark, path,
-      graft.data.IndexManifest.listDataFiles(spark, path), Map(art)): Unit
+      graft.data.IndexManifest.Snapshot.Empty, graft.data.IndexManifest.Delta(
+        graft.data.IndexManifest.listDataFiles(spark, path),
+        artifacts = Map(art))): Unit
   }
 
   /** MAINTAIN a tokenized-shard artifact: encode an ingest batch with
@@ -1493,17 +1486,13 @@ object TrainQueries {
                                      // delta commit carries the previous
                                      // artifact pointer unchanged
         else {
-          val root = new org.apache.hadoop.fs.Path(path)
           val inc = shardManifestOf(
-            spark.read.option("basePath", root.toString)
-              .parquet(added.map(f =>
-                new org.apache.hadoop.fs.Path(root, f).toString): _*))
+            graft.data.IndexManifest.readFiles(spark, path, added))
           // bootstrap: the FIRST append into an empty artifact (a
           // stream starting from zero) has no stored manifest yet —
           // the increment IS the manifest
           val prevArt =
-            if (graft.data.IndexManifest.load(spark, path)
-                .exists(_.artifacts.contains("manifest")))
+            if (snap.artifacts.contains("manifest"))
               readShardManifest(spark, path)
             else inc.limit(0)
           Map(graft.data.IndexManifest.writeArtifact(spark, path, "manifest",
@@ -1522,8 +1511,9 @@ object TrainQueries {
                 expr("coalesce(xor_checksum, 0L) ^ coalesce(__x, 0L)")
                   .as("xor_checksum"))))
         }
-      graft.data.IndexManifest.commitAdded(spark, path, added, art,
-        retainVersions = retainVersions): Unit
+      graft.data.IndexManifest.commit(spark, path, snap,
+        graft.data.IndexManifest.Delta(added, artifacts = art),
+        retainVersions): Unit
     }
 
   /** The stored reproducibility manifest of a maintained tokenized-shard
@@ -1689,7 +1679,9 @@ object TrainQueries {
       graft.data.IndexManifest.writeArtifact(spark, outPath, "bins", bins),
       graft.data.IndexManifest.writeArtifact(spark, outPath, "src",
         spark.range(1).select(lit(srcV).as("src_version"))))
-    graft.data.IndexManifest.commit(spark, outPath, added, art): Unit
+    graft.data.IndexManifest.commit(spark, outPath,
+      graft.data.IndexManifest.Snapshot.Empty,
+      graft.data.IndexManifest.Delta(added, artifacts = art)): Unit
   }
 
   /** The "bins" coverage artifact's schema, zero rows — what an empty
@@ -1905,7 +1897,7 @@ object TrainQueries {
     *     files sees build and continuation files alike.
     *   - The "bins"/"src" artifacts increment from the READ-BACK of
     *     exactly the files that landed, and publish with them in ONE
-    *     [[graft.data.IndexManifest.commitAdded]] — a replay (source
+    *     [[graft.data.IndexManifest.commit]] — a replay (source
     *     unchanged, or changed with no new bins) commits NOTHING. */
   /** Source data files opened by [[appendTfRecordShards]] rolls — the
     * instrumentation behind the mirror's O(batch)-scan spec: a gate
@@ -1936,7 +1928,6 @@ object TrainQueries {
     val syncedV = graft.data.IndexManifest
       .readArtifact(spark, outPath, "src").head().getLong(0)
     val srcSnap = graft.data.IndexManifest.load(spark, srcPath)
-    val srcRoot = new org.apache.hadoop.fs.Path(srcPath)
     val newRows: Option[org.apache.spark.sql.DataFrame] =
       (srcSnap, graft.data.IndexManifest.loadAt(spark, srcPath, syncedV)) match {
         case (Some(cur), Some(old)) =>
@@ -1944,9 +1935,7 @@ object TrainQueries {
           if (delta.isEmpty) None // source unchanged: replay no-op
           else {
             tfrSourceFilesRead.addAndGet(delta.length.toLong): Unit
-            Some(spark.read.option("basePath", srcRoot.toString)
-              .parquet(delta.map(f =>
-                new org.apache.hadoop.fs.Path(srcRoot, f).toString): _*))
+            Some(graft.data.IndexManifest.readFiles(spark, srcPath, delta))
           }
         case _ => // sync point vacuumed (or pre-manifest source): full
                   // scan; the bin screen below still makes this exact
@@ -1989,10 +1978,11 @@ object TrainQueries {
       // finally lands — O(index) scans per batch on the hot ingest path
       val curV = srcSnap.map(_.version).getOrElse(-1L)
       if (curV != syncedV) {
-        graft.data.IndexManifest.commitAdded(spark, outPath, Seq.empty,
-          Map(graft.data.IndexManifest.writeArtifact(spark, outPath, "src",
-            spark.range(1).select(lit(curV).as("src_version")))),
-          retainVersions = retainVersions): Unit
+        graft.data.IndexManifest.commit(spark, outPath, outSnap,
+          graft.data.IndexManifest.Delta(artifacts = Map(
+            graft.data.IndexManifest.writeArtifact(spark, outPath, "src",
+              spark.range(1).select(lit(curV).as("src_version"))))),
+          retainVersions): Unit
       }
       return
     }
@@ -2016,8 +2006,9 @@ object TrainQueries {
       graft.data.IndexManifest.writeArtifact(spark, outPath, "src",
         spark.range(1).select(
           lit(srcSnap.map(_.version).getOrElse(-1L)).as("src_version"))))
-    graft.data.IndexManifest.commitAdded(spark, outPath, added, art,
-      retainVersions = retainVersions): Unit
+    graft.data.IndexManifest.commit(spark, outPath, outSnap,
+      graft.data.IndexManifest.Delta(added, artifacts = art),
+      retainVersions): Unit
   }
 
   private val builtTfrFiles =
@@ -2233,6 +2224,16 @@ object TrainQueries {
                                      through: Int = 4,
                                      retainVersions: Int = 2): Unit = {
     import graft.data.IndexManifest
+    import graft.data.IndexManifest.{Delta, Snapshot}
+    // a superseding snapshot of a derived table: the staged rows replace
+    // every file of the current version
+    def supersede(p: String, rows: DataFrame,
+                  artifacts: Map[String, String]): Unit = {
+      val base = IndexManifest.load(spark, p).getOrElse(Snapshot.Empty)
+      IndexManifest.commit(spark, p, base,
+        Delta(IndexManifest.stageAppend(rows, p, "part"), base.dataFiles,
+          artifacts), retainVersions): Unit
+    }
     val vDir = vocabDir.getOrElse(srcDir)
     val fateP = s"$base/fate"
     val corpusP = s"$base/corpus"
@@ -2242,9 +2243,7 @@ object TrainQueries {
     val fate = graft.DataQueries.fateTable(spark, srcDir)
       .select(col("doc_id"), col("fate"))
       .withColumn("part", pmod(col("doc_id"), lit(8L)))
-    val fAdded = IndexManifest.stageAppend(fate, fateP, "part")
-    IndexManifest.commit(spark, fateP, fAdded, Map.empty): Unit
-    IndexManifest.vacuum(spark, fateP, retainVersions): Unit
+    supersede(fateP, fate, Map.empty)
     if (through < 2) return
     // hop 2 — survivor prune, pinned to the fate version just read
     val fateV = IndexManifest.load(spark, fateP).get.version
@@ -2254,11 +2253,9 @@ object TrainQueries {
       .join(kept, Seq("doc_id"))
       .select(col("doc_id"), col("text"))
       .withColumn("part", pmod(col("doc_id"), lit(8L)))
-    val cAdded = IndexManifest.stageAppend(pruned, corpusP, "part")
-    IndexManifest.commit(spark, corpusP, cAdded, Map(
+    supersede(corpusP, pruned, Map(
       IndexManifest.writeArtifact(spark, corpusP, "lineage",
-        spark.range(1).select(lit(fateV).as("upstream_version"))))): Unit
-    IndexManifest.vacuum(spark, corpusP, retainVersions): Unit
+        spark.range(1).select(lit(fateV).as("upstream_version")))))
     if (through < 3) return
     // hop 3 — tokenized shards from the pinned pruned corpus (frozen
     // vocabulary; incremental on re-run via the novelty screen)
@@ -2267,10 +2264,11 @@ object TrainQueries {
       .select(col("doc_id"), col("text"))
     appendTokenizedShards(spark, vDir, batch, shardsP,
       retainVersions = retainVersions)
-    IndexManifest.commitAdded(spark, shardsP, Seq.empty, Map(
-      IndexManifest.writeArtifact(spark, shardsP, "lineage",
-        spark.range(1).select(lit(corpusV).as("upstream_version")))),
-      retainVersions = retainVersions): Unit
+    IndexManifest.commit(spark, shardsP, IndexManifest.load(spark, shardsP).get,
+      Delta(artifacts = Map(
+        IndexManifest.writeArtifact(spark, shardsP, "lineage",
+          spark.range(1).select(lit(corpusV).as("upstream_version"))))),
+      retainVersions): Unit
     if (through < 4) return
     // hop 4 — the wire mirror rolled to the shard state it just pinned
     if (IndexManifest.load(spark, tfrP).isEmpty)

@@ -3,6 +3,8 @@ package graft.data
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import IndexManifest.{Delta, Snapshot}
+
 /** Deduplication operators for a training-data pipeline: exact
   * (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket-join),
   * SimHash, and exact n-gram Jaccard.
@@ -264,7 +266,8 @@ object Dedup {
       .withColumn("shard", cellShard(col("cell_hash")))
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
-    IndexManifest.commitListing(corpus.sparkSession, path): Unit
+    IndexManifest.commit(corpus.sparkSession, path, Snapshot.Empty,
+      Delta(IndexManifest.listDataFiles(corpus.sparkSession, path))): Unit
   }
 
   /** The pinned read of a maintained index — every serve below goes
@@ -301,7 +304,7 @@ object Dedup {
     * invisible orphans the next reconcile removes (and the replay,
     * whose novelty check reads the pinned pre-state, re-appends them
     * correctly — committing NOTHING when nothing is novel, the
-    * [[IndexManifest.commitDelta]] no-op skip).
+    * [[IndexManifest.commit]] no-op skip).
     *
     * Filesystem cost: the batch's distinct shard set is a bounded
     * driver pull (≤ the shard universe) feeding a literal-IN partition
@@ -336,8 +339,8 @@ object Dedup {
       bd.join(broadcast(hits), Seq("shard", "cell_hash"), "left_anti")
         .repartition(col("shard")),
       indexPath, "shard")
-    IndexManifest.commitAdded(spark, indexPath, added,
-      retainVersions = retainVersions, preCommitHook = preCommitHook): Unit
+    IndexManifest.commit(spark, indexPath, snap, Delta(added),
+      retainVersions, preCommitHook): Unit
   }
 
   /** Serve an ingest batch against the STORED index (the read-back of
@@ -443,8 +446,8 @@ object Dedup {
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
     val ptr = IndexManifest.writeArtifact(spark, path, "capped", capped)
-    IndexManifest.commit(spark, path,
-      IndexManifest.listDataFiles(spark, path), Map(ptr)): Unit
+    IndexManifest.commit(spark, path, Snapshot.Empty,
+      Delta(IndexManifest.listDataFiles(spark, path), artifacts = Map(ptr))): Unit
   }
 
   /** The stored tombstone set of a band index — empty for legacy
@@ -513,8 +516,8 @@ object Dedup {
     * Same [[IndexManifest]] mutation protocol as [[appendCellIndex]]:
     * reconcile → pinned pre-state → append + tombstone version → one
     * atomic commit publishing both, closing with the retention vacuum
-    * and paying only O(batch shards) listing calls (touched-dirs
-    * commit); a full replay commits nothing at all. */
+    * and listing no partition directory (staged write); a full replay
+    * commits nothing at all. */
   def appendBandIndex(batchBands: DataFrame, idCol: String, cap: Int,
                       indexPath: String, retainVersions: Int = 2): Unit = {
     val spark = batchBands.sparkSession
@@ -564,54 +567,42 @@ object Dedup {
       .where(coalesce(col("__n"), lit(0L)) === 0L && col("__nb") > cap)
       .select(col("band"), col("bucket")).distinct()
       .localCheckpoint(true)
-    if (newTombs.isEmpty) {
-      IndexManifest.commitAdded(spark, indexPath, added,
-        retainVersions = retainVersions): Unit
-    } else {
-      val ptr = IndexManifest.writeArtifact(spark, indexPath, "capped",
-        tombs.unionByName(newTombs))
-      IndexManifest.commitAdded(spark, indexPath, added, Map(ptr),
-        retainVersions = retainVersions): Unit
-    }
+    val arts =
+      if (newTombs.isEmpty) Map.empty[String, String]
+      else Map(IndexManifest.writeArtifact(spark, indexPath, "capped",
+        tombs.unionByName(newTombs)))
+    IndexManifest.commit(spark, indexPath, snap, Delta(added, artifacts = arts),
+      retainVersions): Unit
   }
 
   /** COMPACT a maintained shard-partitioned index: every
     * [[appendCellIndex]]/[[appendBandIndex]] (and every streaming
     * micro-batch append) adds parquet files into shard directories
     * without bound — after N appends each shard holds N small files and
-    * serve-side scan tasks grow forever. This rewrites any shard
-    * directory whose file count exceeds `maxFilesPerShard` down to
-    * `targetFilesPerShard` files, preserving the partition layout (and
-    * therefore every serve plan: partition pruning, broadcast
-    * orientation, schema — the spec pins serve-identical-before/after).
+    * serve-side scan tasks grow forever. This rewrites every shard
+    * directory whose file count exceeds `maxFilesPerShard` down to ONE
+    * file, preserving the partition layout (and therefore every serve
+    * plan: partition pruning, broadcast orientation, schema — the spec
+    * pins serve-identical-before/after).
     *
-    * Mechanics under [[IndexManifest]]: reconcile (drop any crashed
-    * mutation's orphans), rewrite each oversized shard into a hidden
-    * `_compacting` temp, rename the fresh files in (`compact-` prefix —
-    * invisible to every reader, because readers plan from the manifest,
-    * not the directory), then publish ONE manifest commit that lists
-    * the fresh files and drops the old, and only then delete the old
-    * files. A reader planned at ANY point sees exactly the
-    * pre-manifest or post-manifest file set — never the union that the
-    * round-11 marker protocol still allowed mid-swap. A crash before
-    * the commit leaves invisible orphans (next reconcile removes them;
-    * the old state is untouched); a crash after it leaves the
-    * superseded old files to the closing [[IndexManifest.vacuum]].
-    * `retainVersions` sets the retention window that vacuum keeps: the
-    * default 1 deletes superseded files immediately (the single-machine
-    * economy); ≥ 2 keeps the pre-compaction snapshot readable
-    * ([[IndexManifest.readDataAt]]) and guarantees a reader EXECUTING
-    * against it never races the deletion — the production posture.
-    *
-    * Concurrency: the commit is a CAS at the loaded snapshot's
-    * version + 1, and a lost claim (a gate's append landed mid-fold)
-    * RELOADS and recomputes — appends keep priority, operators can run
-    * compactions without pausing gates (the spec drives an append into
+    * One [[IndexManifest.rewrite]] transaction: one pinned read of every
+    * over-full shard's files, `repartition(partitionCol)` so each shard
+    * is one task's output, and [[IndexManifest.stageAppend]] — ONE write
+    * job whatever the shard count — then one commit that lists the fresh
+    * files and drops the old. A reader planned at ANY point sees exactly
+    * the pre- or post-manifest file set; a crash before the commit
+    * leaves invisible orphans for the next reconcile, a crash after it
+    * leaves the superseded files to the closing vacuum. `retainVersions`
+    * sets that vacuum's window: the default 1 deletes superseded files
+    * immediately (the single-machine economy); ≥ 2 keeps the
+    * pre-compaction snapshot readable ([[IndexManifest.readDataAt]]) so
+    * a reader EXECUTING against it never races the deletion. A gate's
+    * append landing mid-compaction wins the claim and the compaction
+    * re-plans over the winner's snapshot (the spec drives an append into
     * the `preCommitHook` seam and both land).
     *
-    * At 100 TB this is the same per-shard job with more shards, each
-    * bounded by its own directory's bytes — never a whole-index
-    * shuffle.
+    * At 100 TB the same shuffle carries only the over-full shards, each
+    * landing in its own task — never a whole-index shuffle.
     *
     * Returns (shardsCompacted, filesBefore, filesAfter) across the
     * shards it touched (untouched shards excluded).
@@ -622,82 +613,24 @@ object Dedup {
     * way); underscore-prefixed subdirectories (manifests, artifacts)
     * are never partition dirs and are left untouched. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFilesPerShard: Int, targetFilesPerShard: Int = 1,
-      partitionCol: String = "shard",
+      maxFilesPerShard: Int, partitionCol: String = "shard",
       retainVersions: Int = 1,
       preCommitHook: () => Unit = () => ()): (Int, Int, Int) = {
-    require(maxFilesPerShard >= 1 && targetFilesPerShard >= 1,
-      "file bounds must be positive")
-    IndexManifest.reconcile(spark, path): Unit
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    // RETRY-ON-CONFLICT, appends keep priority: the commit below claims
-    // exactly snap.version + 1, so a gate's append landing between our
-    // load and our claim fails the claim LOUDLY (the CAS an unpinned
-    // commit would turn into a silent lost update — the appended files
-    // missing from our stale listing). Folding is recomputable, so the
-    // loser reloads the winner's snapshot (appended rows included) and
-    // re-folds — a bounded number of times, letting operators run
-    // compactions without pausing gates; the earlier attempt's fold
-    // files become invisible orphans for the next reconcile. Only the
-    // orphan SWEEP above still assumes no writer is mid-append at fold
-    // START (a staged-but-uncommitted batch would read as debris);
-    // [[IndexManifest.reconcileAppend]]'s age-gated sweep is the
-    // gate-side complement.
-    var attempt = 0
-    while (true) {
-      val snap = IndexManifest.load(spark, path).get
-      val byDir = snap.dataFiles.groupBy(_.takeWhile(_ != '/'))
+    require(maxFilesPerShard >= 1, "file bounds must be positive")
+    IndexManifest.rewrite(spark, path, retainVersions, preCommitHook) { snap =>
+      val over = snap.dataFiles.groupBy(_.takeWhile(_ != '/'))
         .filter { case (d, fls) =>
           d.startsWith(s"$partitionCol=") && fls.length > maxFilesPerShard }
-      if (byDir.isEmpty) return (0, 0, 0)
-      var done = 0; var before = 0; var after = 0
-      val removed = scala.collection.mutable.ArrayBuffer.empty[String]
-      val added = scala.collection.mutable.ArrayBuffer.empty[String]
-      byDir.toSeq.sortBy(_._1).foreach { case (dirName, files) =>
-        val dir = new org.apache.hadoop.fs.Path(root, dirName)
-        val tmp = new org.apache.hadoop.fs.Path(dir, "_compacting")
-        fs.delete(tmp, true)
-        // read exactly the manifest's files for this shard (schema =
-        // payload columns only; the partition value is the directory key)
-        spark.read.parquet(files.map(f =>
-            new org.apache.hadoop.fs.Path(root, f).toString): _*)
-          .coalesce(targetFilesPerShard)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val fresh = fs.listStatus(tmp).filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.map(_.getPath)
-        fresh.foreach { f =>
-          // compact- prefix + the writer uuid in the part name: unique,
-          // never colliding with a live part- file
-          val dst = new org.apache.hadoop.fs.Path(dir,
-            s"compact-${f.getName.stripPrefix("part-")}")
-          if (!fs.rename(f, dst))
-            throw new java.io.IOException(s"compact rename failed: $f -> $dst")
-          added += s"$dirName/${dst.getName}"
-        }
-        fs.delete(tmp, true)
-        removed ++= files
-        done += 1; before += files.length; after += fresh.length
-      }
-      preCommitHook()
-      // the single commit point: fresh files become visible and old files
-      // stop being referenced ATOMICALLY; physical deletion is vacuum's
-      // job, bounded by the retention window
-      try {
-        IndexManifest.commitAt(spark, path, snap.version + 1,
-          snap.dataFiles.diff(removed.toSeq) ++ added.toSeq, snap.artifacts)
-        IndexManifest.vacuum(spark, path, retainVersions)
-        return (done, before, after)
-      } catch {
-        case e: IndexManifest.ConcurrentWriterException =>
-          attempt += 1
-          if (attempt >= 3) throw e
+      if (over.isEmpty) (Delta(), (0, 0, 0))
+      else {
+        val old = over.values.flatten.toSeq
+        val fresh = IndexManifest.stageAppend(
+          IndexManifest.readFiles(spark, path, old)
+            .repartition(col(partitionCol)),
+          path, partitionCol)
+        (Delta(fresh, old), (over.size, old.length, fresh.length))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023, "SemDeDup:
@@ -1081,8 +1014,8 @@ object Dedup {
     // df/N precedent at cluster granularity
     val st = IndexManifest.writeArtifact(spark, path, "stats",
       labels.agg(countDistinct(col("rep")).as("n_components")))
-    IndexManifest.commit(spark, path,
-      IndexManifest.listDataFiles(spark, path), Map(fw, st)): Unit
+    IndexManifest.commit(spark, path, Snapshot.Empty,
+      Delta(IndexManifest.listDataFiles(spark, path), artifacts = Map(fw, st))): Unit
   }
 
   /** The stored rep-forwarding table — bounded by the count of ever-
@@ -1150,7 +1083,7 @@ object Dedup {
     *      group canonical; superseded canonicals gain forwarding rows,
     *      and EXISTING forwarding entries whose target was superseded
     *      re-point (the table stays flat).
-    *   4. One [[IndexManifest.commitDelta]] publishes the appended rows
+    *   4. One [[IndexManifest.commit]] publishes the appended rows
     *      and the new forwarding version atomically.
     *
     * Idempotent: a full replay finds every endpoint stored, every merge
@@ -1173,7 +1106,7 @@ object Dedup {
       .distinct().localCheckpoint(true)
     val shards = touched.select(nodeShard(col("node_id")).as("shard"))
       .distinct().collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
-    IndexManifest.reconcileAppend(spark, path): Unit
+    val snap = IndexManifest.reconcileAppend(spark, path)
     val idx = IndexManifest.readData(spark, path)
       .where(col("shard").isin(shards: _*))
     val fw = readComponentsForward(spark, path).localCheckpoint(true)
@@ -1238,8 +1171,7 @@ object Dedup {
     // n_components never costs an index aggregate
     val e = resolved.select(col("cur")).distinct().count()
     val g = groups.select(col("g_canon")).distinct().count()
-    val hasStats = IndexManifest.load(spark, path)
-      .exists(_.artifacts.contains("stats"))
+    val hasStats = snap.artifacts.contains("stats")
     val stArts =
       if (g == e && hasStats) Map.empty[String, String]
       else {
@@ -1254,11 +1186,11 @@ object Dedup {
             .select(lit(before + g - e).as("n_components"))))
       }
     // an idempotent replay (no new nodes, unchanged forwarding, zero
-    // count delta) commits NOTHING — the commitAdded no-op skip, so
+    // count delta) commits NOTHING — the commit's no-op skip, so
     // replays stop minting byte-identical manifest versions into the
     // retention horizon
-    IndexManifest.commitAdded(spark, path, added, fwArts ++ stArts,
-      retainVersions = retainVersions): Unit
+    IndexManifest.commit(spark, path, snap,
+      Delta(added, artifacts = fwArts ++ stArts), retainVersions): Unit
   }
 
   /** COMPACT the cluster index — fold the rep-forwarding artifact into
@@ -1270,94 +1202,44 @@ object Dedup {
     * serve BROADCASTS stops growing with merge history — the missing
     * bound on a years-long stream of cluster merges.
     *
-    * Mechanics are [[compactIndex]]'s: reconcile → per-shard rewrite
-    * into a hidden `_compacting` temp → `fold-` renames (invisible to
-    * manifest-pinned readers) → one commit → vacuum to
-    * `retainVersions` (≥ 2 keeps the pre-fold snapshot serving
-    * time-travel — whose OLD forwarding version stays paired with the
-    * old rows via [[componentsIndexServeAt]]). Only AFFECTED shards
-    * rewrite (found by one streamed scan against the broadcast
-    * forwarding table); at 100 TB that is the set of shards merge
-    * history actually touched, each rewritten by its own bounded job,
-    * never a whole-index shuffle. `targetFilesPerShard` follows
-    * [[compactIndex]]'s discipline (default 1 — right for the ≤16-shard
-    * probe layout; production sizes it to the shard directory's bytes
-    * so no single rewrite task carries a whole hot shard). Like
-    * [[compactIndex]], the commit is a CAS with reload-and-re-fold on a
-    * lost claim — a racing gate append keeps priority and both land.
+    * Mechanics are [[compactIndex]]'s — one [[IndexManifest.rewrite]]:
+    * one pinned read of the AFFECTED shards (found by one streamed scan
+    * against the broadcast forwarding table), resolved and
+    * `repartition(shard)`ed into one [[IndexManifest.stageAppend]]
+    * write, one commit, vacuum to `retainVersions` (≥ 2 keeps the
+    * pre-fold snapshot serving time-travel — whose OLD forwarding
+    * version stays paired with the old rows via
+    * [[componentsIndexServeAt]]). A racing gate append wins the claim
+    * and the fold re-plans over the winner's rows AND artifacts — both
+    * land.
     *
     * Returns (shardsRewritten, filesFolded). */
   def compactComponentsIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String,
                              retainVersions: Int = 1,
-                             targetFilesPerShard: Int = 1,
-                             preCommitHook: () => Unit = () => ()): (Int, Long) = {
-    require(targetFilesPerShard >= 1, "targetFilesPerShard must be positive")
-    IndexManifest.reconcile(spark, path): Unit
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // retry-on-conflict CAS, the [[compactIndex]] discipline: the fold
-    // claims exactly snap.version + 1, so a racing gate append wins the
-    // claim and the fold reloads EVERYTHING — the appended rows AND the
-    // append's forwarding/stats artifacts — and re-folds (bounded
-    // retries, appends keep priority). Folding is recomputable; the
-    // lost attempt's fold- files are invisible orphans.
-    var attempt = 0
-    while (true) {
-      val snap = IndexManifest.load(spark, path).get
+                             preCommitHook: () => Unit = () => ()): (Int, Long) =
+    IndexManifest.rewrite(spark, path, retainVersions, preCommitHook) { snap =>
       val fw = readComponentsForward(spark, path).localCheckpoint(true)
-      if (fw.isEmpty) return (0, 0L)
-      val idx = IndexManifest.readData(spark, path)
-      val affected = idx.join(broadcast(fw), col("rep") === col("old_rep"))
-        .select(col("shard")).distinct().collect()
-        .map(r => r.getInt(0)).toSeq.sorted
-      val byDir = snap.dataFiles.groupBy(_.takeWhile(_ != '/'))
-        .filter { case (d, _) => affected.exists(s => d == s"shard=$s") }
-      var folded = 0L
-      val removed = scala.collection.mutable.ArrayBuffer.empty[String]
-      val added = scala.collection.mutable.ArrayBuffer.empty[String]
-      byDir.toSeq.sortBy(_._1).foreach { case (dirName, files) =>
-        val dir = new org.apache.hadoop.fs.Path(root, dirName)
-        val tmp = new org.apache.hadoop.fs.Path(dir, "_compacting")
-        fs.delete(tmp, true): Unit
-        val resolvedRows = spark.read.parquet(files.map(f =>
-            new org.apache.hadoop.fs.Path(root, f).toString): _*)
-          .join(broadcast(fw), col("rep") === col("old_rep"), "left")
-          .select(col("node_id"),
-            coalesce(col("canonical"), col("rep")).as("rep"))
-        resolvedRows.coalesce(targetFilesPerShard)
-          .write.mode("overwrite").parquet(tmp.toString)
-        fs.listStatus(tmp).filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.foreach { f =>
-          val dst = new org.apache.hadoop.fs.Path(dir,
-            s"fold-${f.getPath.getName.stripPrefix("part-")}")
-          if (!fs.rename(f.getPath, dst))
-            throw new java.io.IOException(
-              s"fold rename failed: ${f.getPath} -> $dst")
-          added += s"$dirName/${dst.getName}"
-        }
-        fs.delete(tmp, true): Unit
-        removed ++= files
-        folded += files.length
-      }
-      val emptyFw = IndexManifest.writeArtifact(spark, path, "forward",
-        spark.range(0).select(col("id").as("old_rep"),
-          col("id").as("canonical")))
-      preCommitHook()
-      try {
-        IndexManifest.commitAt(spark, path, snap.version + 1,
-          snap.dataFiles.diff(removed.toSeq) ++ added.toSeq,
-          snap.artifacts + emptyFw)
-        IndexManifest.vacuum(spark, path, retainVersions): Unit
-        return (byDir.size, folded)
-      } catch {
-        case e: IndexManifest.ConcurrentWriterException =>
-          attempt += 1
-          if (attempt >= 3) throw e
+      if (fw.isEmpty) (Delta(), (0, 0L))
+      else {
+        val affected = IndexManifest.readData(spark, path)
+          .join(broadcast(fw), col("rep") === col("old_rep"))
+          .select(col("shard")).distinct().collect()
+          .map(r => s"shard=${r.getInt(0)}").toSet
+        val old = snap.dataFiles.filter(f => affected(f.takeWhile(_ != '/')))
+        val fresh =
+          if (old.isEmpty) Seq.empty
+          else IndexManifest.stageAppend(
+            IndexManifest.readFiles(spark, path, old)
+              .join(broadcast(fw), col("rep") === col("old_rep"), "left")
+              .select(col("node_id"),
+                coalesce(col("canonical"), col("rep")).as("rep"), col("shard"))
+              .repartition(col("shard")),
+            path, "shard")
+        val emptyFw = IndexManifest.writeArtifact(spark, path, "forward",
+          spark.range(0).select(col("id").as("old_rep"),
+            col("id").as("canonical")))
+        (Delta(fresh, old, Map(emptyFw)), (affected.size, old.length.toLong))
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 }

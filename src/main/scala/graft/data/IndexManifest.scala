@@ -16,45 +16,51 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   shard=0/part-....parquet      data files (any single-level
   *   cell=7/part-....parquet       partition layout)
   *   _manifests/m000000000001      manifest versions (text, see below)
+  *   _segments/seg-...             append segments (file lists)
   *   _art/name/v000001/            artifact versions (bounded model
   *                                 tables: centroids, df, stats, ...)
   *
-  * A manifest lists relative data-file paths (`D <path>`) and the
-  * current version directory of each named artifact (`A <name> <dir>`).
-  * The CURRENT manifest is simply the highest version present — commits
-  * create a new file under a temp name and `rename` it into place
-  * (rename-into-fresh-name is the atomic primitive on HDFS and local
-  * filesystems alike), so a manifest either exists completely or not at
-  * all; there is no pointer file to torn-write.
+  * A manifest lists relative data-file paths (`D <path>`), references
+  * to segment files (`S <segment>`) and the current version directory
+  * of each named artifact (`A <name> <dir>`). The CURRENT manifest is
+  * simply the highest version present — commits create a new file under
+  * a temp name and link/rename it into place (rename-into-fresh-name is
+  * the atomic primitive on HDFS and local filesystems alike), so a
+  * manifest either exists completely or not at all; there is no
+  * pointer file to torn-write.
   *
-  * The maintenance protocol every mutator follows:
+  * Every mutation is a [[Delta]] against the [[Snapshot]] it planned
+  * from — files added, files (or artifact versions) removed, artifact
+  * pointers set — published by the ONE [[commit]]:
   *
-  *   1. [[reconcile]]: delete any data file or artifact version the
-  *      current manifest does not reference — the debris of a crashed
-  *      mutation (its files were never committed, so no reader ever saw
-  *      them). Adopts a directory-listing manifest for pre-manifest
-  *      index dirs (one-time migration).
+  *   1. Repair: [[reconcileAppend]] (appends) or [[reconcile]] (the
+  *      exclusive window of a superseding mutation) deletes crash
+  *      debris and adopts a directory listing for pre-manifest roots.
   *   2. Read the pre-state through [[readData]]/[[readArtifact]]
   *      (pinned to the current manifest).
-  *   3. Write new data files (plain `mode("append")` into the partition
-  *      layout) and/or new artifact versions ([[writeArtifact]] — a NEW
-  *      directory per version, never an in-place overwrite, so no
-  *      `refreshByPath` ever invalidates a reader's plan).
-  *   4. [[commitListing]]/[[commit]]: publish the post-state.
+  *   3. Write new data files through [[stageAppend]] (the added set is
+  *      known by construction) and/or new artifact versions
+  *      ([[writeArtifact]] — a NEW directory per version, never an
+  *      in-place overwrite, so no `refreshByPath` ever invalidates a
+  *      reader's plan).
+  *   4. [[commit]] the delta, which closes with
+  *      [[vacuum]]`(retainVersions)`.
+  *
+  * Superseding mutations (compaction, fold, retrain, artifact rebuild)
+  * run steps 1–4 as ONE [[rewrite]] transaction: the caller supplies
+  * only the plan `Snapshot => Delta`; reconcile, load, commit, vacuum
+  * and the bounded recompute after a lost claim live here.
   *
   * A crash anywhere before step 4 leaves the index EXACTLY at the
   * pre-state for every reader (the new files are invisible orphans);
   * a crash after step 4 leaves it exactly at the post-state (any
-  * not-yet-deleted superseded files are orphans). This replaces the
-  * round-11 two-marker compaction protocol — and extends the same
-  * guarantee to appends and artifact updates, which previously relied
-  * on write ordering alone (a crash between a postings append and its
-  * df/N artifact rewrite left the artifacts silently stale; now the
-  * two publish in one commit).
+  * not-yet-deleted superseded files are orphans). A postings append and
+  * its df/N artifact rewrite publish in the same commit, so they can
+  * never be observed apart.
   *
-  * Concurrency contract: ONE writer in the maintainer's window; any
-  * number of readers at any time. [[commit]] additionally ENFORCES the
-  * window at the version claim — each version filename is claimed
+  * Concurrency contract: ONE superseding writer in the maintainer's
+  * window; any number of readers, and any number of appenders whose
+  * SOURCE batches are disjoint. Each version filename is claimed
   * exactly once ([[ConcurrentWriterException]] for the loser). The
   * claim is EXACT where the filesystem gives an atomic exactly-once
   * primitive: local files claim via hard-link creation (`link(2)`
@@ -63,81 +69,68 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * destination. On stores whose rename silently replaces (S3A without
   * a committer) the pre-check downgrades to best-effort detection —
   * deploy a manifest lock service there, as every table format does.
-  * APPEND-shaped commits go one further ([[commitDelta]]): a loser
-  * whose delta is provably compatible with the winner's commit —
-  * disjoint added files, untouched artifact names — REBASES onto the
-  * new snapshot and retries instead of failing, so two gates (or a
-  * gate plus a batch backfill) appending disjoint batches to one index
-  * can coexist; compactions and retrains keep the loud failure.
+  * What a lost claim does depends on the delta's SHAPE (see
+  * [[commit]]): a delta that removes nothing rebases onto the winner
+  * when the two are provably compatible; a delta that removes files
+  * fails, and [[rewrite]] recomputes it from the winner's snapshot.
   *
   * RETENTION is explicit, table-format style: a superseded file stays
   * on disk — and its manifest stays readable ([[loadAt]]/[[readDataAt]],
   * the time-travel read) — until [[vacuum]] prunes versions beyond a
   * caller-chosen window. A reader pinned to any RETAINED manifest never
-  * races physical deletion, closing the execute-vs-delete hole the
-  * zero-retention posture left open; [[reconcile]] (crash repair)
-  * deletes only files referenced by NO retained manifest. Every
-  * RECURRING mutation ends with `vacuum(retainVersions)`: superseding
-  * mutations ([[graft.data.Dedup.compactIndex]],
-  * [[graft.data.Similarity.retrainIvfIndex]]) default the knob to 1
-  * (the immediate-delete single-machine economy), appends
-  * ([[commitDelta]]) default it to 2 (the pre-append version stays
-  * pinned — and pruning an append chain deletes zero data files, see
-  * [[commitDelta]]); production sets it to cover the longest-running
-  * serve. One-time mutations (builds, the manual
-  * [[graft.data.Indexing.rebuildPostingsArtifacts]] repair) retain
-  * their predecessor until the next recurring mutation's vacuum slides
-  * the window past it. Bounded retention is itself a scale
-  * requirement, not just a courtesy: [[reconcile]] parses every
-  * retained manifest at the start of every mutation, so an append-only
-  * gate that never vacuumed would pay O(stream age) manifest parses
-  * per batch.
+  * races physical deletion; [[reconcile]] deletes only files referenced
+  * by NO retained manifest. Every commit ends with
+  * `vacuum(retainVersions)`: appends default the window to 2 (the
+  * pre-append version stays pinned, and pruning an append chain deletes
+  * zero data files — append manifests reference supersets), rewrites
+  * to 1 (the immediate-delete single-machine economy); production sets
+  * it to cover the longest-running serve. Bounded retention is itself a
+  * scale requirement: [[reconcile]] parses every retained manifest, so
+  * a gate that never vacuumed would pay O(stream age) manifest parses.
   *
-  * Scale: append commits are O(batch), not O(index files) — an
-  * append-shaped commit ([[commitAdded]]) writes ONE immutable SEGMENT
-  * file under `_segments/` listing only its added files, and the
-  * manifest lists segment REFERENCES (`S <segment>`, inherited from the
-  * base snapshot plus the new one) alongside any inline `D` lines; a
-  * high-frequency ingest gate therefore writes manifest text
-  * proportional to its batch, never to the index (the table-format
-  * manifest-list design). [[load]] folds the referenced segments back
-  * into the flat file list every consumer sees. Segment-reference
-  * count is itself bounded: once it passes `maxSegments` the append
-  * CONSOLIDATES — one fresh segment holding the full resolved list,
-  * O(index files) once, amortized O(files / maxSegments) per append —
-  * and superseding mutations (compaction, retrain, rebuild) reset it
-  * to zero by committing their full inline listing (the manifest IS
-  * the fresh segment). Segments are immutable once written and named
-  * uniquely, so they need no claim: an uncommitted segment (crashed
-  * commit) is an invisible orphan the next full [[reconcile]] sweeps,
-  * and [[vacuum]] deletes a segment once no retained manifest
-  * references it.
+  * SEGMENTS keep append commits O(batch), not O(index files): an
+  * append writes ONE immutable segment file under `_segments/` listing
+  * only its added files, and the manifest lists segment references
+  * inherited from the base plus the new one — a high-frequency ingest
+  * gate writes manifest text proportional to its batch (the
+  * table-format manifest-list design). [[load]] folds the referenced
+  * segments back into the flat file list every consumer sees. Inline
+  * `D` lines (a first commit's or a superseding commit's full listing)
+  * adopt into a segment once, on the next append; once references
+  * pass `maxSegments` an append CONSOLIDATES the inherited ones into
+  * one fresh segment (O(index files) once, amortized
+  * O(files / maxSegments) per append). Segments are immutable and
+  * uniquely named, so they need no claim: an uncommitted one is an
+  * invisible orphan the orphan sweep removes, and [[vacuum]] deletes a
+  * segment once no retained manifest references it.
   */
 object IndexManifest {
 
   private val ManifestDir = "_manifests"
   private val SegmentDir = "_segments"
   private val ArtRoot = "_art"
+  private val StagingDir = "_staging"
 
-  /** Default horizon for the append-path debris sweeps
-    * ([[reconcileAppend]]): staging directories and manifest temps
-    * YOUNGER than this may belong to a live concurrent appender and are
-    * left alone; older ones are certainly a crashed writer's. */
+  /** Age horizon of the debris sweeps that may race a live appender:
+    * staging directories, manifest temps, segments (and, on the append
+    * path, every orphan) YOUNGER than this may belong to a live
+    * concurrent writer and are left alone; older ones are certainly a
+    * crashed writer's. */
   val DefaultSweepAgeMs: Long = 24L * 3600 * 1000
 
-  /** The single-writer window was violated: another writer claimed the
-    * manifest version this commit computed. Appends catch this inside
-    * [[commitDelta]] and rebase; every other mutation fails loudly. */
+  /** Another writer claimed the manifest version this commit computed.
+    * Append-shaped commits rebase past it inside [[commit]] when they
+    * can; superseding ones surface it, and [[rewrite]] recomputes. */
   final class ConcurrentWriterException(msg: String)
     extends java.io.IOException(msg)
 
   /** A commit's referenced segment file vanished before the claim —
     * either this writer's own not-yet-referenced segment was swept from
-    * under it (self-healed inside [[commitAdded]]: the segment is
-    * rewritten and the commit retried), or an INHERITED segment a
-    * retained manifest references is gone, which is genuine index
-    * corruption and stays loud. Publishing without this check would
-    * poison every later [[load]]. */
+    * under it (self-healed inside [[commit]]: the segment is rewritten
+    * and the commit retried), or an INHERITED segment a retained
+    * manifest references is gone, which is genuine index corruption and
+    * stays loud. Publishing without this check would poison every later
+    * [[load]]. */
   final class SegmentsMissingException(val missing: Seq[String])
     extends java.io.IOException(
       s"referenced segment files are missing: ${missing.mkString(", ")}")
@@ -167,6 +160,22 @@ object IndexManifest {
                             segments: Seq[String] = Seq.empty,
                             inline: Seq[String] = Seq.empty)
 
+  object Snapshot {
+    /** The state before any manifest exists — the base of a build's
+      * (or an adoption's) first commit. */
+    val Empty: Snapshot = Snapshot(0L, Seq.empty, Map.empty)
+  }
+
+  /** One mutation's effect on the snapshot it planned from: data files
+    * it wrote, data files or artifact version directories the new
+    * snapshot no longer references, and artifact pointers it sets (the
+    * base's other pointers carry over). */
+  final case class Delta(added: Seq[String] = Seq.empty,
+                         removed: Seq[String] = Seq.empty,
+                         artifacts: Map[String, String] = Map.empty) {
+    def isEmpty: Boolean = added.isEmpty && removed.isEmpty && artifacts.isEmpty
+  }
+
   private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -184,36 +193,21 @@ object IndexManifest {
     * directories (`_`/`.` prefixes) never count. */
   def listDataFiles(spark: SparkSession, path: String): Seq[String] = {
     val (fs, root) = fsOf(spark, path)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
+    listData(fs, root)
+  }
+
+  private def listData(fs: FileSystem, root: Path): Seq[String] =
+    listIfExists(fs, root)
       .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
         !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
-      .flatMap(dir => listPartitionDir(fs, dir.getPath)).sorted
-  }
-
-  /** Data files under exactly the named partition directories
-    * (`key=value` names, root-relative) — the TOUCHED-SHARDS listing:
-    * an append that routed its batch to d directories pays O(d)
-    * filesystem calls here, never an O(index)-directory walk. A named
-    * directory that does not exist yet (first write into a shard)
-    * contributes nothing. */
-  def listDataFilesIn(spark: SparkSession, path: String,
-                      partitionDirs: Seq[String]): Seq[String] = {
-    val (fs, root) = fsOf(spark, path)
-    partitionDirs.distinct.sorted.flatMap { d =>
-      val dir = new Path(root, d)
-      if (fs.exists(dir)) listPartitionDir(fs, dir) else Seq.empty
-    }
-  }
-
-  private def listPartitionDir(fs: FileSystem, dir: Path): Seq[String] = {
-    partitionDirListings.incrementAndGet(): Unit
-    fs.listStatus(dir).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => s"${dir.getName}/${st.getPath.getName}")
-  }
+      .flatMap { dir =>
+        partitionDirListings.incrementAndGet(): Unit
+        fs.listStatus(dir.getPath).toSeq.filter { st =>
+          val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.map(st => s"${dir.getPath.getName}/${st.getPath.getName}")
+      }.sorted
 
   private def manifestFiles(fs: FileSystem, root: Path): Seq[(Long, Path)] = {
     val dir = new Path(root, ManifestDir)
@@ -225,23 +219,24 @@ object IndexManifest {
 
   /** Pruned-version HIGH-WATER MARK marker files. [[vacuum]] deleting a
     * pruned manifest FREES its version NAME on the filesystem, so the
-    * EEXIST-based claim in [[commitAtParts]] alone cannot stop a
-    * sufficiently stale writer (descheduled since before two successor
-    * commits and a vacuum) from "winning" a claim at a long-dead
-    * version — publishing an invisible zombie manifest whose batch is
-    * silently lost (reproduced by [[graft.SoakProbe]]: commitAdded
-    * returned v2 while the head was v4, because the folder's pruned v2
-    * had freed the name). The mark is the claim floor: vacuum advances
-    * it BEFORE deleting the manifests it pruned, and every claim
-    * verifies `next > mark` before AND after its link — the post-link
-    * check closes the read-then-link window (if the name was recycled,
-    * the mark was already >= next when the link landed, by vacuum's
-    * ordering). Monotone by construction: one empty marker file whose
-    * NAME carries the value, created exclusively, never overwritten;
-    * superseded markers are deleted after the higher one exists, so
-    * racing vacuums converge on the max without read-modify-write.
-    * Dot-prefixed (invisible to [[versionOf]] and every reader) and not
-    * `.tmp`-suffixed (invisible to the crashed-temp sweeps). */
+    * EEXIST-based claim in [[claim]] alone cannot stop a sufficiently
+    * stale writer (descheduled since before two successor commits and a
+    * vacuum) from "winning" a claim at a long-dead version — publishing
+    * an invisible zombie manifest whose batch is silently lost (pinned
+    * by IndexManifestSpec's "stale claim at a vacuumed version name":
+    * the append returned v2 while the head was v4, because the pruned
+    * v2 had freed the name). The mark is the claim floor: vacuum
+    * advances it BEFORE deleting the manifests it pruned, and every
+    * claim verifies `next > mark` before AND after its link — the
+    * post-link check closes the read-then-link window (if the name was
+    * recycled, the mark was already >= next when the link landed, by
+    * vacuum's ordering). Monotone by construction: one empty marker
+    * file whose NAME carries the value, created exclusively, never
+    * overwritten; superseded markers are deleted after the higher one
+    * exists, so racing vacuums converge on the max without
+    * read-modify-write. Dot-prefixed (invisible to [[versionOf]] and
+    * every reader) and not `.tmp`-suffixed (invisible to the
+    * crashed-temp sweeps). */
   private val HwmPrefix = ".hwm-"
 
   private def hwmMarkers(fs: FileSystem, root: Path): Seq[(Long, Path)] = {
@@ -331,7 +326,7 @@ object IndexManifest {
   /** Write one immutable SEGMENT file (a bare list of root-relative
     * data-file paths). Uniquely named and unreferenced until a manifest
     * commit lists it, so it needs no claim and no temp: a crashed
-    * commit's segment is an invisible orphan for [[reconcile]]. */
+    * commit's segment is an invisible orphan for the orphan sweep. */
   private def writeSegment(fs: FileSystem, root: Path,
                            files: Seq[String]): String = {
     val dir = new Path(root, SegmentDir)
@@ -384,44 +379,165 @@ object IndexManifest {
       .flatMap { case (v, p) => tryParse(fs, root, v, p) }
   }
 
-  /** Publish a snapshot as the next manifest version: write to a
-    * dot-prefixed temp name, then rename into place — the atomic
-    * commit point of every mutation. Single-writer contract, ENFORCED
-    * at the claim: the destination version name must not exist (a
-    * local-filesystem rename would silently replace it — the
-    * lost-update a racing second writer must not be able to cause), so
-    * a violated writer window fails loudly here instead of corrupting
-    * the version history. */
-  def commit(spark: SparkSession, path: String, dataFiles: Seq[String],
-             artifacts: Map[String, String]): Long =
-    commitAt(spark, path,
-      load(spark, path).map(_.version + 1).getOrElse(1L),
-      dataFiles, artifacts)
+  /** Segment-reference bound before an append consolidates: commit
+    * bytes per append are O(batch + maxSegments refs), and every
+    * maxSegments-th append pays one O(index files) consolidation —
+    * amortized O(files / maxSegments) per commit. */
+  val DefaultMaxSegments: Int = 64
 
-  /** The claim itself, at an explicit version — the seam the
-    * concurrent-writer spec drives: a racing writer that computed the
-    * same `next` from a stale load must fail here, never silently
-    * replace the other's manifest. */
-  private[graft] def commitAt(spark: SparkSession, path: String, next: Long,
-                              dataFiles: Seq[String],
-                              artifacts: Map[String, String]): Long =
-    commitAtParts(spark, path, next, dataFiles, Seq.empty, artifacts)
-
-  /** [[commitAt]] in manifest-internal form: `inline` files serialize
-    * as `D` lines, `segments` as `S` references — the append path's
-    * O(batch) commit writes zero inline lines and one new segment
-    * reference on top of the inherited ones. */
-  private def commitAtParts(spark: SparkSession, path: String, next: Long,
-                            inline: Seq[String], segments: Seq[String],
-                            artifacts: Map[String, String]): Long = {
+  /** Publish `delta` on top of `base` as the next manifest version, then
+    * [[vacuum]] to `retainVersions`. The ONE commit every mutation goes
+    * through; what happens when another writer claimed `base.version + 1`
+    * first depends on the delta's shape alone:
+    *
+    *   - SUPERSEDING (`removed` non-empty — compaction, fold, retrain,
+    *     full relisting): the new snapshot is the base's files minus
+    *     `removed` plus `added`, listed inline. It claims exactly
+    *     `base.version + 1`; a lost claim throws
+    *     [[ConcurrentWriterException]] (a stale listing must never
+    *     silently drop a winner's files — [[rewrite]] recomputes).
+    *   - APPEND-SHAPED (nothing removed): the batch's files serialize as
+    *     ONE new segment on top of the inherited references (a first
+    *     commit at an empty root lists them inline instead). A lost
+    *     claim REBASES onto the winner's snapshot and retries — at most
+    *     3 claims — if the winner's added files are disjoint from this
+    *     batch's and the winner left this batch's artifact names
+    *     untouched; otherwise it throws ("disjoint" / "artifact").
+    *
+    * LANDING RULE, decided: after a lost claim the writer recognises
+    * its OWN already-landed batch only by the writer-unique segment it
+    * minted for this call being referenced from the head (a post-link
+    * freshness failure can follow a publish that successors already
+    * built on). An artifact-only delta has no segment; it counts as
+    * landed when the head carries every pointer it set. File
+    * containment is NOT proof of landing — a head that merely lists
+    * this batch's file names (a foreign commit referencing them) is a
+    * non-disjoint winner and is refused.
+    *
+    * A delta that changes nothing on an existing manifest commits
+    * NOTHING and returns the base version — idempotent replays (the
+    * streaming gates' at-least-once deliveries) stop minting
+    * byte-identical manifest versions.
+    *
+    * CONCURRENT-APPENDER CONTRACT: the rebase check is FILE-level (names
+    * are writer-unique by construction), not row-level — two appenders
+    * handed OVERLAPPING source batches both pass it, because each
+    * writer's novelty screen ran against the pre-conflict snapshot.
+    * Concurrent appenders must therefore partition the SOURCE
+    * disjointly (the deployment posture of every optimistic table
+    * format); redelivery of a batch to the SAME logical writer stays
+    * safe — the replay's novelty screen sees the first delivery's
+    * commit and packs nothing. Concurrent appenders should also share
+    * one `retainVersions`: racing vacuums converge on the stricter one.
+    *
+    * `preCommitHook` is the concurrency test seam: it runs after the
+    * delta is written and before each version claim, so a spec can
+    * interleave a competing writer into exactly the window the rebase
+    * protects. */
+  def commit(spark: SparkSession, path: String, base: Snapshot, delta: Delta,
+             retainVersions: Int = 2,
+             preCommitHook: () => Unit = () => (),
+             maxSegments: Int = DefaultMaxSegments): Long = {
+    require(retainVersions >= 1 && maxSegments >= 1,
+      s"retainVersions and maxSegments must be positive, got " +
+        s"$retainVersions, $maxSegments")
+    if (base.version > 0 && delta.isEmpty) return base.version
     val (fs, root) = fsOf(spark, path)
+    val removed = delta.removed.toSet
+    val superseding = removed.nonEmpty
+    // the batch's own segment, written ONCE (reused across rebase
+    // retries — its content is this writer's delta, independent of the
+    // base snapshot; rewritten only if a racing sweep took it)
+    var mine = Option.empty[String]
+    var cur = base
+    var claims = 0
+    var segLost = 0
+    var landed = -1L
+    while (landed < 0) {
+      try {
+        val inline = superseding || cur.version == 0
+        if (!inline && mine.isEmpty && delta.added.nonEmpty)
+          mine = Some(writeSegment(fs, root, delta.added))
+        preCommitHook()
+        val arts = cur.artifacts.filterNot { case (_, d) => removed(d) } ++
+          delta.artifacts
+        landed =
+          if (inline)
+            claim(fs, root, path, cur.version + 1,
+              cur.dataFiles.filterNot(removed) ++ delta.added, Seq.empty, arts)
+          else {
+            // inherit the base's segment references verbatim; inline `D`
+            // lines adopt into a segment ONCE, and past maxSegments the
+            // inherited references consolidate into one fresh segment —
+            // either way this batch's own segment stays its own reference
+            val refs = cur.segments.length +
+              (if (cur.inline.nonEmpty) 1 else 0) + mine.size
+            val inherited =
+              if (refs > maxSegments) Seq(writeSegment(fs, root, cur.dataFiles))
+              else cur.segments ++ (if (cur.inline.nonEmpty)
+                                      Seq(writeSegment(fs, root, cur.inline))
+                                    else Seq.empty)
+            claim(fs, root, path, cur.version + 1, Seq.empty,
+              inherited ++ mine, arts)
+          }
+      } catch {
+        case e: SegmentsMissingException =>
+          // a sweep took a segment this claim references. Our OWN
+          // segments are recoverable — rewrite and retry. A lost
+          // INHERITED segment means a retained manifest's reference is
+          // dangling: genuine corruption, stays loud.
+          segLost += 1
+          if (segLost >= 3 || e.missing.exists(cur.segments.toSet)) throw e
+          if (mine.exists(e.missing.toSet))
+            mine = Some(writeSegment(fs, root, delta.added))
+        case e: ConcurrentWriterException if !superseding =>
+          claims += 1
+          val now = load(spark, path).getOrElse(throw e)
+          val ours = mine match {
+            case Some(seg) => now.segments.contains(seg)
+            case None => delta.added.isEmpty && delta.artifacts.nonEmpty &&
+              delta.artifacts.forall { case (n, d) =>
+                now.artifacts.get(n).contains(d) }
+          }
+          if (ours) landed = now.version
+          else {
+            if (claims >= 3) throw e
+            val winnerAdded = now.dataFiles.toSet -- base.dataFiles
+            if (delta.added.exists(winnerAdded))
+              throw new ConcurrentWriterException(
+                "append rebase refused: the winning commit references " +
+                  "files this append wrote — the deltas are not disjoint")
+            if (delta.artifacts.keys.exists(n =>
+                now.artifacts.get(n) != base.artifacts.get(n)))
+              throw new ConcurrentWriterException(
+                "append rebase refused: the winning commit changed an " +
+                  "artifact this append also updates " +
+                  s"(${delta.artifacts.keySet.mkString(", ")})")
+            cur = now
+          }
+      }
+    }
+    vacuum(spark, path, retainVersions): Unit
+    landed
+  }
+
+  /** The version claim: write the manifest body to a writer-unique temp
+    * name, then link/rename it to `m<next>` — the atomic commit point of
+    * every mutation. `inline` files serialize as `D` lines, `segments`
+    * as `S` references. The destination name must not exist (a
+    * local-filesystem rename would silently replace it — the lost
+    * update a racing second writer must not be able to cause), so a
+    * violated claim fails loudly here. */
+  private def claim(fs: FileSystem, root: Path, path: String, next: Long,
+                    inline: Seq[String], segments: Seq[String],
+                    artifacts: Map[String, String]): Long = {
     // referenced segments are verified PRESENT immediately before the
     // claim: publishing a manifest whose segment is already gone (this
     // writer's own segment swept by a reconcile that believed its
     // window exclusive) would poison every later load. The sweep is
     // age-gated so this should never fire in a healthy deployment —
     // when it does (clock skew, operator error), the failure is loud
-    // here and [[commitAdded]] self-heals its own lost segment.
+    // here and [[commit]] self-heals its own lost segment.
     val gone = segments.filterNot(s => fs.exists(new Path(root, s)))
     if (gone.nonEmpty) throw new SegmentsMissingException(gone)
     // claim floor (cheap early reject; the authoritative check is the
@@ -501,349 +617,173 @@ object IndexManifest {
     next
   }
 
-  /** All retained manifest snapshots, ascending — bounded by the
-    * retention window once appends vacuum ([[commitDelta]]). */
-  private def retainedSnapshots(spark: SparkSession,
-                                path: String): Seq[Snapshot] = {
-    val (fs, root) = fsOf(spark, path)
-    manifestFiles(fs, root).flatMap { case (v, p) => tryParse(fs, root, v, p) }
-  }
-
-  /** The files an append-shaped mutation just wrote: everything listed
-    * under the touched partition directories (all of them when `None`)
-    * that NO retained manifest references. Retained-but-superseded
-    * files (an earlier compaction's time-travel horizon) are excluded —
-    * a raw listing would resurrect them — and so are the current
-    * snapshot's own files; what remains is exactly this mutation's
-    * output, because [[reconcile]] deleted any crashed mutation's
-    * orphans before the write began. */
-  def addedDataFiles(spark: SparkSession, path: String,
-                     touchedDirs: Option[Seq[String]] = None): Seq[String] = {
-    val listed = touchedDirs match {
-      case Some(dirs) => listDataFilesIn(spark, path, dirs)
-      case None => listDataFiles(spark, path)
-    }
-    val retained = retainedSnapshots(spark, path)
-      .flatMap(_.dataFiles).toSet
-    listed.filterNot(retained)
-  }
-
-  /** [[commit]] of an APPEND-shaped mutation under retention: the next
-    * snapshot is the current snapshot's files plus exactly the files
-    * the mutation wrote ([[addedDataFiles]] over the partition
-    * directories the batch routed to — O(touched dirs) filesystem
-    * calls, never a full index walk). Every append commits through
-    * this delta form, which also closes the append path's three
-    * lifecycle obligations in one place:
-    *
-    *   - NO-OP SKIP: a replayed batch that wrote no files and changed
-    *     no artifact commits NOTHING — idempotent replays (the
-    *     streaming gates' at-least-once deliveries) stop minting
-    *     byte-identical manifest versions.
-    *   - RETENTION: the commit ends with [[vacuum]]`(retainVersions)`,
-    *     so a long-lived ingest gate retains a bounded horizon instead
-    *     of one manifest per micro-batch forever (reconcile parses
-    *     every retained manifest per mutation — unbounded retention
-    *     made maintenance cost grow with stream age). Safe by the
-    *     SUPERSET property: an append manifest references every file
-    *     its predecessor did, so pruning append-chain history deletes
-    *     zero data files — only manifest text and superseded artifact
-    *     versions past the window.
-    *   - REBASE ON CONFLICT: a lost version claim
-    *     ([[ConcurrentWriterException]]) reloads the winner's
-    *     snapshot, verifies compatibility (added files disjoint from
-    *     the winner's, artifact names untouched by the winner), and
-    *     retries on top of it — two appenders with disjoint batches
-    *     both land; a genuine conflict (two postings appends racing
-    *     the same dictionary) stays loud.
-    *
-    * CONCURRENT-APPENDER CONTRACT: the rebase check is FILE-level
-    * (names are writer-unique by construction), not row-level — two
-    * appenders handed OVERLAPPING source batches (an at-least-once
-    * feed fanned out to two writers) both pass it, because each
-    * writer's novelty screen ran against the PRE-conflict snapshot,
-    * and the index would silently hold the overlap twice. Concurrent
-    * appenders must therefore partition the SOURCE disjointly (the
-    * deployment posture of every optimistic table format); redelivery
-    * of a batch to the SAME logical writer stays safe — the replay's
-    * novelty screen sees the first delivery's commit and packs
-    * nothing. Concurrent appenders should also share one
-    * `retainVersions`: racing vacuums with different horizons converge
-    * on the stricter one (see the tolerant walks in [[vacuum]]). */
-  def commitDelta(spark: SparkSession, path: String,
-                  artifacts: Map[String, String] = Map.empty,
-                  retainVersions: Int = 2,
-                  touchedDirs: Option[Seq[String]] = None,
-                  preCommitHook: () => Unit = () => (),
-                  maxSegments: Int = DefaultMaxSegments): Long =
-    commitAdded(spark, path, addedDataFiles(spark, path, touchedDirs),
-      artifacts, retainVersions, preCommitHook, maxSegments)
-
-  /** Segment-reference bound before an append consolidates: commit
-    * bytes per append are O(batch + maxSegments refs), and every
-    * maxSegments-th append pays one O(index files) consolidation —
-    * amortized O(files / maxSegments) per commit. */
-  val DefaultMaxSegments: Int = 64
-
-  /** The [[commitDelta]] core for callers that already computed the
-    * added-file set (e.g. to derive artifact increments from the
-    * read-back of exactly the files that landed). `preCommitHook` is
-    * the concurrency test seam (the
-    * [[graft.data.Similarity.retrainIvfIndex]] precedent): it runs
-    * after the base snapshot loads and before the version claim, so a
-    * spec can interleave a competing writer's commit into exactly the
-    * window the rebase protects. */
-  def commitAdded(spark: SparkSession, path: String, added: Seq[String],
-                  artifacts: Map[String, String] = Map.empty,
-                  retainVersions: Int = 2,
-                  preCommitHook: () => Unit = () => (),
-                  maxSegments: Int = DefaultMaxSegments): Long = {
-    require(maxSegments >= 1, s"maxSegments must be positive, got $maxSegments")
-    val base = load(spark, path).getOrElse(Snapshot(0L, Seq.empty, Map.empty))
-    if (added.isEmpty && artifacts.isEmpty) return base.version // no-op replay
-    val (fs, root) = fsOf(spark, path)
-    // the batch's own segment, written ONCE (reused across rebase
-    // retries — its content is this writer's delta, independent of the
-    // base snapshot; rewritten only if a racing sweep took it)
-    var newSeg =
-      if (added.nonEmpty) Seq(writeSegment(fs, root, added)) else Seq.empty
-    var cur = base
-    var attempt = 0
-    var segLost = 0
+  /** The SUPERSEDING-mutation transaction — compaction, fold, retrain,
+    * artifact rebuild — run once, here: the exclusive-window
+    * [[reconcile]], then load the current snapshot, `plan` the delta
+    * against it (writing new files through [[stageAppend]] and new
+    * artifact versions), [[commit]] and vacuum to `retainVersions`.
+    * `plan` also returns the caller's result. A claim lost to a racing
+    * writer (a gate's append landing mid-rewrite) RELOADS the winner's
+    * snapshot and re-plans — at most 3 recomputes, so appends keep
+    * priority and operators can run rewrites without pausing gates; a
+    * lost attempt's files become invisible orphans for the next sweep.
+    * An empty delta commits nothing. */
+  def rewrite[A](spark: SparkSession, path: String, retainVersions: Int = 1,
+                 preCommitHook: () => Unit = () => ())(
+                 plan: Snapshot => (Delta, A)): A = {
+    reconcile(spark, path): Unit
+    var recomputes = 0
     while (true) {
+      val base = load(spark, path).get
+      val (delta, result) = plan(base)
       try {
-        // the concurrency test seam, inside the loop so it sits between
-        // this writer's segment write and its claim (re-runs on retry;
-        // spec hooks are one-shot-guarded or idempotent)
-        preCommitHook()
-        // inherit the base's segment references verbatim; inline `D`
-        // lines (a build's or compaction's full listing) adopt into a
-        // segment ONCE so no append ever re-serializes them — after
-        // that, commit bytes are O(batch) + one reference line per
-        // retained segment
-        val refs = cur.segments.length +
-          (if (cur.inline.nonEmpty) 1 else 0) + newSeg.length
-        val v =
-          if (refs > maxSegments) {
-            // consolidation: fold the whole resolved list into ONE
-            // fresh segment — the amortized bound on reference count
-            val c = commitAtParts(spark, path, cur.version + 1, Seq.empty,
-              Seq(writeSegment(fs, root, cur.dataFiles ++ added)),
-              cur.artifacts ++ artifacts)
-            // the batch's own segment went unreferenced by the
-            // consolidated manifest — drop it now instead of leaving
-            // an orphan per consolidation for reconcile
-            newSeg.foreach(s =>
-              deleteTolerant(fs, new Path(root, s), recursive = false))
-            c
-          } else {
-            val inherited = cur.segments ++
-              (if (cur.inline.nonEmpty)
-                 Seq(writeSegment(fs, root, cur.inline))
-               else Seq.empty)
-            commitAtParts(spark, path, cur.version + 1, Seq.empty,
-              inherited ++ newSeg, cur.artifacts ++ artifacts)
-          }
-        vacuum(spark, path, retainVersions)
-        return v
+        commit(spark, path, base, delta, retainVersions, preCommitHook): Unit
+        return result
       } catch {
-        case e: SegmentsMissingException =>
-          // a sweep took a segment this commit references. Our OWN
-          // segments (the batch's, or the inline-adoption one rewritten
-          // by the loop) are recoverable — rewrite and retry. A lost
-          // INHERITED segment means a retained manifest's reference is
-          // dangling: genuine corruption, stays loud.
-          segLost += 1
-          if (segLost >= 3 || e.missing.exists(cur.segments.toSet)) throw e
-          if (newSeg.exists(e.missing.toSet))
-            newSeg = Seq(writeSegment(fs, root, added))
         case e: ConcurrentWriterException =>
-          attempt += 1
-          val now = load(spark, path).getOrElse(throw e)
-          // idempotent landing: the head already carries every file and
-          // artifact pointer of THIS batch (file names and artifact
-          // version dirs are writer-unique, so only this writer's own
-          // commit can have put them there — e.g. a healthy publish
-          // instantly built on by successors and then pruned out from
-          // under the post-claim freshness check). The batch landed;
-          // re-adding it would duplicate.
-          // (the batch's segment is NOT deleted here: the successors
-          // that carried the batch forward may reference it — if they
-          // consolidated instead, it is unreferenced debris the
-          // periodic orphan sweep owns)
-          if ((added.nonEmpty || artifacts.nonEmpty) &&
-              added.forall(now.dataFiles.contains) &&
-              artifacts.forall { case (n, rel) =>
-                now.artifacts.get(n).contains(rel) })
-            return now.version
-          if (attempt >= 3) throw e
-          val winnerAdded = now.dataFiles.toSet -- base.dataFiles.toSet
-          if (added.exists(winnerAdded))
-            throw new ConcurrentWriterException(
-              "append rebase refused: the winning commit references " +
-                "files this append wrote — the deltas are not disjoint")
-          if (artifacts.keys.exists(n =>
-              now.artifacts.get(n) != base.artifacts.get(n)))
-            throw new ConcurrentWriterException(
-              "append rebase refused: the winning commit changed an " +
-                "artifact this append also updates " +
-                s"(${artifacts.keySet.mkString(", ")})")
-          cur = now
+          recomputes += 1
+          if (recomputes > 3) throw e
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
-  /** [[commit]] from the CURRENT directory listing, carrying the
-    * previous manifest's artifact pointers (optionally overridden).
-    * Correct only for BUILDS (the `mode("overwrite")` write wiped the
-    * directory, so the listing is exactly the build's output) — an
-    * append under retention must use [[commitDelta]] instead, because
-    * a listing would resurrect retained superseded files. */
-  def commitListing(spark: SparkSession, path: String,
-                    artifacts: Map[String, String] = Map.empty): Long = {
-    val prev = load(spark, path).map(_.artifacts).getOrElse(Map.empty)
-    commit(spark, path, listDataFiles(spark, path), prev ++ artifacts)
-  }
+  /** All retained manifest snapshots, ascending — bounded by the
+    * retention window every commit vacuums to. */
+  private def retainedSnapshots(fs: FileSystem, root: Path): Seq[Snapshot] =
+    manifestFiles(fs, root).flatMap { case (v, p) => tryParse(fs, root, v, p) }
 
-  /** Crash repair + one-time adoption, run at the START of every
-    * mutation: with manifests present, delete every data file,
-    * artifact version directory, and leftover `_compacting` temp that
-    * NO retained manifest references (debris of a crashed mutation —
-    * never committed, so never visible to any reader, safe to drop).
-    * Files a SUPERSEDED-but-retained manifest still references survive
-    * — they belong to the time-travel horizon until [[vacuum]] prunes
-    * it. Without a manifest, adopt the current listing as version 1
-    * (pre-manifest index migration). Returns the CURRENT snapshot. */
-  /** The APPEND-side reconcile: crash repair bounded to what an append
-    * actually needs. Full [[reconcile]] walks every index directory —
-    * correct for compactions and retrains (they rewrite arbitrary
-    * shards, single-writer by contract), but an O(index)-wide walk on
-    * the hot per-batch ingest path, and its orphan sweep is UNSAFE
-    * under the optimistic append concurrency [[commitAdded]] supports:
-    * a concurrent appender's fully-written-but-not-yet-committed files
-    * look exactly like crash debris. Appends therefore repair only the
-    * things that cannot belong to a live writer: a missing manifest
-    * (one-time adoption — the only full listing this path ever pays)
-    * and crashed manifest temps (one `_manifests` listing). Data-file
-    * orphans stay invisible debris — never attributed to anyone,
-    * because appends know their files by construction
-    * ([[stageAppend]]) — until the next compaction/retrain's full
-    * reconcile sweeps them, the table-format posture (orphan cleanup
-    * is maintenance with a single-writer window, not a per-commit
-    * scan).
-    *
-    * Both sweeps this path DOES run are AGE-GATED by `sweepAgeMs`: a
-    * manifest `.tmp` or a `_staging/<uuid>` directory younger than the
-    * horizon may belong to a LIVE concurrent appender (its temp exists
-    * between create and rename; its staging between write and move) and
-    * is left alone — deleting it would fail a healthy writer's commit
-    * mid-flight. Anything older than the horizon is certainly a crashed
-    * writer's debris: the staging dir sweeps here (bounding append-only
-    * gates' debris without waiting for a compaction's full reconcile).
-    *
-    * Already-moved COMMITTED-LOOKING orphans (data files, segments,
-    * artifact versions referenced by no retained manifest — a crashed
-    * append's moved files, or a lost-CAS retrain/fold attempt's
-    * generation) are swept here too, under the same age gate, but only
-    * PERIODICALLY: the full orphan walk is O(index files), so it runs
-    * at most once per `sweepAgeMs` (a `_last_sweep` marker keeps the
-    * clock), amortizing to nothing on the hot per-batch path while
-    * bounding debris on gates that NEVER compact (`compactEvery = 0` —
-    * which otherwise never run the full [[reconcile]] and would
-    * accrete every lost-CAS generation forever). The per-append
-    * listing bound is untouched: a marker younger than the horizon
-    * costs one `getFileStatus`. */
-  def reconcileAppend(spark: SparkSession, path: String,
-                      sweepAgeMs: Long = DefaultSweepAgeMs): Snapshot =
+  /** Without a manifest, adopt the current listing as version 1
+    * (pre-manifest index migration); otherwise `repair` the current
+    * snapshot. */
+  private def adoptOr(spark: SparkSession, path: String)(
+      repair: (FileSystem, Path) => Unit): Snapshot =
     load(spark, path) match {
       case None =>
-        commit(spark, path, listDataFiles(spark, path), Map.empty)
+        commit(spark, path, Snapshot.Empty,
+          Delta(added = listDataFiles(spark, path))): Unit
         load(spark, path).get
       case Some(snap) =>
         val (fs, root) = fsOf(spark, path)
-        val horizon = System.currentTimeMillis() - sweepAgeMs
-        sweepManifestTemps(fs, root, olderThan = Some(horizon))
-        val staging = new Path(root, "_staging")
-        if (fs.exists(staging))
-          fs.listStatus(staging).toSeq
-            .filter(_.getModificationTime < horizon)
-            .foreach(st => deleteTolerant(fs, st.getPath, recursive = true))
-        val marker = new Path(root, "_last_sweep")
-        val due =
-          try fs.getFileStatus(marker).getModificationTime < horizon
-          catch { case _: java.io.FileNotFoundException =>
-            // first append on this index: start the clock, don't walk
-            fs.create(marker, true).close(); false
-          }
-        if (due) {
-          sweepAgedOrphans(spark, path, horizon)
-          deleteTolerant(fs, marker, recursive = false): Unit
-          fs.create(marker, true).close()
-        }
+        repair(fs, root)
         snap
     }
 
-  /** The full-[[reconcile]] orphan rule under the append path's age
-    * gate: delete data files, segment files, and artifact version
-    * directories that (a) no retained manifest references AND (b) are
-    * older than `horizon` — certainly a crashed or lost-CAS writer's
-    * debris, never a live concurrent appender's in-flight output (those
-    * are young). One O(index) walk, paid at most once per sweep age by
-    * [[reconcileAppend]]'s marker. */
-  private def sweepAgedOrphans(spark: SparkSession, path: String,
-                               horizon: Long): Unit = {
-    val (fs, root) = fsOf(spark, path)
-    val retained = retainedSnapshots(spark, path)
-    def aged(p: Path): Boolean =
-      try fs.getFileStatus(p).getModificationTime < horizon
-      catch { case _: java.io.FileNotFoundException => false }
-    val keepData = retained.flatMap(_.dataFiles).toSet
-    listDataFiles(spark, path).filterNot(keepData).foreach { rel =>
-      val p = new Path(root, rel)
-      if (aged(p)) deleteTolerant(fs, p, recursive = false): Unit
+  /** Crash repair + one-time adoption at the START of a superseding
+    * mutation (the exclusive writer window [[rewrite]] opens): delete
+    * every data file and artifact version directory NO retained manifest
+    * references (debris of a crashed mutation — never committed, so
+    * never visible to any reader), every staging directory and every
+    * manifest temp. Files a SUPERSEDED-but-retained manifest still
+    * references survive — they belong to the time-travel horizon until
+    * [[vacuum]] prunes it. Unreferenced SEGMENTS stay age-gated even
+    * here: a concurrent appender holds one between its segment write
+    * and its claim, and sweeping it would let that commit publish a
+    * dangling reference. Returns the CURRENT snapshot. */
+  def reconcile(spark: SparkSession, path: String): Snapshot =
+    adoptOr(spark, path) { (fs, root) =>
+      sweepOrphans(fs, root, horizon = Long.MaxValue)
+      deleteTolerant(fs, new Path(root, StagingDir), recursive = true): Unit
+      sweepManifestTemps(fs, root, horizon = Long.MaxValue)
     }
-    val segDir = new Path(root, SegmentDir)
-    if (fs.exists(segDir)) {
-      val keepSegs = retained.flatMap(_.segments).toSet
-      fs.listStatus(segDir).toSeq.filter(_.isFile).foreach { st =>
-        if (!keepSegs(s"$SegmentDir/${st.getPath.getName}") &&
-            st.getModificationTime < horizon)
-          deleteTolerant(fs, st.getPath, recursive = false): Unit
+
+  /** The APPEND-side reconcile: crash repair bounded to what an append
+    * actually needs. Full [[reconcile]] walks every index directory —
+    * an O(index)-wide walk on the hot per-batch ingest path, and its
+    * orphan sweep is UNSAFE under optimistic append concurrency: a
+    * concurrent appender's fully-written-but-not-yet-committed files
+    * look exactly like crash debris. Appends therefore repair only what
+    * cannot belong to a live writer: a missing manifest (one-time
+    * adoption) and, AGE-GATED by [[DefaultSweepAgeMs]], crashed
+    * manifest temps and staging directories (a younger one may be a
+    * live appender's in-flight state).
+    *
+    * Committed-looking orphans (data files, segments, artifact versions
+    * referenced by no retained manifest — a crashed append's moved
+    * files, or a lost-claim rewrite's generation) are swept here too,
+    * under the same age gate, but only PERIODICALLY: the orphan walk is
+    * O(index files), so it runs at most once per sweep age (a
+    * `_last_sweep` marker keeps the clock), amortizing to nothing on the
+    * per-batch path while bounding debris on gates that never compact.
+    * A marker younger than the horizon costs one `getFileStatus`. */
+  def reconcileAppend(spark: SparkSession, path: String): Snapshot =
+    adoptOr(spark, path) { (fs, root) =>
+      val horizon = System.currentTimeMillis() - DefaultSweepAgeMs
+      sweepManifestTemps(fs, root, horizon)
+      listIfExists(fs, new Path(root, StagingDir))
+        .filter(_.getModificationTime < horizon)
+        .foreach(st => deleteTolerant(fs, st.getPath, recursive = true))
+      val marker = new Path(root, "_last_sweep")
+      val due =
+        try fs.getFileStatus(marker).getModificationTime < horizon
+        catch { case _: java.io.FileNotFoundException =>
+          // first append on this index: start the clock, don't walk
+          fs.create(marker, true).close(); false
+        }
+      if (due) {
+        sweepOrphans(fs, root, horizon)
+        deleteTolerant(fs, marker, recursive = false): Unit
+        fs.create(marker, true).close()
       }
     }
-    val artDir = new Path(root, ArtRoot)
-    if (fs.exists(artDir)) {
-      val keepArts = retained.flatMap(_.artifacts.values).toSet
-      fs.listStatus(artDir).toSeq.filter(_.isDirectory).foreach { fam =>
-        fs.listStatus(fam.getPath).toSeq.filter(_.isDirectory).foreach { v =>
-          val rel = s"$ArtRoot/${fam.getPath.getName}/${v.getPath.getName}"
-          if (!keepArts(rel) && v.getModificationTime < horizon)
-            deleteTolerant(fs, v.getPath, recursive = true): Unit
-        }
+
+  /** The ONE orphan walk: delete data files, artifact version
+    * directories and segment files that (a) no retained manifest
+    * references AND (b) were last modified before `horizon`
+    * (`Long.MaxValue`: any age). Segments are additionally held to
+    * [[DefaultSweepAgeMs]] whatever the horizon — see [[reconcile]]. */
+  private def sweepOrphans(fs: FileSystem, root: Path, horizon: Long): Unit = {
+    val retained = retainedSnapshots(fs, root)
+    def aged(st: org.apache.hadoop.fs.FileStatus, before: Long) =
+      st.getModificationTime < before
+    val keepData = retained.flatMap(_.dataFiles).toSet
+    listData(fs, root).filterNot(keepData).foreach { rel =>
+      val p = new Path(root, rel)
+      val old = horizon == Long.MaxValue ||
+        (try aged(fs.getFileStatus(p), horizon)
+         catch { case _: java.io.FileNotFoundException => false })
+      if (old) deleteTolerant(fs, p, recursive = false): Unit
+    }
+    val segHorizon =
+      math.min(horizon, System.currentTimeMillis() - DefaultSweepAgeMs)
+    val keepSegs = retained.flatMap(_.segments).toSet
+    listIfExists(fs, new Path(root, SegmentDir)).filter(_.isFile).foreach { st =>
+      if (!keepSegs(s"$SegmentDir/${st.getPath.getName}") && aged(st, segHorizon))
+        deleteTolerant(fs, st.getPath, recursive = false): Unit
+    }
+    val keepArts = retained.flatMap(_.artifacts.values).toSet
+    listIfExists(fs, new Path(root, ArtRoot)).filter(_.isDirectory).foreach { fam =>
+      fs.listStatus(fam.getPath).toSeq.filter(_.isDirectory).foreach { v =>
+        val rel = s"$ArtRoot/${fam.getPath.getName}/${v.getPath.getName}"
+        if (!keepArts(rel) && aged(v, horizon))
+          deleteTolerant(fs, v.getPath, recursive = true): Unit
       }
     }
   }
 
-  /** Stage-then-move append write: the batch lands under a
-    * writer-unique hidden staging directory, then every part file is
-    * renamed into its partition directory — and the returned
+  private def listIfExists(fs: FileSystem,
+                           dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+
+  /** Stage-then-move write — every append and every rewrite lands its
+    * files this way: the frame is written `partitionBy(partitionCol)`
+    * under a writer-unique hidden staging directory, then every part
+    * file is renamed into its partition directory — and the returned
     * root-relative paths are EXACTLY this writer's files, by
     * construction. No listing diff, so nothing can be mis-attributed:
-    * not a crashed replay's orphans (they'd have committed a duplicate
-    * row set), not a concurrent appender's in-flight files (the
-    * rebase-on-conflict story requires writers that never confuse each
-    * other's output). Part names keep Spark's job-unique UUIDs, so
-    * moves cannot collide. A crash mid-move leaves unreferenced
-    * orphans + a hidden `_staging` dir for the next full
-    * [[reconcile]]; the replay re-appends correctly off the pinned
+    * not a crashed replay's orphans, not a concurrent appender's
+    * in-flight files (the rebase-on-conflict story requires writers
+    * that never confuse each other's output). Part names keep Spark's
+    * job-unique UUIDs, so moves cannot collide. A crash mid-move leaves
+    * unreferenced orphans + a hidden `_staging` dir for the orphan
+    * sweeps; the replay re-appends correctly off the pinned
     * pre-state. */
   def stageAppend(df: DataFrame, path: String,
                   partitionCol: String): Seq[String] = {
     val spark = df.sparkSession
     val (fs, root) = fsOf(spark, path)
     val stage = new Path(root,
-      s"_staging/${java.util.UUID.randomUUID().toString.take(12)}")
+      s"$StagingDir/${java.util.UUID.randomUUID().toString.take(12)}")
     df.write.mode("overwrite").partitionBy(partitionCol)
       .parquet(stage.toString)
     val added = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -875,87 +815,15 @@ object IndexManifest {
     try fs.delete(p, recursive)
     catch { case _: java.io.FileNotFoundException => false }
 
+  /** Crashed-commit temps (dot-prefixed, so never visible to load)
+    * last modified before `horizon`. */
   private def sweepManifestTemps(fs: FileSystem, root: Path,
-                                 olderThan: Option[Long] = None): Unit =
+                                 horizon: Long): Unit =
     fs.listStatus(new Path(root, ManifestDir)).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith(".") &&
         st.getPath.getName.endsWith(".tmp") &&
-        olderThan.forall(st.getModificationTime < _))
+        st.getModificationTime < horizon)
       .foreach(st => deleteTolerant(fs, st.getPath, recursive = false): Unit)
-
-  def reconcile(spark: SparkSession, path: String): Snapshot =
-    load(spark, path) match {
-      case None =>
-        commit(spark, path, listDataFiles(spark, path), Map.empty)
-        load(spark, path).get
-      case Some(snap) =>
-        val (fs, root) = fsOf(spark, path)
-        val retained = manifestFiles(fs, root)
-          .flatMap { case (v, p) => tryParse(fs, root, v, p) }
-        val listed = listDataFiles(spark, path)
-        val keep = retained.flatMap(_.dataFiles).toSet
-        listed.filterNot(keep).foreach { rel =>
-          deleteTolerant(fs, new Path(root, rel), recursive = false): Unit
-        }
-        // segment files no retained manifest references (a crashed
-        // commit's orphan, or a consolidation's superseded inputs whose
-        // last referencing manifest a racing vacuum pruned). AGE-GATED,
-        // unlike the data-file sweep: a concurrent gate APPENDER (which
-        // compactions/retrains now run alongside) holds an unreferenced
-        // segment between writeSegment and its manifest claim, and
-        // sweeping it would let the appender's commit SUCCEED while its
-        // manifest references a deleted segment — poisoning every later
-        // load. A young unreferenced segment may be that live writer's;
-        // one older than the horizon is certainly crash debris. (The
-        // staged-DATA-file window is different: an appender's data
-        // files are already referenced by nothing until its commit, and
-        // sweeping them fails the appender loudly at its staged move or
-        // read-back — never a silently corrupted published manifest.
-        // [[commitAtParts]]'s pre-claim segment check backstops even
-        // this sweep's residual races into loud, self-healing
-        // failures.)
-        val segDir = new Path(root, SegmentDir)
-        if (fs.exists(segDir)) {
-          val keepSegs = retained.flatMap(_.segments).toSet
-          val segHorizon = System.currentTimeMillis() - DefaultSweepAgeMs
-          fs.listStatus(segDir).toSeq.filter(_.isFile).foreach { st =>
-            val rel = s"$SegmentDir/${st.getPath.getName}"
-            if (!keepSegs(rel) && st.getModificationTime < segHorizon)
-              deleteTolerant(fs, st.getPath, recursive = false): Unit
-          }
-        }
-        // leftover per-shard compaction temps (crashed mid-rewrite)
-        fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .foreach { dir =>
-            val tmp = new Path(dir.getPath, "_compacting")
-            if (fs.exists(tmp)) fs.delete(tmp, true): Unit
-          }
-        // crashed append staging dirs (stageAppend died before its
-        // moves finished). Full reconcile runs in an EXCLUSIVE writer
-        // window — no concurrent appender may be staging — which is
-        // exactly why appends themselves never sweep here.
-        val staging = new Path(root, "_staging")
-        if (fs.exists(staging)) fs.delete(staging, true): Unit
-        // leftover manifest temps (crashed mid-commit — dot-prefixed,
-        // so never visible to load; sweep them here)
-        sweepManifestTemps(fs, root)
-        // artifact versions no retained manifest points at (a crashed
-        // mutation's uncommitted version; superseded versions past the
-        // retention window fall to vacuum)
-        val artDir = new Path(root, ArtRoot)
-        if (fs.exists(artDir)) {
-          val current = retained.flatMap(_.artifacts.values).toSet
-          fs.listStatus(artDir).toSeq.filter(_.isDirectory).foreach { fam =>
-            fs.listStatus(fam.getPath).toSeq.filter(_.isDirectory)
-              .foreach { v =>
-                val rel = s"$ArtRoot/${fam.getPath.getName}/${v.getPath.getName}"
-                if (!current(rel)) fs.delete(v.getPath, true): Unit
-              }
-          }
-        }
-        snap
-    }
 
   /** Prune the time-travel horizon to the newest `keepLast` manifests
     * and physically delete everything only the pruned versions
@@ -981,7 +849,7 @@ object IndexManifest {
       tryParse(fs, root, v, p, strict = false) }
     // advance the claim floor BEFORE freeing any version name: a stale
     // writer racing these deletes must observe mark >= its target in
-    // [[commitAtParts]]' post-link check (see prunedHighWaterMark)
+    // [[claim]]'s post-link check (see prunedHighWaterMark)
     advanceHighWaterMark(fs, root, pruned.last._1)
     pruned.foreach { case (_, p) =>
       deleteTolerant(fs, p, recursive = false): Unit
@@ -1011,18 +879,25 @@ object IndexManifest {
     (pruned.length, removed)
   }
 
-  /** The pinned data read: exactly the current manifest's files, with
-    * the partition column recovered from the directory layout
+  /** The pinned read of an explicit root-relative file list, with the
+    * partition column recovered from the directory layout
     * (`basePath`) — same scan node, same partition pruning, same
     * broadcast shapes as a directory read; only the file LISTING is
-    * pinned. Falls back to the directory listing for roots without a
-    * manifest (externally-built fixtures). */
+    * pinned. Every manifest-pinned data read goes through here. */
+  private[graft] def readFiles(spark: SparkSession, path: String,
+                               files: Seq[String]): DataFrame = {
+    val (_, root) = fsOf(spark, path)
+    spark.read.option("basePath", root.toString)
+      .parquet(files.map(f => new Path(root, f).toString): _*)
+  }
+
+  /** The pinned data read: exactly the current manifest's files. Falls
+    * back to the directory listing for roots without a manifest
+    * (externally-built fixtures). */
   def readData(spark: SparkSession, path: String): DataFrame =
     load(spark, path) match {
       case Some(snap) if snap.dataFiles.nonEmpty =>
-        val (fs, root) = fsOf(spark, path)
-        spark.read.option("basePath", root.toString)
-          .parquet(snap.dataFiles.map(f => new Path(root, f).toString): _*)
+        readFiles(spark, path, snap.dataFiles)
       case _ => spark.read.parquet(path)
     }
 
@@ -1037,12 +912,10 @@ object IndexManifest {
       throw new java.util.NoSuchElementException(
         s"manifest version $version of $path is not retained " +
           s"(available: ${versions(spark, path).mkString(", ")})"))
-    val (_, root) = fsOf(spark, path)
     if (snap.dataFiles.isEmpty)
       throw new java.util.NoSuchElementException(
         s"manifest version $version of $path lists no data files")
-    spark.read.option("basePath", root.toString)
-      .parquet(snap.dataFiles.map(f => new Path(root, f).toString): _*)
+    readFiles(spark, path, snap.dataFiles)
   }
 
   /** The time-travel artifact read — the model version the given

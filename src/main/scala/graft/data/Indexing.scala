@@ -3,6 +3,8 @@ package graft.data
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import IndexManifest.{Delta, Snapshot}
+
 /** Corpus indexing + membership operators for the training-data pipeline:
   * exact-substring (duplicate-span) removal, a count-min sketch for
   * heavy-hitter estimation, Bloom-filter membership for benchmark
@@ -381,8 +383,9 @@ object Indexing {
     val aStats = IndexManifest.writeArtifact(spark, path, "stats",
       docs.where(col(textCol).isNotNull)
         .agg(count(lit(1)).as("n_docs")))
-    IndexManifest.commit(spark, path,
-      IndexManifest.listDataFiles(spark, path), Map(aDf, aStats)): Unit
+    IndexManifest.commit(spark, path, Snapshot.Empty,
+      Delta(IndexManifest.listDataFiles(spark, path),
+        artifacts = Map(aDf, aStats))): Unit
   }
 
   /** Manifest-pinned reads of the retrieval index's model artifacts
@@ -415,8 +418,8 @@ object Indexing {
     * writing a NEW version directory (never an in-place overwrite — no
     * refreshByPath hazard); they are vocabulary-sized, the scale of a
     * dictionary rewrite, never a corpus pass. The commit closes with
-    * the retention vacuum (`retainVersions`, default 2) and pays only
-    * O(batch shards) listing calls (touched-dirs delta).
+    * the retention vacuum (`retainVersions`, default 2) and lists no
+    * partition directory (staged write).
     *
     * ATOMICITY ([[IndexManifest]]): the appended postings and both
     * artifact versions become visible in ONE manifest commit. The
@@ -442,7 +445,7 @@ object Indexing {
     // index prune
     val shards = bt.select(col("shard")).distinct().collect()
       .map(r => Integer.valueOf(r.getInt(0))).toSeq
-    IndexManifest.reconcileAppend(spark, path): Unit
+    val snap = IndexManifest.reconcileAppend(spark, path)
     val idx = IndexManifest.readData(spark, path)
       .where(col("shard").isin(shards: _*))
     val stored = idx.join(
@@ -472,27 +475,27 @@ object Indexing {
     val aStats = IndexManifest.writeArtifact(spark, path, "stats",
       readPostingsStats(spark, path)
         .select((col("n_docs") + lit(nNew)).as("n_docs")))
-    IndexManifest.commitAdded(spark, path, added, Map(aDf, aStats),
-      retainVersions = retainVersions): Unit
+    IndexManifest.commit(spark, path, snap,
+      Delta(added, artifacts = Map(aDf, aStats)), retainVersions): Unit
   }
 
   /** Rebuild of the retrieval index's model artifacts FROM the postings
-    * (one full index scan). With manifest-atomic appends this is no
-    * longer crash REPAIR — it exists for adopting an externally-built
-    * postings directory, and as the differential's independent
-    * derivation of df/N. */
+    * (one full index scan), as one [[IndexManifest.rewrite]] that keeps
+    * its predecessor on the time-travel horizon. With manifest-atomic
+    * appends this is no longer crash REPAIR — it exists for adopting an
+    * externally-built postings directory, and as the differential's
+    * independent derivation of df/N. */
   def rebuildPostingsArtifacts(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Unit = {
-    val snap = IndexManifest.reconcile(spark, path)
-    val idx = IndexManifest.readData(spark, path)
-    val aDf = IndexManifest.writeArtifact(spark, path, "df",
-      idx.groupBy(col("term")).agg(count(lit(1)).as("df")))
-    val aStats = IndexManifest.writeArtifact(spark, path, "stats",
-      idx.select(col("doc_id")).distinct()
-        .agg(count(lit(1)).as("n_docs")))
-    IndexManifest.commit(spark, path, snap.dataFiles,
-      snap.artifacts + aDf + aStats): Unit
-  }
+                               path: String): Unit =
+    IndexManifest.rewrite(spark, path, retainVersions = 2) { _ =>
+      val idx = IndexManifest.readData(spark, path)
+      val aDf = IndexManifest.writeArtifact(spark, path, "df",
+        idx.groupBy(col("term")).agg(count(lit(1)).as("df")))
+      val aStats = IndexManifest.writeArtifact(spark, path, "stats",
+        idx.select(col("doc_id")).distinct()
+          .agg(count(lit(1)).as("n_docs")))
+      (Delta(artifacts = Map(aDf, aStats)), ())
+    }
 
   /** Serve a query set from the STORED retrieval index: TF-IDF top-k
     * with the same integer-exact scoring as the recompute form

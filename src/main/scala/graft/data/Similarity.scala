@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import IndexManifest.{Delta, Snapshot}
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`): brute-force cosine top-k as the correctness baseline,
   * and an IVF-style coarse-quantizer variant as the scale path (probe one
@@ -127,18 +129,36 @@ object Similarity {
     * shares its parameters (data_sim_recall alone fits the kCells=8
     * coarse model four times) — memoizing the k×dim result removes
     * rounds × corpus passes per repeat fit at ANY scale. Values are
-    * k × dim doubles; entries die with their session.
+    * k × dim doubles; entries die with their session. The key carries
+    * the plan's INPUT IDENTITY — every file it reads, with size and
+    * modification time — because the plan hash covers a path, not its
+    * contents: a path rewritten in place must refit.
     *
     * @return (cell: long, cvec: array<double>) — k rows. */
   private val fitMemo = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), Array[(Long, Seq[Double])]]()
+
+  private def inputIdentity(df: DataFrame): String = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val files = df.inputFiles.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val st =
+        try Some(p.getFileSystem(conf).getFileStatus(p))
+        catch { case _: java.io.FileNotFoundException => None }
+      s"$f|${st.map(_.getLen).getOrElse(-1L)}|" +
+        st.map(_.getModificationTime).getOrElse(-1L)
+    }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(files.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
+  }
 
   def fitCentroids(corpus: DataFrame, k: Int, rounds: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0; got k=$k, rounds=$rounds")
     val spark = corpus.sparkSession
     val key = (spark, corpus.queryExecution.analyzed.semanticHash().toString +
-      s"|$k|$rounds|$idCol|$vecCol")
+      s"|${inputIdentity(corpus)}|$k|$rounds|$idCol|$vecCol")
     val fitted = fitMemo.computeIfAbsent(key, _ => {
       fitMemo.keySet.removeIf(_._1.sparkContext.isStopped)
       val seedW = Window.orderBy(col(idCol)) // k rows post-limit: single tiny partition
@@ -361,8 +381,9 @@ object Similarity {
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_build"))
     val aSizes = IndexManifest.writeArtifact(spark, path, "cellsizes", sizes)
-    IndexManifest.commit(spark, path,
-      IndexManifest.listDataFiles(spark, path), Map(aCents, aSizes)): Unit
+    IndexManifest.commit(spark, path, Snapshot.Empty,
+      Delta(IndexManifest.listDataFiles(spark, path),
+        artifacts = Map(aCents, aSizes))): Unit
   }
 
   /** MAINTAIN the stored IVF index: assign an ingest batch with the
@@ -400,7 +421,7 @@ object Similarity {
     // added commit never list a cell directory at all
     val cells = assigned.select(col("cell")).distinct().collect()
       .map(r => java.lang.Long.valueOf(r.getLong(0))).toSeq
-    IndexManifest.reconcileAppend(spark, path): Unit
+    val snap = IndexManifest.reconcileAppend(spark, path)
     val idx = IndexManifest.readData(spark, path)
       .where(col("cell").isin(cells: _*))
     val stored = idx.join(
@@ -410,8 +431,7 @@ object Similarity {
     val added = IndexManifest.stageAppend(
       assigned.join(broadcast(stored), Seq("cell", idCol), "left_anti"),
       path, "cell")
-    IndexManifest.commitAdded(spark, path, added,
-      retainVersions = retainVersions): Unit
+    IndexManifest.commit(spark, path, snap, Delta(added), retainVersions): Unit
   }
 
   /** The stored coarse quantizer of a maintained IVF index —
@@ -518,6 +538,11 @@ object Similarity {
     * [[IndexManifest.readArtifactAt]]) so an executing serve never
     * races the deletion.
     *
+    * One [[IndexManifest.rewrite]] transaction: a gate append landing
+    * mid-retrain wins the claim, and the retrain refits over the
+    * winner's snapshot (appended rows included) — never publishing a
+    * generation fit without them.
+    *
     * Scale: one pinned corpus read feeds the k-means rounds (shuffles
     * O(k × dim) per round) and the map-only re-assignment; the rewrite
     * is the same one-time cost as the original build, run only when
@@ -529,51 +554,22 @@ object Similarity {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",
                       preCommitHook: () => Unit = () => (),
-                      retainVersions: Int = 1): Unit = {
-    IndexManifest.reconcile(spark, path)
-    // retry-on-conflict CAS (the compactIndex discipline): the commit
-    // claims exactly snapshot.version + 1, so a gate append landing
-    // mid-retrain wins the claim LOUDLY — an unpinned commit would have
-    // published a generation FIT WITHOUT the appended rows, silently
-    // dropping them. Retraining is recomputable: the loser reloads the
-    // winner's snapshot (appended rows included) and refits; the lost
-    // attempt's generation files are invisible orphans.
-    var attempt = 0
-    while (attempt < 3) {
-      val snap = IndexManifest.load(spark, path).get
-      // v2 = everything the write adds beyond the PRE-WRITE LISTING (not
-      // the snapshot: under retention the directory may also hold an
-      // older generation's superseded files — or a lost retry's
-      // orphans — which are neither v1 nor v2)
-      val pre = IndexManifest.listDataFiles(spark, path).toSet
+                      retainVersions: Int = 1): Unit =
+    IndexManifest.rewrite(spark, path, retainVersions, preCommitHook) { snap =>
       val rows = IndexManifest.readData(spark, path)
         .select(col(idCol), col(vecCol))
       val cents = fitCentroids(rows, kCells, rounds, idCol, vecCol)
-      assignCellsBroadcast(rows, cents, vecCol)
-        .select(col(idCol), col(vecCol), col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(path)
-      val v2Files = IndexManifest.listDataFiles(spark, path).filterNot(pre)
-      val root = new org.apache.hadoop.fs.Path(path)
-      val sizes = spark.read.option("basePath", root.toString)
-        .parquet(v2Files.map(f =>
-          new org.apache.hadoop.fs.Path(root, f).toString): _*)
+      val v2Files = IndexManifest.stageAppend(
+        assignCellsBroadcast(rows, cents, vecCol)
+          .select(col(idCol), col(vecCol), col("cell")),
+        path, "cell")
+      val sizes = IndexManifest.readFiles(spark, path, v2Files)
         .groupBy(col("cell").cast("long").as("cell"))
         .agg(count(lit(1)).as("n_build"))
       val aCents = IndexManifest.writeArtifact(spark, path, "centroids", cents)
       val aSizes = IndexManifest.writeArtifact(spark, path, "cellsizes", sizes)
-      preCommitHook()
-      try {
-        IndexManifest.commitAt(spark, path, snap.version + 1,
-          v2Files, Map(aCents, aSizes))
-        IndexManifest.vacuum(spark, path, retainVersions): Unit
-        return
-      } catch {
-        case e: IndexManifest.ConcurrentWriterException =>
-          attempt += 1
-          if (attempt >= 3) throw e
-      }
+      (Delta(v2Files, snap.dataFiles, Map(aCents, aSizes)), ())
     }
-  }
 
   /** Norm-scaled int8 quantization of a float vector: each coordinate
     * becomes `round(x · 127 / ‖v‖)` — the scalar-quantization (SQ8)

@@ -44,8 +44,8 @@ object IndexStreams {
     * `retainVersions` is the gate's retention window
     * ([[graft.data.IndexManifest.vacuum]]), enforced on EVERY
     * mutation: each per-batch append's commit ends with
-    * `vacuum(retainVersions)` (the [[graft.data.IndexManifest
-    * .commitDelta]] contract), so a long-lived gate retains a BOUNDED
+    * `vacuum(retainVersions)` (the [[graft.data.IndexManifest.commit]]
+    * contract), so a long-lived gate retains a BOUNDED
     * manifest horizon — maintenance cost per batch is
     * O(retainVersions), not O(stream age) — and compaction vacuums to
     * the same window. A continuously-serving pipeline sets ≥ 2 so a

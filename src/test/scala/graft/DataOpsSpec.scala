@@ -794,6 +794,111 @@ class DataOpsSpec extends AnyFunSuite {
     assert(Dedup.compactIndex(spark, path, maxFilesPerShard = 1)._1 == 0)
   }
 
+  /** Spark jobs started by `body`, counted by a listener between two
+    * marker jobs — the listener bus is FIFO, so the closing marker's
+    * start event proves every job of `body` was delivered. */
+  private def jobsRun(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-run-${java.util.UUID.randomUUID()}"
+    val counting = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.job.description"))
+          .filter(_ != null) match {
+          case Some(d) if d == s"$tag-open" => counting.set(true)
+          case Some(d) if d == s"$tag-close" =>
+            counting.set(false); closed.countDown()
+          case _ => if (counting.get) n.incrementAndGet(): Unit
+        }
+    }
+    def marker(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(s"$tag-open")
+      body
+      marker(s"$tag-close")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the closing marker")
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("compactIndex rewrites every over-full shard in one write job: 16 " +
+      "over-full shards cost the same jobs as 4, each ends with one file, " +
+      "and the serve is identical") {
+    import graft.data.IndexManifest
+    val corpus = (1L to 80L).map(i => (i, s"a$i b$i c$i d$i"))
+      .toDF("doc_id", "text")
+    val batch = Seq((500L, "a1 b1 zz yy"))
+      .toDF("doc_id", "text")
+    val cells = Dedup.cellHashes(
+      (1L to 80L).map(i => (1000L + i, s"p$i q$i r$i s$i"))
+        .toDF("doc_id", "text"), "doc_id", "text", 2).localCheckpoint(true)
+    def filesPerShard(path: String) = IndexManifest.load(spark, path).get
+      .dataFiles.groupBy(_.takeWhile(_ != '/')).map { case (d, fs) =>
+        d -> fs.length }
+    // a build into every shard, then ONE append: the touched shards hold
+    // two files each, so the compaction's pinned read stays at or under
+    // Spark's 32-path serial file-listing threshold (past it the read
+    // itself adds a listing job, whatever the shard count)
+    def index(appended: org.apache.spark.sql.DataFrame): String = {
+      val path = java.nio.file.Files.createTempDirectory("graft_idx_jobs")
+        .resolve("cells").toString
+      Dedup.writeCellIndex(corpus, "doc_id", "text", 2, path)
+      assert(filesPerShard(path).size == 16, "the build must fill every shard")
+      Dedup.appendCellIndex(appended, path)
+      path
+    }
+    def compact(path: String): Int = {
+      val bc = Dedup.cellHashes(batch, "doc_id", "text", 2)
+      def serve() = Dedup.indexedCellScreen(bc,
+          IndexManifest.readData(spark, path), "doc_id")
+        .as[(Long, Long, Long, Double, Boolean)].collect().toSeq
+      val before = serve()
+      val jobs = jobsRun {
+        Dedup.compactIndex(spark, path, maxFilesPerShard = 1): Unit
+      }
+      assert(filesPerShard(path).values.forall(_ <= 1),
+        s"every shard must end with one file: ${filesPerShard(path)}")
+      assert(serve() == before, "compaction must not change the serve")
+      jobs
+    }
+    val all16 = index(cells)
+    val only4 = index(cells.where(Dedup.cellShard($"cell_hash") < 4))
+    assert(filesPerShard(all16).count(_._2 > 1) == 16)
+    assert(filesPerShard(only4).count(_._2 > 1) == 4)
+    val (jobs16, jobs4) = (compact(all16), compact(only4))
+    assert(jobs16 == jobs4,
+      s"16 over-full shards ran $jobs16 jobs, 4 ran $jobs4 — the rewrite " +
+        "must not run per shard")
+  }
+
+  test("fitCentroids' session memo refits a path rewritten in place") {
+    val p = java.nio.file.Files.createTempDirectory("graft_fit_memo")
+      .resolve("emb").toString
+    def write(shift: Float): Unit =
+      (1L to 20L).map(i => (i, Seq((i % 3).toFloat + shift,
+          (i % 5).toFloat + shift)))
+        .toDF("vec_id", "embedding").write.mode("overwrite").parquet(p)
+    def fit() = Similarity.fitCentroids(spark.read.parquet(p), k = 2,
+      rounds = 1).as[(Long, Seq[Double])].collect().toSeq
+    write(0f)
+    val before = fit()
+    assert(before.forall(_._2.forall(_ < 10.0)))
+    // every vector shifted by +100 under the SAME path: the plan hash is
+    // unchanged, the input files are not
+    write(100f)
+    val after = fit()
+    assert(after.forall(_._2.forall(_ > 90.0)),
+      s"the memo answered with centroids of the overwritten input: $after")
+  }
+
   test("manifest snapshot isolation: a reader sees exactly the pre- or " +
       "post-state of any mutation, never the union; reconcile removes " +
       "crash orphans") {

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.IndexManifest
+import graft.data.IndexManifest.{Delta, Snapshot}
 
 /** Unit laws of the manifest layer every maintained index publishes
   * through: version monotonicity, pinned reads, orphan reconciliation,
@@ -29,13 +30,14 @@ class IndexManifestSpec extends AnyFunSuite {
     assert(IndexManifest.load(spark, p).isEmpty)
     val files = IndexManifest.listDataFiles(spark, p)
     assert(files.nonEmpty && files.forall(_.contains("shard=")))
-    val v1 = IndexManifest.commit(spark, p, files, Map.empty)
+    val v1 = IndexManifest.commit(spark, p, Snapshot.Empty, Delta(files))
     assert(v1 == 1L)
     assert(IndexManifest.load(spark, p).get.version == 1L)
     assert(IndexManifest.readData(spark, p).count() == 3L)
     // a second commit with a SUBSET pins readers to the subset even
     // though every file is still physically present
-    val v2 = IndexManifest.commit(spark, p, files.take(1), Map.empty)
+    val v2 = IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(removed = files.drop(1)))
     assert(v2 == 2L)
     val pinned = IndexManifest.readData(spark, p).count()
     assert(pinned < 3L, s"subset manifest must pin the subset: $pinned")
@@ -74,11 +76,11 @@ class IndexManifestSpec extends AnyFunSuite {
     val a1 = IndexManifest.writeArtifact(spark, p, "model",
       Seq((0L, 1L)).toDF("k", "n"))
     IndexManifest.commit(spark, p,
-      IndexManifest.load(spark, p).get.dataFiles, Map(a1))
+      IndexManifest.load(spark, p).get, Delta(artifacts = Map(a1)))
     val a2 = IndexManifest.writeArtifact(spark, p, "model",
       Seq((0L, 2L)).toDF("k", "n"))
     IndexManifest.commit(spark, p,
-      IndexManifest.load(spark, p).get.dataFiles, Map(a2))
+      IndexManifest.load(spark, p).get, Delta(artifacts = Map(a2)))
     IndexManifest.reconcile(spark, p)
     assert(new java.io.File(p, a1._2).exists(),
       "a superseded artifact a retained manifest references must survive " +
@@ -107,7 +109,7 @@ class IndexManifestSpec extends AnyFunSuite {
       .as[(String, Long)].head() == ("legacy", 7L))
     // once a manifest carries the pointer, the pinned version wins
     IndexManifest.commit(spark, p,
-      IndexManifest.load(spark, p).get.dataFiles, Map(a2))
+      IndexManifest.load(spark, p).get, Delta(artifacts = Map(a2)))
     assert(IndexManifest.readArtifact(spark, p, "df",
         legacyDir = Some("_df"))
       .as[(String, Long)].head() == ("x", 2L))
@@ -120,17 +122,17 @@ class IndexManifestSpec extends AnyFunSuite {
     val m1 = IndexManifest.writeArtifact(spark, p, "model",
       Seq((1L, 3L)).toDF("gen", "n"))
     IndexManifest.commit(spark, p,
-      IndexManifest.load(spark, p).get.dataFiles, Map(m1)) // v2
+      IndexManifest.load(spark, p).get, Delta(artifacts = Map(m1))) // v2
     // an append-shaped mutation: new file + new model version, delta
     // commit (retention threaded wide enough to keep all three versions
     // on the horizon — the default 2 would prune v1 here)
-    Seq((99L, "z")).toDF("id", "v")
+    val added = IndexManifest.stageAppend(Seq((99L, "z")).toDF("id", "v")
       .withColumn("shard", org.apache.spark.sql.functions.lit(1))
-      .repartition(1)
-      .write.mode("append").partitionBy("shard").parquet(p)
+      .repartition(1), p, "shard")
     val m2 = IndexManifest.writeArtifact(spark, p, "model",
       Seq((2L, 4L)).toDF("gen", "n"))
-    IndexManifest.commitDelta(spark, p, Map(m2), retainVersions = 3) // v3
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(added, artifacts = Map(m2)), retainVersions = 3) // v3
     assert(IndexManifest.versions(spark, p) == Seq(1L, 2L, 3L))
     assert(IndexManifest.readDataAt(spark, p, 2L).count() == 3L)
     assert(IndexManifest.readData(spark, p).count() == 4L)
@@ -153,11 +155,12 @@ class IndexManifestSpec extends AnyFunSuite {
       "stays time-travel readable inside the window") {
     val p = freshIndex()
     val v1files = IndexManifest.listDataFiles(spark, p)
-    IndexManifest.commit(spark, p, v1files, Map.empty) // v1: all files
+    IndexManifest.commit(spark, p, Snapshot.Empty, Delta(v1files)) // v1: all files
     // a compaction-style v2: drop one file from the listing (rewrite
     // elided — the retention math is the same)
     val dropped = v1files.head
-    IndexManifest.commit(spark, p, v1files.drop(1), Map.empty) // v2
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(removed = Seq(dropped))) // v2
     // retain 2: v1 (which still references the dropped file) survives,
     // so the file must stay on disk and readDataAt(1) must see it
     IndexManifest.vacuum(spark, p, keepLast = 2)
@@ -180,18 +183,18 @@ class IndexManifestSpec extends AnyFunSuite {
   test("commit detects a violated single-writer window: the version " +
       "name can be claimed only once, and the loser's state is intact") {
     val p = freshIndex()
-    IndexManifest.reconcile(spark, p) // v1
+    val v1 = IndexManifest.reconcile(spark, p) // v1
     // the race: two writers both load v1 and compute next = 2; the
     // first claims it...
     val winner = "D shard=0/winner.parquet"
     java.nio.file.Files.write(
       new java.io.File(p, "_manifests/m000000000002").toPath,
       winner.getBytes("UTF-8"))
-    // ... and the second, committing the same stale next through the
-    // claim seam, must fail LOUDLY — never silently replace the winner
+    // ... and the second, committing a full relisting on the same stale
+    // base, must fail LOUDLY — never silently replace the winner
     val ex = intercept[java.io.IOException] {
-      IndexManifest.commitAt(spark, p, 2L,
-        Seq("shard=0/loser.parquet"), Map.empty)
+      IndexManifest.commit(spark, p, v1,
+        Delta(Seq("shard=0/loser.parquet"), v1.dataFiles))
     }
     assert(ex.getMessage.contains("concurrent"),
       s"must name the concurrent-writer violation: ${ex.getMessage}")
@@ -309,12 +312,12 @@ class IndexManifestSpec extends AnyFunSuite {
     val art = IndexManifest.writeArtifact(spark, path, "stats",
       Seq(1L).toDF("n"))
     val ex = intercept[IndexManifest.ConcurrentWriterException] {
-      IndexManifest.commitAdded(spark, path, Seq.empty, Map(art),
+      IndexManifest.commit(spark, path, base, Delta(artifacts = Map(art)),
         preCommitHook = () => {
           val w = IndexManifest.writeArtifact(spark, path, "stats",
             Seq(2L).toDF("n"))
-          IndexManifest.commit(spark, path, base.dataFiles,
-            base.artifacts + w): Unit
+          IndexManifest.commit(spark, path, base,
+            Delta(artifacts = Map(w))): Unit
         })
     }
     assert(ex.getMessage.contains("artifact"),
@@ -322,11 +325,11 @@ class IndexManifestSpec extends AnyFunSuite {
     // and a loser whose files the winner somehow references is refused
     val base2 = IndexManifest.load(spark, path).get
     val ex2 = intercept[IndexManifest.ConcurrentWriterException] {
-      IndexManifest.commitAdded(spark, path, Seq("shard=0/contested.parquet"),
+      IndexManifest.commit(spark, path, base2,
+        Delta(Seq("shard=0/contested.parquet")),
         preCommitHook = () => {
-          IndexManifest.commit(spark, path,
-            base2.dataFiles :+ "shard=0/contested.parquet",
-            base2.artifacts): Unit
+          IndexManifest.commit(spark, path, base2,
+            Delta(Seq("shard=0/contested.parquet"))): Unit
         })
     }
     assert(ex2.getMessage.contains("disjoint"),
@@ -341,17 +344,17 @@ class IndexManifestSpec extends AnyFunSuite {
     // a build-shaped v1: 1000 inline file entries (synthetic paths —
     // only manifest accounting is under test, nothing reads them)
     val files = (0 until 1000).map(i => f"shard=${i % 16}/part-$i%05d.parquet")
-    IndexManifest.commit(spark, p, files, Map.empty)
+    IndexManifest.commit(spark, p, Snapshot.Empty, Delta(files))
     val fullListBytes = files.mkString("\n").length
     // first append pays the one-time inline→segment adoption (O(index))
-    IndexManifest.commitAdded(spark, p, Seq("shard=0/a1.parquet"),
-      retainVersions = 4)
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=0/a1.parquet")), retainVersions = 4)
     // steady state: each further append writes one batch-sized segment
     // plus a manifest of reference lines — O(batch), never the list
     val before = IndexManifest.manifestBytesWritten.get()
-    IndexManifest.commitAdded(spark, p,
-      Seq("shard=1/a2.parquet", "shard=2/a3.parquet", "shard=3/a4.parquet"),
-      retainVersions = 4)
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=1/a2.parquet", "shard=2/a3.parquet",
+        "shard=3/a4.parquet")), retainVersions = 4)
     val delta = IndexManifest.manifestBytesWritten.get() - before
     assert(delta < fullListBytes / 10,
       s"append commit wrote $delta manifest bytes on an index whose " +
@@ -371,10 +374,12 @@ class IndexManifestSpec extends AnyFunSuite {
       "missing manifest is tolerated") {
     val p = java.nio.file.Files.createTempDirectory("graft_segc")
       .resolve("idx").toString
-    IndexManifest.commit(spark, p, Seq("shard=0/base.parquet"), Map.empty)
+    IndexManifest.commit(spark, p, Snapshot.Empty,
+      Delta(Seq("shard=0/base.parquet")))
     (1 to 8).foreach { i =>
-      IndexManifest.commitAdded(spark, p, Seq(s"shard=0/a$i.parquet"),
-        retainVersions = 2, maxSegments = 3)
+      IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+        Delta(Seq(s"shard=0/a$i.parquet")), retainVersions = 2,
+        maxSegments = 3)
     }
     val cur = IndexManifest.load(spark, p).get
     assert(cur.dataFiles.length == 9,
@@ -399,8 +404,9 @@ class IndexManifestSpec extends AnyFunSuite {
       new java.io.File(p, f"_manifests/m${vs.head}%012d").toPath,
       "S _segments/seg-racerdeleted".getBytes("UTF-8"))
     IndexManifest.vacuum(spark, p, keepLast = 1)
-    IndexManifest.commitAdded(spark, p, Seq("shard=0/after.parquet"),
-      retainVersions = 2, maxSegments = 3)
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=0/after.parquet")), retainVersions = 2,
+      maxSegments = 3)
     assert(IndexManifest.load(spark, p).get.dataFiles.length == 10)
   }
 
@@ -430,9 +436,10 @@ class IndexManifestSpec extends AnyFunSuite {
       "survives a concurrent full reconcile; an aged one is swept") {
     val p = java.nio.file.Files.createTempDirectory("graft_segage")
       .resolve("idx").toString
-    IndexManifest.commit(spark, p, Seq("shard=0/base.parquet"), Map.empty)
-    IndexManifest.commitAdded(spark, p, Seq("shard=0/a1.parquet"),
-      retainVersions = 4)
+    IndexManifest.commit(spark, p, Snapshot.Empty,
+      Delta(Seq("shard=0/base.parquet")))
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=0/a1.parquet")), retainVersions = 4)
     val segDir = new java.io.File(p, "_segments")
     val inflight = new java.io.File(segDir, "seg-liveappender0")
     java.nio.file.Files.write(inflight.toPath,
@@ -453,9 +460,10 @@ class IndexManifestSpec extends AnyFunSuite {
       "(SegmentsMissingException), never a silently-skipped snapshot") {
     val p = java.nio.file.Files.createTempDirectory("graft_segloss")
       .resolve("idx").toString
-    IndexManifest.commit(spark, p, Seq("shard=0/base.parquet"), Map.empty)
-    IndexManifest.commitAdded(spark, p, Seq("shard=0/a1.parquet"),
-      retainVersions = 4)
+    IndexManifest.commit(spark, p, Snapshot.Empty,
+      Delta(Seq("shard=0/base.parquet")))
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=0/a1.parquet")), retainVersions = 4)
     val head = IndexManifest.load(spark, p).get
     assert(head.segments.nonEmpty)
     // simulate genuine loss: the segment file dies while its manifest
@@ -478,11 +486,12 @@ class IndexManifestSpec extends AnyFunSuite {
       "self-heals: the commit rewrites the segment and still lands") {
     val p = java.nio.file.Files.createTempDirectory("graft_segheal")
       .resolve("idx").toString
-    IndexManifest.commit(spark, p, Seq("shard=0/base.parquet"), Map.empty)
+    IndexManifest.commit(spark, p, Snapshot.Empty,
+      Delta(Seq("shard=0/base.parquet")))
     val segDir = new java.io.File(p, "_segments")
     var once = false
-    IndexManifest.commitAdded(spark, p, Seq("shard=0/healed.parquet"),
-      retainVersions = 4,
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=0/healed.parquet")), retainVersions = 4,
       preCommitHook = () => if (!once) {
         once = true
         // the race: a reconcile sweeping every unreferenced segment in
@@ -544,7 +553,8 @@ class IndexManifestSpec extends AnyFunSuite {
       "once, the head resolves, and the horizon stays bounded") {
     val p = java.nio.file.Files.createTempDirectory("graft_soak")
       .resolve("idx").toString
-    IndexManifest.commit(spark, p, Seq("shard=0/base.parquet"), Map.empty)
+    IndexManifest.commit(spark, p, Snapshot.Empty,
+      Delta(Seq("shard=0/base.parquet")))
     val appended = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val appenders = (0 until 4).map { w =>
@@ -563,8 +573,8 @@ class IndexManifestSpec extends AnyFunSuite {
             var tries = 0
             while (!landed) {
               try {
-                IndexManifest.commitAdded(spark, p, Seq(file),
-                  retainVersions = 2, maxSegments = 4)
+                IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+                  Delta(Seq(file)), retainVersions = 2, maxSegments = 4)
                 landed = true
               } catch {
                 case e: IndexManifest.ConcurrentWriterException =>
@@ -588,9 +598,8 @@ class IndexManifestSpec extends AnyFunSuite {
           while (!done) {
             val snap = IndexManifest.load(spark, p).get
             try {
-              IndexManifest.commitAt(spark, p, snap.version + 1,
-                snap.dataFiles, snap.artifacts)
-              IndexManifest.vacuum(spark, p, keepLast = 2): Unit
+              IndexManifest.commit(spark, p, snap,
+                Delta(snap.dataFiles, snap.dataFiles), retainVersions = 2): Unit
               done = true
             } catch {
               case _: IndexManifest.ConcurrentWriterException =>
@@ -631,7 +640,7 @@ class IndexManifestSpec extends AnyFunSuite {
 
   test("a stale claim at a vacuumed version name is refused and rebased: " +
       "recycled manifest names must not swallow a committed batch") {
-    // The exact interleaving the N-writer soak flaked on (SoakProbe):
+    // The exact interleaving the N-writer soak above flaked on:
     // a writer loads the head (v1), is descheduled while three
     // superseding commits land and a vacuum prunes v2 — FREEING the
     // name m000000000002 — then claims v2 and, on EEXIST alone, WINS:
@@ -640,19 +649,21 @@ class IndexManifestSpec extends AnyFunSuite {
     // into a ConcurrentWriterException the append rebase absorbs.
     val p = java.nio.file.Files.createTempDirectory("graft_hwm")
       .resolve("idx").toString
-    IndexManifest.commit(spark, p, Seq("shard=0/base.parquet"), Map.empty)
+    IndexManifest.commit(spark, p, Snapshot.Empty,
+      Delta(Seq("shard=0/base.parquet")))
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     val hook: () => Unit = () =>
       if (fired.compareAndSet(false, true)) {
         (0 until 3).foreach { _ =>
           val snap = IndexManifest.load(spark, p).get
-          IndexManifest.commitAt(spark, p, snap.version + 1,
-            snap.dataFiles, snap.artifacts): Unit
+          IndexManifest.commit(spark, p, snap,
+            Delta(snap.dataFiles, snap.dataFiles)): Unit
         }
         IndexManifest.vacuum(spark, p, keepLast = 2): Unit
       }
-    val v = IndexManifest.commitAdded(spark, p, Seq("shard=0/late.parquet"),
-      retainVersions = 10, preCommitHook = hook)
+    val v = IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(Seq("shard=0/late.parquet")), retainVersions = 10,
+      preCommitHook = hook)
     val cur = IndexManifest.load(spark, p).get
     assert(v == cur.version, "the append must land as the real head, " +
       s"not a zombie below it (returned v$v, head v${cur.version})")
@@ -666,8 +677,9 @@ class IndexManifestSpec extends AnyFunSuite {
       "orphans the next reconcile removes") {
     val p = freshIndex()
     val files = IndexManifest.listDataFiles(spark, p)
-    IndexManifest.commit(spark, p, files, Map.empty)       // v1: all
-    IndexManifest.commit(spark, p, files.drop(1), Map.empty) // v2: drops one
+    IndexManifest.commit(spark, p, Snapshot.Empty, Delta(files)) // v1: all
+    IndexManifest.commit(spark, p, IndexManifest.load(spark, p).get,
+      Delta(removed = files.take(1)))                          // v2: drops one
     // simulate vacuum crashing AFTER pruning v1 but BEFORE deleting the
     // file only v1 referenced
     val m1 = new java.io.File(p, "_manifests/m000000000001")

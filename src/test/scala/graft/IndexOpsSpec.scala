@@ -201,8 +201,8 @@ class IndexOpsSpec extends AnyFunSuite {
     val bogus = IndexManifest.writeArtifact(spark, path, "df",
       Seq(("bogus", 999L)).toDF("term", "df"))
     val snap = IndexManifest.load(spark, path).get
-    IndexManifest.commit(spark, path, snap.dataFiles,
-      snap.artifacts + bogus)
+    IndexManifest.commit(spark, path, snap,
+      IndexManifest.Delta(artifacts = Map(bogus)))
     assert(Indexing.readPostingsDf(spark, path)
       .as[(String, Long)].collect().toMap == Map("bogus" -> 999L))
     Indexing.rebuildPostingsArtifacts(spark, path)

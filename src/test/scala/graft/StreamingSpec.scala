@@ -1037,8 +1037,8 @@ class StreamingSpec extends AnyFunSuite {
     // a LEGACY index: built before the stats artifact existed — strip
     // the pointer the way a pre-stats manifest would lack it
     val snap = IndexManifest.load(spark, idxPath).get
-    IndexManifest.commit(spark, idxPath, snap.dataFiles,
-      snap.artifacts - "stats")
+    IndexManifest.commit(spark, idxPath, snap,
+      IndexManifest.Delta(removed = Seq(snap.artifacts("stats"))))
     val input = MemoryStream[(Long, Long)]
     val q = IndexStreams.edgeIngestStream(input.toDF().toDF("src", "dst"),
       idxPath, outPath, maintain = false,

@@ -148,7 +148,9 @@ class TfRecordSpec extends AnyFunSuite {
     val rows = (0L until 5L).map(b => (0L, b, Seq(b * 10, b * 10 + 1)))
       .toDF("shard", "bin", "token_ids")
     rows.repartition(1).write.partitionBy("shard").parquet(src)
-    graft.data.IndexManifest.commitListing(spark, src)
+    graft.data.IndexManifest.commit(spark, src,
+      graft.data.IndexManifest.Snapshot.Empty, graft.data.IndexManifest.Delta(
+        graft.data.IndexManifest.listDataFiles(spark, src)))
     val out = base.resolve("tfr").toString
     TrainQueries.writeTfRecordShards(spark, src, out,
       maxBytesPerFile = 50L)
@@ -193,7 +195,9 @@ class TfRecordSpec extends AnyFunSuite {
     Seq(0L, 1L, 5L, 6L).map(b => (0L, b, Seq(b * 10, b * 10 + 1)))
       .toDF("shard", "bin", "token_ids")
       .repartition(1).write.partitionBy("shard").parquet(src)
-    graft.data.IndexManifest.commitListing(spark, src)
+    graft.data.IndexManifest.commit(spark, src,
+      graft.data.IndexManifest.Snapshot.Empty, graft.data.IndexManifest.Delta(
+        graft.data.IndexManifest.listDataFiles(spark, src)))
     val out = base.resolve("tfr").toString
     TrainQueries.writeTfRecordShards(spark, src, out)
     val files = new java.io.File(out, "shard=0").listFiles()
@@ -219,7 +223,8 @@ class TfRecordSpec extends AnyFunSuite {
     (0L until 3L).map(b => (0L, b, Seq(b * 10, b * 10 + 1)))
       .toDF("shard", "bin", "token_ids")
       .repartition(1).write.partitionBy("shard").parquet(src)
-    IndexManifest.commitListing(spark, src)
+    IndexManifest.commit(spark, src, IndexManifest.Snapshot.Empty,
+      IndexManifest.Delta(IndexManifest.listDataFiles(spark, src)))
     val out = base.resolve("tfr").toString
     TrainQueries.writeTfRecordShards(spark, src, out)
     val files1 = IndexManifest.load(spark, out).get.dataFiles.toSet
@@ -229,7 +234,8 @@ class TfRecordSpec extends AnyFunSuite {
       (3L until 5L).map(b => (0L, b, Seq(b * 10, b * 10 + 1)))
         .toDF("shard", "bin", "token_ids").repartition(1),
       src, "shard")
-    IndexManifest.commitAdded(spark, src, added, retainVersions = 4)
+    IndexManifest.commit(spark, src, IndexManifest.load(spark, src).get,
+      IndexManifest.Delta(added), retainVersions = 4)
     // roll the wire-format artifact forward: new files only
     TrainQueries.appendTfRecordShards(spark, src, out)
     val files2 = IndexManifest.load(spark, out).get.dataFiles.toSet

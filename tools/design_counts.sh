@@ -1,0 +1,28 @@
+#!/usr/bin/env bash
+# Prints the design-size counts ROADMAP aim 2 tracks, for the tree under
+# the given directory (default: the repository this script lives in):
+#   - raw and code lines (non-blank, not a comment line) under src/main
+#   - SparkSession.builder sites and `def main(` entry points
+#   - commit*/reconcile*/rewrite entry points of IndexManifest (public
+#     or package-private)
+# Usage: tools/design_counts.sh [repo-dir]
+set -euo pipefail
+root="${1:-$(cd "$(dirname "$0")/.." && pwd)}"
+main="$root/src/main"
+manifest="$main/scala/graft/data/IndexManifest.scala"
+
+code_lines() {
+  # a comment line starts (after indentation) with //, /*, * or */
+  grep -hv -E '^[[:space:]]*($|//|/\*|\*)' "$@" | wc -l
+}
+
+files=$(find "$main" -name '*.scala' | sort)
+printf 'src_main_raw_lines          %s\n' "$(cat $files | wc -l)"
+printf 'src_main_code_lines         %s\n' "$(code_lines $files)"
+printf 'spark_session_builder_sites %s\n' "$(cat $files | grep -c 'SparkSession.builder' || true)"
+printf 'def_main_sites              %s\n' "$(cat $files | grep -c 'def main(' || true)"
+printf 'index_manifest_raw_lines    %s\n' "$(wc -l < "$manifest")"
+printf 'index_manifest_code_lines   %s\n' "$(code_lines "$manifest")"
+entry='^  (private\[graft\] )?def (commit|reconcile|rewrite)[A-Za-z]*'
+printf 'index_manifest_entry_points %s\n' "$(grep -cE "$entry" "$manifest" || true)"
+grep -oE "$entry" "$manifest" | sed -E 's/^ +(private\[graft\] )?def /  /'
