@@ -77,26 +77,72 @@ object Tables {
     * otherwise retain dead sessions and their plans forever), and a
     * memoized DataFrame that lost its cache entry (e.g. Verify's per-query
     * `spark.catalog.clearCache()`) is re-persisted on next use, so later
-    * timings in the same session stay representative. */
+    * timings in the same session stay representative. Each entry keeps
+    * the [[inputIdentity]] its frame was built from. */
+  private final case class Memo(df: DataFrame, identity: String)
+
   private val hotMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Memo]()
 
   /** Generic persisted-DataFrame memo for any session-scoped cacheable
     * build (also used by operators that materialize a derived working set,
     * e.g. `Dedup.semanticDedup`'s assigned corpus): one persist() per
-    * (session, key), dead sessions evicted, clearCache survivors
-    * re-armed. `build` need not call `.persist()` itself — the
+    * (session, key, input identity), dead sessions evicted, clearCache
+    * survivors re-armed. The key names a path, not its contents, so an
+    * entry answers only while its frame's [[inputIdentity]] is the one it
+    * was built from: a path rewritten in place unpersists the entry and
+    * rebuilds it. `build` need not call `.persist()` itself — the
     * storageLevel==NONE re-arm below persists the memoized frame on
     * first use and again after any clearCache. */
   def memoBy(spark: SparkSession, key: String)
             (build: => DataFrame): DataFrame = {
     hotMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val df = hotMemo.computeIfAbsent((spark, key), _ => build)
+    val k = (spark, key)
+    Option(hotMemo.get(k)).filter(m => inputIdentity(m.df) != m.identity)
+      .foreach(stale => if (hotMemo.remove(k, stale)) stale.df.unpersist())
+    val df = hotMemo.computeIfAbsent(k, _ => {
+      val built = build
+      Memo(built, inputIdentity(built))
+    }).df
     // storageLevel consults the session's cache manager: NONE means the
     // original persist() was undone by a clearCache — re-arm it (lazy; the
     // next action re-materializes).
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
     df
+  }
+
+  /** The INPUT IDENTITY of a plan, for session memos: every file under
+    * every root path of every file relation the plan reads (subqueries
+    * included), listed now, with its size and modification time, hashed.
+    * A plan hash or a memo key covers a path, not its contents; the
+    * identity changes when a path is rewritten in place. Driver-side
+    * FileSystem calls only, no Spark job; names starting with `_` or `.`
+    * are skipped, as Spark's file listing skips them. */
+  def inputIdentity(df: DataFrame): String = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    def describe(st: FileStatus) =
+      s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
+    def leaves(st: FileStatus): Seq[String] =
+      if (!st.isDirectory) Seq(describe(st))
+      else st.getPath.getFileSystem(conf).listStatus(st.getPath)
+        .filterNot(c => c.getPath.getName.startsWith("_") ||
+          c.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.toString).toSeq.flatMap(leaves)
+    val roots = df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths
+        case _ => Nil
+      }
+    }.flatten.distinct.sortBy(_.toString)
+    val files = roots.flatMap { p =>
+      try leaves(p.getFileSystem(conf).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => Seq(s"$p|missing") }
+    }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(files.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
   }
 
   private def memo(spark: SparkSession, dir: String, name: String)

@@ -889,6 +889,8 @@ object TrainQueries {
     * (max summed frequency, ties broken lexicographically), its count. */
   final case class BpeMerge(step: Int, lhs: String, rhs: String, cnt: Long)
 
+  /** The learned merge lists, per (session, input identity of the
+    * trained corpus) — see [[bpeTrainedWords]]. */
   private val trainMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Seq[BpeMerge]]()
 
@@ -1002,14 +1004,20 @@ object TrainQueries {
         .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       val (wf, merges) = trainMergeRounds(base)
-      trainMemo.put((spark, dir), merges)
+      trainMemo.put((spark, Tables.inputIdentity(wf)), merges)
       wf
     }
   }
 
+  /** The merge list trained from the corpus as it is now: the memo's
+    * trained table is rebuilt when the corpus was rewritten in place, and
+    * the list is looked up by that table's input identity, never by the
+    * directory name alone. */
   private def bpeMerges(spark: SparkSession, dir: String): Seq[BpeMerge] = {
-    bpeTrainedWords(spark, dir)
-    trainMemo.get((spark, dir))
+    val wf = bpeTrainedWords(spark, dir)
+    Option(trainMemo.get((spark, Tables.inputIdentity(wf)))).getOrElse(
+      throw new IllegalStateException(s"the corpus under $dir changed while " +
+        "its BPE model was trained"))
   }
 
   /** The learned merge list — the tokenizer TRAINING output

@@ -883,12 +883,17 @@ object IndexManifest {
     * partition column recovered from the directory layout
     * (`basePath`) — same scan node, same partition pruning, same
     * broadcast shapes as a directory read; only the file LISTING is
-    * pinned. Every manifest-pinned data read goes through here. */
+    * pinned. The files are known, so it is a [[graft.operators.KnownFiles]]
+    * read: one driver-side stat per file and no listing job, however many
+    * files the snapshot holds. Every manifest-pinned data read goes
+    * through here. */
   private[graft] def readFiles(spark: SparkSession, path: String,
                                files: Seq[String]): DataFrame = {
-    val (_, root) = fsOf(spark, path)
-    spark.read.option("basePath", root.toString)
-      .parquet(files.map(f => new Path(root, f).toString): _*)
+    val (fs, root) = fsOf(spark, path)
+    graft.operators.KnownFiles.read(spark,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      files.map(f => fs.getFileStatus(new Path(root, f))),
+      Map("basePath" -> root.toString))
   }
 
   /** The pinned data read: exactly the current manifest's files. Falls

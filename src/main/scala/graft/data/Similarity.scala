@@ -130,35 +130,20 @@ object Similarity {
     * coarse model four times) — memoizing the k×dim result removes
     * rounds × corpus passes per repeat fit at ANY scale. Values are
     * k × dim doubles; entries die with their session. The key carries
-    * the plan's INPUT IDENTITY — every file it reads, with size and
-    * modification time — because the plan hash covers a path, not its
-    * contents: a path rewritten in place must refit.
+    * the plan's [[graft.Tables.inputIdentity]] — every file it reads,
+    * with size and modification time — because the plan hash covers a
+    * path, not its contents: a path rewritten in place must refit.
     *
     * @return (cell: long, cvec: array<double>) — k rows. */
   private val fitMemo = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), Array[(Long, Seq[Double])]]()
-
-  private def inputIdentity(df: DataFrame): String = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val files = df.inputFiles.sorted.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st =
-        try Some(p.getFileSystem(conf).getFileStatus(p))
-        catch { case _: java.io.FileNotFoundException => None }
-      s"$f|${st.map(_.getLen).getOrElse(-1L)}|" +
-        st.map(_.getModificationTime).getOrElse(-1L)
-    }
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(files.mkString("\n").getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-  }
 
   def fitCentroids(corpus: DataFrame, k: Int, rounds: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0; got k=$k, rounds=$rounds")
     val spark = corpus.sparkSession
     val key = (spark, corpus.queryExecution.analyzed.semanticHash().toString +
-      s"|${inputIdentity(corpus)}|$k|$rounds|$idCol|$vecCol")
+      s"|${graft.Tables.inputIdentity(corpus)}|$k|$rounds|$idCol|$vecCol")
     val fitted = fitMemo.computeIfAbsent(key, _ => {
       fitMemo.keySet.removeIf(_._1.sparkContext.isStopped)
       val seedW = Window.orderBy(col(idCol)) // k rows post-limit: single tiny partition

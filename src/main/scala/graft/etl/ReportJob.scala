@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,33 +15,42 @@ import graft.operators.{Csv, Sanitize, UnionByName}
   */
 object ReportJob {
 
-  /** The write-side partitioning: hash-shuffle on the partition column,
-    * NOT coalesce(1) — each lender's rows land in one task → one file per
-    * lender, written in parallel across lenders (AQE may still coalesce
-    * tiny shuffles at toy scale; at real scale each lender keeps its own
-    * task). Rows are sorted WITHIN each partition to reproduce the
-    * reference query's ORDER BY inside every lender's file
-    * (run_exports_query.py writes the sorted query result per lender) —
-    * a global pre-sort would be destroyed by this repartitioning.
+  /** The write-side partitioning: hash-shuffle on the partition column
+    * into an EXPLICIT count — the session's `spark.sql.shuffle.partitions`
+    * — NOT coalesce(1). Each lender's rows land in one task, so each
+    * lender gets one file, and the lenders are spread over that many
+    * write tasks. The count must be explicit: AQE coalesces a
+    * repartition by column alone, and at report scale (a few thousand
+    * rows) it coalesced all 50 lenders into ONE task that wrote every
+    * file serially; a repartition to a number is left as asked. Rows are
+    * sorted WITHIN each partition to reproduce the reference query's
+    * ORDER BY inside every lender's file (run_exports_query.py writes the
+    * sorted query result per lender) — a global pre-sort would be
+    * destroyed by this repartitioning.
     * The sort LEADS with `report_lender`: `partitionBy("report_lender")`
     * makes FileFormatWriter require an ordering on the partition column,
     * and a sort that already satisfies it is reused as-is — otherwise the
     * writer plans its OWN sort on top and the intended per-file
     * (associated_lender, scenarioId) order would survive only via sort
-    * stability, which Spark does not document. Within one write partition
+    * stability, which Spark does not document. Within one lender
     * report_lender is constant, so the trailing keys still give the
     * reference's per-file order. Exposed so ReportJobSpec can assert the
     * plan shape. */
   def partitionedForWrite(report: DataFrame): DataFrame =
-    report.repartition(col("report_lender"))
+    report.repartition(
+        report.sparkSession.sessionState.conf.numShufflePartitions,
+        col("report_lender"))
       .sortWithinPartitions(
         col("report_lender"), col("associated_lender"), col("scenarioId"))
 
   /** Per-lender partitioned CSV write in the reference dialect
     * (run_exports_query.py:75-89): `outDir/report_lender=<lender>/…`,
     * tab-delimited, QUOTE_ALL, BOM, ''-null — the scalable
-    * dynamic-partition write ([[partitionedForWrite]]). */
-  def writePerLender(report: DataFrame, outDir: String): Unit = {
+    * dynamic-partition write ([[partitionedForWrite]]), then the BOM pass
+    * over the files it wrote.
+    *
+    * @return the per-lender files, BOM'd, with their statuses. */
+  def writePerLender(report: DataFrame, outDir: String): Seq[FileStatus] = {
     partitionedForWrite(report)
       .write
       .partitionBy("report_lender")
@@ -54,18 +64,19 @@ object ReportJob {
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ssxx")
       .mode("overwrite")
       .csv(outDir)
-    prependBomRecursive(report.sparkSession, outDir)
+    Csv.prependBom(report.sparkSession,
+      lenderFiles(report.sparkSession, outDir).map(_.getPath))
   }
 
-  private def prependBomRecursive(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    // Skip _-prefixed dirs (Hadoop-hidden: _quarantine, _SUCCESS-style) —
-    // only lender partition dirs carry CSVs that need the BOM.
-    fs.listStatus(p)
+  /** The per-lender files under `outDir`, listed on the driver: the part
+    * files of every lender directory. `_`-prefixed directories
+    * (`_quarantine`, Hadoop-hidden) carry no report CSVs. */
+  private def lenderFiles(spark: SparkSession, outDir: String): Seq[FileStatus] = {
+    val p = new Path(outDir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
       .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
-      .foreach { st => Csv.prependBom(spark, st.getPath.toString) }
+      .sortBy(_.getPath.toString)
+      .flatMap(st => Csv.partFiles(spark, st.getPath.toString)).toSeq
   }
 
   /** Per-lender failure isolation (reference: run_exports_query.py:241-242
@@ -89,15 +100,34 @@ object ReportJob {
     (view.where(!malformed), view.where(malformed))
   }
 
-  /** merge_all_lenders.py: glob-read every per-lender file as all-string,
-    * union by name, re-parse `time` leniently, write one consolidated
-    * file. */
-  def mergeAll(spark: SparkSession, outDir: String, resultDir: String): DataFrame = {
-    val merged = UnionByName.all(Seq(
-      Csv.readTabCsvAllString(spark, s"$outDir/*/*.csv")))
+  /** merge_all_lenders.py over the per-lender files under `outDir`
+    * (listed on the driver): see [[mergeFiles]]. */
+  def mergeAll(spark: SparkSession, outDir: String, resultDir: String): DataFrame =
+    mergeFiles(spark, lenderFiles(spark, outDir), resultDir)
+
+  /** merge_all_lenders.py: read every per-lender file as all-string,
+    * union by column NAME (merge_all_lenders.py:55), re-parse `time`
+    * leniently, write one consolidated file. Each file's header is read on
+    * the driver; files that share a header are read together with it as
+    * their all-string schema, and the groups are unioned by name, missing
+    * columns null — one read of every file would apply the first file's
+    * header to all of them by position. The files are known, so no read
+    * lists a directory or infers a header.
+    *
+    * @return the consolidated file, all-string, as written. */
+  private def mergeFiles(spark: SparkSession, files: Seq[FileStatus],
+                         resultDir: String): DataFrame = {
+    require(files.nonEmpty, "no per-lender report files to merge")
+    val headers = Csv.readHeaders(spark, files.map(_.getPath))
+    val groups = files.zip(headers).groupBy(_._2).toSeq
+      .map { case (header, fs) => (header, fs.map(_._1)) }
+      .sortBy { case (_, fs) => fs.map(_.getPath.toString).min }
+    val merged = UnionByName.all(groups.map { case (header, fs) =>
+        Csv.readKnownTabCsv(spark, fs.sortBy(_.getPath.toString), header)
+      })
       .withColumn("time", Sanitize.coerceTimestamp(col("time")))
-    Csv.writeTabCsv(merged, resultDir, singleFile = true)
-    Csv.readTabCsvAllString(spark, resultDir)
+    val written = Csv.writeTabCsv(merged, resultDir, singleFile = true)
+    Csv.readKnownTabCsv(spark, written, merged.columns.toSeq)
   }
 
   /** Full monthly run: quarantine split → report → per-lender CSVs →
@@ -108,8 +138,8 @@ object ReportJob {
           outDir: String, resultDir: String): DataFrame = {
     val (clean, quarantined) = splitQuarantine(view)
     val report = ExportsEtl.forAllLenders(clean, startDate, endDate)
-    writePerLender(report, outDir)
+    val files = writePerLender(report, outDir)
     quarantined.write.mode("overwrite").parquet(s"$outDir/_quarantine")
-    mergeAll(view.sparkSession, outDir, resultDir)
+    mergeFiles(view.sparkSession, files, resultDir)
   }
 }

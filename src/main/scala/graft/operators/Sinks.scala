@@ -1,6 +1,12 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.csv.{CSVFileFormat, CSVUtils}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
 /** The reference's Tableau-grade CSV I/O contract (S4/S5/S6/S7):
   * tab-delimited, QUOTE_ALL, UTF-8 with BOM, nulls as empty-quoted fields,
@@ -10,43 +16,100 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Csv {
 
+  /** The writer options of the reference dialect. */
+  private val WriteOptions = Map(
+    "sep" -> "\t", "header" -> "true", "quoteAll" -> "true",
+    "nullValue" -> "", "emptyValue" -> "\"\"", "escape" -> "\\",
+    "lineSep" -> "\n", "timestampFormat" -> "yyyy-MM-dd HH:mm:ssxx",
+    // NTZ columns (parquet timestamps without UTC adjustment) take the
+    // same human shape minus the meaningless offset.
+    "timestampNTZFormat" -> "yyyy-MM-dd HH:mm:ss")
+
   /** Write the reference per-lender/consolidated CSV shape. `singleFile`
-    * mirrors the reference's one-file-per-output contract (S7) via
-    * coalesce(1); leave false to keep one file per partition at scale.
-    * Spark cannot emit a BOM natively, so [[prependBom]] runs as a
-    * post-pass over the part files (driver-side, via Hadoop FileSystem, so
-    * it works on distributed filesystems too).
-    */
+    * gives the reference's one-file-per-output contract (S7): the
+    * partitions are written in parallel without headers and joined on
+    * the driver behind one header, in partition order — the file
+    * coalesce(1) would write, without funnelling the whole input through
+    * one task. Leave false to keep one file per partition at scale.
+    * Spark cannot emit a BOM natively, so the BOM is prepended on the
+    * driver, in the same pass as the join (driver-side via the Hadoop
+    * FileSystem, so it works on distributed filesystems too).
+    *
+    * @return the written files with their statuses. */
   def writeTabCsv(df: DataFrame, path: String, singleFile: Boolean = false,
-                  bom: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write
-      .option("sep", "\t")
-      .option("header", true)
-      .option("quoteAll", true)
-      .option("nullValue", "")
-      .option("emptyValue", "\"\"")
-      .option("escape", "\\")
-      .option("lineSep", "\n")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ssxx")
-      // NTZ columns (parquet timestamps without UTC adjustment) take the
-      // same human shape minus the meaningless offset.
-      .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
-      .mode("overwrite")
-      .csv(path)
-    if (bom) prependBom(df.sparkSession, path)
+                  bom: Boolean = true): Seq[FileStatus] = {
+    df.write.options(WriteOptions + ("header" -> (!singleFile).toString))
+      .mode("overwrite").csv(path)
+    val spark = df.sparkSession
+    if (singleFile) Seq(joinParts(spark, path, df.schema, bom))
+    else if (bom) prependBom(spark, partFiles(spark, path).map(_.getPath))
+    else partFiles(spark, path)
   }
 
   private val Bom: Array[Byte] = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
 
-  /** Prepend the UTF-8 BOM to every part file under `path`. */
-  def prependBom(spark: SparkSession, path: String): Unit = {
+  /** The part files a write left directly under `dir`, sorted by path —
+    * for Spark's `part-NNNNN-…` names, by partition. */
+  def partFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getPath.toString)
+      .toSeq
+  }
+
+  /** Join the header-less part files under `dir` into its first part
+    * file: the optional BOM, the header Spark's CSV writer renders for
+    * `schema` in the reference dialect, then every part in partition
+    * order. */
+  private def joinParts(spark: SparkSession, dir: String, schema: StructType,
+                        bom: Boolean): FileStatus = {
+    val header = new java.io.StringWriter
+    val gen = new UnivocityGenerator(schema, header, new CSVOptions(
+      WriteOptions, false, spark.sessionState.conf.sessionLocalTimeZone))
+    gen.writeHeaders()
+    gen.flush()
+    val parts = partFiles(spark, dir).map(_.getPath)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = parts.headOption.getOrElse(
+      new Path(dir, "part-00000-joined.csv"))
+    val tmp = new Path(dir, s"${target.getName}.joined")
+    val out = fs.create(tmp, true)
+    try {
+      if (bom) out.write(Bom)
+      out.write(header.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      parts.foreach { p =>
+        val in = fs.open(p)
+        try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
+        finally in.close()
+      }
+    } finally out.close()
+    parts.foreach(fs.delete(_, false))
+    fs.rename(tmp, target)
+    fs.getFileStatus(target)
+  }
+
+  /** `f` over `items` on a driver pool of min(items, available
+    * processors) threads; results in the order of `items`. */
+  private def onDriverPool[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    val threads = math.min(items.size, Runtime.getRuntime.availableProcessors)
+    if (threads <= 1) items.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try items.map(a => pool.submit(() => f(a))).map(_.get)
+      finally pool.shutdown()
+    }
+  }
+
+  /** Prepend the UTF-8 BOM to each of `files` (a copy behind the BOM,
+    * then a rename over the original), concurrently on a driver pool —
+    * driver-side via the Hadoop FileSystem, so it works on distributed
+    * filesystems too. Returns each rewritten file's status (one stat per
+    * file), in the order of `files`. */
+  def prependBom(spark: SparkSession, files: Seq[Path]): Seq[FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).filter(_.getPath.getName.startsWith("part-")).foreach { st =>
-      val src = st.getPath
-      val tmp = new org.apache.hadoop.fs.Path(src.getParent, src.getName + ".bom")
+    onDriverPool(files) { src =>
+      val fs = src.getFileSystem(conf)
+      val tmp = new Path(src.getParent, src.getName + ".bom")
       val in = fs.open(src)
       val outS = fs.create(tmp, true)
       try {
@@ -55,18 +118,45 @@ object Csv {
       } finally { in.close(); outS.close() }
       fs.delete(src, false)
       fs.rename(tmp, src)
+      fs.getFileStatus(src)
     }
   }
+
+  /** The reader options of the reference dialect: tab-separated, header
+    * line, backslash escape, no type inference. */
+  private val ReadOptions = Map("sep" -> "\t", "header" -> "true",
+    "inferSchema" -> "false", "escape" -> "\\")
 
   /** S6: read a glob of CSVs with an all-string schema (pandas
     * `dtype=str`): no inference, empty fields → null. */
   def readTabCsvAllString(spark: SparkSession, glob: String): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("header", true)
-      .option("inferSchema", false)
-      .option("escape", "\\")
-      .csv(glob)
+    spark.read.options(ReadOptions).csv(glob)
+
+  /** The headers of files in the reference dialect, read on the driver
+    * pool: Spark's own first-line read, the BOM stripped, then parsed and
+    * made safe as Spark's CSV header inference does — the names
+    * [[readTabCsvAllString]] would infer from each file, without a job. */
+  def readHeaders(spark: SparkSession, files: Seq[Path]): Seq[Seq[String]] = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(ReadOptions, false, conf.sessionLocalTimeZone)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    onDriverPool(files) { file =>
+      val line = CSVUtils.readHeaderLine(file, opts, hadoopConf)
+        .getOrElse(throw new IllegalArgumentException(s"$file has no header line"))
+        .stripPrefix("\uFEFF")
+      val row = new com.univocity.parsers.csv.CsvParser(opts.asParserSettings)
+        .parseLine(line)
+      CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, opts).toSeq
+    }
+  }
+
+  /** [[readTabCsvAllString]] over files the caller already holds, all of
+    * whose headers are `columns`: a [[KnownFiles]] read, so it lists no
+    * files and infers no header — no Spark job until an action. */
+  def readKnownTabCsv(spark: SparkSession, files: Seq[FileStatus],
+                      columns: Seq[String]): DataFrame =
+    KnownFiles.read(spark, new CSVFileFormat, files, ReadOptions,
+      Some(StructType(columns.map(StructField(_, StringType)))))
 
   /** S5: the reference's write-then-re-read validation — header equality
     * and first-row arity (run_exports_query.py:91-104). Returns the list of
@@ -80,6 +170,58 @@ object Csv {
     if (back.head(1).exists(_.length != expectedColumns.length))
       problems += "first-row arity mismatch"
     problems.toSeq
+  }
+}
+
+/** A file-source read of files the caller already holds — a write just
+  * produced them, or a manifest pins them. It builds Spark's own
+  * `InMemoryFileIndex` over a status cache pre-filled with `files`, so
+  * planning lists nothing (no parallel-listing job past Spark's 32-path
+  * threshold), and with a `schema` it infers nothing either. The relation
+  * is built the way `DataSource.resolveRelation` builds one — nullable
+  * data schema, case-insensitive options, partition columns discovered
+  * from the paths (`basePath` in `options`) — so the scan node is the one
+  * `spark.read.format(..).options(options).load(paths)` plans. `files`
+  * must carry qualified paths, as `FileSystem.getFileStatus` and
+  * `listStatus` return them. */
+object KnownFiles {
+  def read(spark: SparkSession, format: FileFormat, files: Seq[FileStatus],
+           options: Map[String, String],
+           schema: Option[StructType] = None): DataFrame = {
+    require(files.nonEmpty, "a known-files read needs at least one file")
+    val byPath = files.map(st => st.getPath -> Array(st)).toMap
+    val known = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        byPath.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), options,
+      schema, known)
+    val caseInsensitive = CaseInsensitiveMap(options)
+    val partitionSchema = index.partitionSchema
+    val resolver = spark.sessionState.conf.resolver
+    val dataSchema = schema
+      .map(s => StructType(s.filterNot(f =>
+        partitionSchema.exists(p => resolver(p.name, f.name)))))
+      .orElse(format.inferSchema(spark, caseInsensitive, index.allFiles()))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no schema given or inferable for ${files.head.getPath} and " +
+          s"${files.size - 1} more files"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      asNullable(dataSchema).asInstanceOf[StructType], None, format,
+      caseInsensitive)(spark))
+  }
+
+  /** Spark's `DataType.asNullable` (internal to Spark): every field,
+    * element and map value nullable, at every depth. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 }
 

@@ -794,40 +794,8 @@ class DataOpsSpec extends AnyFunSuite {
     assert(Dedup.compactIndex(spark, path, maxFilesPerShard = 1)._1 == 0)
   }
 
-  /** Spark jobs started by `body`, counted by a listener between two
-    * marker jobs — the listener bus is FIFO, so the closing marker's
-    * start event proves every job of `body` was delivered. */
-  private def jobsRun(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"jobs-run-${java.util.UUID.randomUUID()}"
-    val counting = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val closed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.job.description"))
-          .filter(_ != null) match {
-          case Some(d) if d == s"$tag-open" => counting.set(true)
-          case Some(d) if d == s"$tag-close" =>
-            counting.set(false); closed.countDown()
-          case _ => if (counting.get) n.incrementAndGet(): Unit
-        }
-    }
-    def marker(d: String): Unit = {
-      sc.setJobDescription(d)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(s"$tag-open")
-      body
-      marker(s"$tag-close")
-      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus never delivered the closing marker")
-      n.get
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started by `body` (see [[JobTasks]]). */
+  private def jobsRun(body: => Unit): Int = JobTasks(spark)(body).size
 
   test("compactIndex rewrites every over-full shard in one write job: 16 " +
       "over-full shards cost the same jobs as 4, each ends with one file, " +
@@ -897,6 +865,68 @@ class DataOpsSpec extends AnyFunSuite {
     val after = fit()
     assert(after.forall(_._2.forall(_ > 90.0)),
       s"the memo answered with centroids of the overwritten input: $after")
+  }
+
+  test("Tables.memoBy rebuilds a path rewritten in place") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_memo_by")
+    val p = tmp.resolve("t").toString
+    // another writer replaces the directory: this session's writer would
+    // also refresh its cached plans over the path, which hides a stale memo
+    def write(ids: Seq[Long]): Unit = {
+      val staged = tmp.resolve(s"staged-${ids.head}")
+      ids.toDF("id").write.parquet(staged.toString)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
+      java.nio.file.Files.move(staged, tmp.resolve("t")): Unit
+    }
+    def memoIds() = Tables.memoBy(spark, s"memo-rewrite:$p")(
+      spark.read.parquet(p)).as[Long].collect().sorted.toSeq
+    write(1L to 5L)
+    assert(memoIds() == (1L to 5L))
+    // same path, same key, same plan hash; the input files are new
+    write(11L to 13L)
+    assert(memoIds() == (11L to 13L),
+      "the memo answered with the frame of the overwritten input")
+    assert(memoIds() == (11L to 13L))
+  }
+
+  test("data_bpe_train's merge-list memo retrains a corpus rewritten in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_memo").toString
+    def write(text: String): Unit =
+      (1L to 6L).map(i => (i, text)).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def firstMerge() = Registry.byName("data_bpe_train").build(spark, dir)
+      .select("lhs", "rhs").as[(String, String)].collect().head
+    write("ab ab ab abc")
+    assert(firstMerge() == ("a", "b"))
+    write("xy xy xy xyz")
+    assert(firstMerge() == ("x", "y"),
+      "the merge list of the overwritten corpus was served")
+  }
+
+  test("a manifest snapshot past 32 files reads its rows with no more jobs " +
+      "than a 16-file one") {
+    import graft.data.IndexManifest
+    val path = java.nio.file.Files.createTempDirectory("graft_idx_many")
+      .resolve("cells").toString
+    def batch(tag: String) = Dedup.cellHashes(
+      (1L to 80L).map(i => (i, s"$tag$i b$tag$i c$tag$i d$tag$i"))
+        .toDF("doc_id", "text"), "doc_id", "text", 2)
+    Dedup.writeCellIndex((1L to 80L).map(i => (i, s"a$i b$i c$i d$i"))
+      .toDF("doc_id", "text"), "doc_id", "text", 2, path)
+    def files = IndexManifest.load(spark, path).get.dataFiles.size
+    def read() = IndexManifest.readData(spark, path)
+      .orderBy("cell_hash").collect().toSeq
+    assert(files == 16, "the build must fill every shard")
+    val jobs16 = jobsRun(read(): Unit)
+    Seq("p", "q").foreach(t => Dedup.appendCellIndex(batch(t), path))
+    assert(files >= 40, s"appends must grow the snapshot past 32 files: $files")
+    val jobsMany = jobsRun(read(): Unit)
+    assert(jobsMany <= jobs16, s"$files files ran $jobsMany jobs, 16 ran " +
+      s"$jobs16 — the pinned read must not list its known files")
+    // the same rows a directory read of the index finds, shard included
+    assert(read() == spark.read.parquet(path).orderBy("cell_hash")
+      .select(IndexManifest.readData(spark, path).columns.map(col): _*)
+      .collect().toSeq)
   }
 
   test("manifest snapshot isolation: a reader sees exactly the pre- or " +

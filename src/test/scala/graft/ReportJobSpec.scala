@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.ReportJob
-import graft.operators.Skew
+import graft.operators.{Csv, Skew}
 
 /** End-to-end report job over the golden fixture + skew operators. */
 class ReportJobSpec extends AnyFunSuite {
@@ -34,10 +34,11 @@ class ReportJobSpec extends AnyFunSuite {
       assert(head == Seq(0xEF.toByte, 0xBB.toByte, 0xBF.toByte), d)
     }
 
-    // the write input is hash-partitioned on report_lender (parallel per
-    // lender at scale) — not collapsed to a single partition. AQE may
-    // coalesce the toy fixture's shuffle at runtime, so assert the PLAN:
-    // a repartition-by-expression on report_lender, and no Repartition(1)
+    // the write input is hash-partitioned on report_lender into an
+    // explicit partition count (parallel across lenders; the runtime
+    // task spread is asserted by the many-lender case below) — not
+    // collapsed to a single partition. Assert the PLAN: a
+    // repartition-by-expression on report_lender, and no Repartition(1)
     // on the MAIN ROW STREAM. Broadcast-hinted join sides are excluded:
     // those relations are collected to the driver for broadcast anyway, so
     // a bounded-side coalesce(1) there (purpose counts, lender list) is a
@@ -108,6 +109,75 @@ class ReportJobSpec extends AnyFunSuite {
     val expected = graft.etl.ExportsEtl
       .forAllLenders(fixture.viewForJob, "2024-01-01", "2025-01-01").count()
     assert(merged.count() == expected)
+  }
+
+  /** A view where each of `n` lenders is exported for its own scenario:
+    * every lender gets a report (one row per surviving scenario). */
+  private def manyLenderView(n: Int) = (1 to n).map { i =>
+    val lender = f"l$i%02d"
+    ExportsViewRow(java.sql.Timestamp.valueOf("2024-03-01 10:00:00"), s"s$i",
+      s"""[{"lenderName":"$lender","doesService":true,""" +
+        s""""maxBorrowingCapacity":"800000","performance":""" +
+        """{"lenderPassedServicing":"true","lenderExportWinner":"true"}}]""",
+      Some(lender), "PAYG", "Fixed", "Purchase", Some(100.0 * i), Some(2L),
+      Some(1L), "Purchase", Some(0L), Some(0.8), "70-80", Some(0L),
+      Some(120000.0), Some(500.0), Some(0.0), isValidExport = true)
+  }.toDF()
+
+  test("the per-lender write spreads over the shuffle partitions, and the " +
+      "merge of past-32 known files lists nothing and infers no header") {
+    val tmp = Files.createTempDirectory("graft_report_shape").toString
+    val out = s"$tmp/output"
+    val report = graft.etl.ExportsEtl.forAllLenders(manyLenderView(40),
+      "2024-01-01", "2025-01-01")
+    val files = ReportJob.writePerLender(report, out)
+    assert(files.size == 40, "one file per lender")
+    // part-NNNNN is the write task's partition: one task wrote them all
+    // when AQE coalesced the write's shuffle
+    val writeTasks = files.map(_.getPath.getName.take(10)).distinct
+    assert(writeTasks.size > 1,
+      s"every per-lender file came from one write task: $writeTasks")
+
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    var merged: org.apache.spark.sql.DataFrame = null
+    val mergeJobs = JobTasks(spark) {
+      merged = ReportJob.mergeAll(spark, out, s"$tmp/result")
+    }
+    assert(mergeJobs.forall(_ <= partitions),
+      s"mergeAll ran jobs of $mergeJobs tasks, more than $partitions " +
+        "(a parallel listing of the per-lender files)")
+    assert(merged.count() == report.count())
+
+    // the header read on the driver is the one Spark infers from the same
+    // BOM'd file
+    val file = files.head.getPath
+    assert(Files.readAllBytes(Paths.get(file.toUri)).take(3).toSeq ==
+      Seq(0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
+    val inferred = Csv.readTabCsvAllString(spark, file.toString).columns.toSeq
+    assert(Csv.readHeaders(spark, Seq(file)) == Seq(inferred))
+    assert(inferred == report.columns.filterNot(_ == "report_lender").toSeq)
+  }
+
+  test("mergeAll aligns per-lender files by column name, missing columns null") {
+    val tmp = Files.createTempDirectory("graft_merge_names").toString
+    val out = s"$tmp/output"
+    def lender(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      Csv.writeTabCsv(df, s"$out/report_lender=$name", singleFile = true): Unit
+    lender("a", Seq(("2024-01-01 00:00:00", "a1", "x1"))
+      .toDF("time", "scenarioId", "extra"))
+    // reordered columns
+    lender("b", Seq(("b1", "x2", "2024-01-02 00:00:00"))
+      .toDF("scenarioId", "extra", "time"))
+    // one column missing
+    lender("c", Seq(("c1", "2024-01-03 00:00:00")).toDF("scenarioId", "time"))
+    val merged = ReportJob.mergeAll(spark, out, s"$tmp/result")
+    assert(merged.columns.toSeq == Seq("time", "scenarioId", "extra"))
+    val rows = merged.orderBy("scenarioId").as[(String, String, String)]
+      .collect().toSeq
+    assert(rows == Seq(
+      ("2024-01-01 00:00:00+0000", "a1", "x1"),
+      ("2024-01-02 00:00:00+0000", "b1", "x2"),
+      ("2024-01-03 00:00:00+0000", "c1", null)))
   }
 
   test("saltedCounts equals plain groupBy count") {
