@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract).
@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    optimization, physical planning, and the FULL execution — a
   *    DataFrameWriter action creates a fresh QueryExecution with fresh
   *    RDDs, so no shuffle output or stage is reused across iterations
-  *    (verified by listener: stage/task counts are identical every
-  *    iteration; see BenchProbe). Build time is measured and reported per
+  *    (verified with a SparkListener: stage and task counts are identical
+  *    every iteration). Build time is measured and reported per
   *    query (`build` map + `build_total`), after a one-shot session
   *    pre-touch (tiny SQL + noop write) that absorbs the first-use
   *    class-loading/codegen cost that otherwise lands on whichever query
@@ -51,9 +51,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Expect the FIRST rep of every block (indices ≡ 0 mod [[BlockReps]])
   *    to run 2-3× the block's steady state: it pays the explicit
   *    System.gc() issued at block start plus re-warming CPU caches / JIT
-  *    code locality after every other query's block ran in between. An
-  *    isolated-session probe (E2eProbe: per-rep GC ≤ 40 ms, uncorrelated
-  *    with wall time) rules out GC pressure from the query itself;
+  *    code locality after every other query's block ran in between. In
+  *    an isolated session per-rep GC stayed ≤ 40 ms, uncorrelated with
+  *    wall time, which rules out GC pressure from the query itself;
   *    within-block steady-state max/min is < 1.3 for every headline
   *    query. min-of-all-reps therefore reads the steady state, and the
   *    block-start outliers in `reps` are methodology, not the query.
@@ -70,30 +70,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE OFF for the bench session: every headline query is sub-second
-      // at bench scale and its shuffle sizing is already explicit (32
-      // partitions = cores), so AQE's per-stage driver re-plan round-trips
-      // are pure overhead — measured +26% on the 7-query total at sf0.1
-      // (5.25 s → 4.16 s). Production sessions at real scale keep AQE on
-      // (skew-join splitting, runtime broadcast); the static planner still
-      // picks broadcast joins here from parquet size stats.
-      .config("spark.sql.adaptive.enabled", "false")
-      // ObjectHashAggregate (ArgMaxFields, collect_list) falls back to
-      // sort-based aggregation once a task's in-memory hash map reaches
-      // this many groups; the Spark default (128) was tuned for huge
-      // collect_list buffers and kicks in far too early for fixed-size
-      // argmax buffers. 64k groups × ~1 KB buffer ≈ 64 MB/task worst
-      // case — comfortably inside executor memory, and past that the
-      // sort-based fallback is the correct safety valve at 100 TB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.envCores(32), aqe = false)
 
     // One-time session setup, outside any timed region.
     graft.functions.VectorFunctions.register(spark)

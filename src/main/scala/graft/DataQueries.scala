@@ -832,7 +832,7 @@ object DataQueries {
     // loop (driver actions at build time), so a second call would run
     // the whole LSH-candidates + label-propagation chain again —
     // measured 10 labelSum jobs / 2 full component runs per fate build
-    // before this reuse (JobProbe, sf0.01).
+    // before this reuse (sf0.01).
     val cqFull = componentQuality(spark, dir)
     val cq = cqFull
       .select(col("doc_id"), col("component"), col("score"), col("n_low"))
@@ -1425,14 +1425,17 @@ object DataQueries {
 
   /** OPQ rotation memo: the Householder vector is a bounded model
     * artifact derived from a multi-round power iteration — collect it
-    * once per (session, dir), like [[trainMemo]]'s merge lists. */
+    * once per (session, corpus), like [[trainMemo]]'s merge lists. The
+    * key is the corpus's [[Tables.inputIdentity]], not its directory:
+    * embeddings rewritten in place must be rotated by their own vector. */
   private val opqMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Array[Double]]()
 
   private def opqU(spark: SparkSession, dir: String): Array[Double] = {
     opqMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    opqMemo.computeIfAbsent((spark, dir), _ =>
-      Similarity.opqHouseholder(Tables.embeddingsHot(spark, dir), rounds = 3))
+    val hot = Tables.embeddingsHot(spark, dir)
+    opqMemo.computeIfAbsent((spark, Tables.inputIdentity(hot)), _ =>
+      Similarity.opqHouseholder(hot, rounds = 3))
   }
 
   /** PQ in the OPQ-rotated space at the SAME (m, k, rounds) code budget
@@ -1557,7 +1560,7 @@ object DataQueries {
     * the dump sort. The HOF definition ([[TextAnalysis.ngramRepStats]])
     * is O(distinct × total) interpreted lambdas (measured 100 s at
     * sf0.1); [[ngramCoverageDistributed]] is the three-shuffle aggregate
-    * shape that spills for multi-MB pathological documents. Probe: HOF
+    * shape that spills for multi-MB pathological documents. Measured: HOF
     * 100 s → distributed 3.2 s → this 0.5 s class at sf0.1. All three
     * forms are bit-identical (DataOpsSpec parity). */
   private def ngramCoverage(spark: SparkSession, dir: String): DataFrame = {
@@ -2608,25 +2611,19 @@ object DataQueries {
     * no shuffle of the corpus. The best-match pick is max(struct) — a
     * map-side-combinable argmax, deterministic via the negated-id
     * tiebreak. */
-  /** The per-doc signature plan of the fuzzy decontaminator — ONE
-    * definition shared with [[graft.FuzzyProbe]] so the probe's numbers
-    * can never drift from the query they justify. */
-  private[graft] def fuzzySigPlan(spark: SparkSession, dir: String): DataFrame =
-    Tables.documentsHot(spark, dir)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        Dedup.minhashSig(TextAnalysis.shingles(col("toks"), 3), K).as("sig"))
-
   private def decontaminateFuzzy(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.ArrEqCountFunctions.register(spark)
     // Memo-persist BARRIER below the ×|eval| expand: inlined, the
     // tokenize→shingle→minhash projection collapses into the join output
-    // and re-evaluates once PER PAIR — FuzzyProbe measured the sig scan
+    // and re-evaluates once PER PAIR — measured: the sig scan
     // at 2.4 s vs 33-38 s for the joined scoring at sf10 (the round-7
     // media fan-out pathology, caught again here). The barrier makes the
     // expand read cached signatures. (Plan built outside the memo call —
     // a by-name build that itself memoizes nests computeIfAbsent.)
-    val sigsPlan = fuzzySigPlan(spark, dir) // built OUTSIDE the by-name memo
+    val sigsPlan = Tables.documentsHot(spark, dir) // OUTSIDE the by-name memo
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
+      .select(col("doc_id"),
+        Dedup.minhashSig(TextAnalysis.shingles(col("toks"), 3), K).as("sig"))
     val sigs = Tables.memoBy(spark, s"fuzzysigs:$dir")(sigsPlan)
     val evalSigs = sigs.where(col("doc_id") < 10)
       .select(col("doc_id").as("eval_id"), col("sig").as("esig"))

@@ -147,10 +147,10 @@ object MediaQueries {
     * ONCE instead of quadratically. Candidates come ONLY from an
     * equi-join on (band, 14-bit band value) routed through the
     * [[HotBandCap]] guard (never an all-pairs comparison); the exact
-    * Hamming distance is one XOR + popcount per candidate. The
-    * `ImageSkewProbe` measures the collapse + cap under a 10k-identical-
-    * image corpus. Shared by the pair dump and the cluster query. */
-  private[graft] def repPairs(spark: SparkSession, dir: String): DataFrame = {
+    * Hamming distance is one XOR + popcount per candidate. Under a
+    * 10k-identical-image corpus the collapse took 203M naive candidates
+    * to 2. Shared by the pair dump and the cluster query. */
+  private def repPairs(spark: SparkSession, dir: String): DataFrame = {
     val ph = hashedImages(spark, dir).select(col("phash")).distinct()
     val banded = ph.select(col("phash"),
         explode(array((0 until HamBands).map(b =>
@@ -329,7 +329,7 @@ object MediaQueries {
 
   /** JPEG roundtrip bands: fixed encode quality plus the error
     * tolerances the query's booleans embed. Measured at q=90 over the
-    * text-derived pixels (JpegProbe): max per-pixel |err| = 21 and max
+    * text-derived pixels: max per-pixel |err| = 21 and max
     * per-doc mean drift = 0.43 across 500k docs at sf10 — the bands sit
     * 3–5× above (the sketch-approx convention), so a near-threshold doc
     * flipping one engine's boolean is implausible at any SF. */
@@ -375,7 +375,7 @@ object MediaQueries {
     * subsampling (the JDK writer applies it at EVERY quality) actually
     * preserves: LUMA stays full-resolution — measured max per-pixel
     * luma error 20 at q=90 over the packed text-derived pixels
-    * (JpegProbe rgb mode), band 3× above — while per-pixel CHROMA of
+    * (RGB mode), band 3× above — while per-pixel CHROMA of
     * noise-like synthetic pixels is structurally destroyed (measured
     * max per-channel error 194 — a per-pixel channel band would be
     * vacuous at any honest setting), so chroma is asserted in

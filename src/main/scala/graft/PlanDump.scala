@@ -2,14 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round plan snapshotter:
   * `runMain graft.PlanDump <sfDir> <outDir> <suffix> <name>[,name...]`
   * writes `<outDir>/<name>_<suffix>.txt` with the FORMATTED physical plan
   * of each registered query — the before/after evidence files the round
-  * deliverables require (`plans/r15/<query>_before.txt` etc.). Session
-  * config mirrors the bench session (AQE off, shuffle partitions = 32)
+  * deliverables require (`plans/r15/<query>_before.txt` etc.). The
+  * session is the bench's (AQE off, `SPARK_GRAFT_CPUS` cores, default 32)
   * so the dumped plan is the one the bench times. Not part of the driver
   * contract.
   */
@@ -20,15 +18,7 @@ object PlanDump {
     val suffix = args.lift(2).getOrElse("before")
     val names = args.lift(3).map(_.split(",").toSeq)
       .getOrElse(Registry.headlines.map(_._1))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.start(Sessions.envCores(32), aqe = false)
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.VectorFunctions.register(spark)
     Files.createDirectories(Paths.get(outDir))

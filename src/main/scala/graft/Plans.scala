@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `.explain` (SimpleMode) for one query per plan
   * family, with the audit notes each plan must keep satisfying. Run
   * `sbt "runMain graft.Plans"` after changing any of the audited builders.
@@ -271,7 +269,7 @@ object Plans {
       |  (InMemoryTableScan, hashed once) collapses through a distinct
       |  BEFORE banding, so an identical-image mega-cluster — which
       |  shares all four band values — enters the candidate join ONCE
-      |  (`ImageSkewProbe`: 203M naive candidates → 2), and
+      |  (measured: 203M naive candidates → 2), and
       |  `capHotBuckets` on (band, bv) drops non-discriminative hot
       |  bands. Candidates come from the (band, band-value) EQUI-join —
       |  never an image×image comparison — the exact Hamming check is one
@@ -399,7 +397,7 @@ object Plans {
       |  expand), never a corpus shuffle. The corpus side below the join
       |  must be an InMemoryTableScan of the SIGNATURE memo — with the
       |  sig projection inlined, the expand re-evaluates
-      |  tokenize→shingle→minhash once per pair (FuzzyProbe: 2.4 s scan
+      |  tokenize→shingle→minhash once per pair (measured: 2.4 s scan
       |  vs 33–38 s joined at sf10; barrier = 0.60 s), and the compare is
       |  the compiled arr_eq_count, not an interpreted zip_with.
       |- **data_unigram_em** — both Viterbi rounds are per-row HOF folds
@@ -666,20 +664,13 @@ object Plans {
       |
       |Every O(corpus) global computation in the repo (global aggregates,
       |percentiles, as-of alignment) goes through aggregate + broadcast
-      |crossJoin or a partitioned window — the W1 pattern. Probes
-      |(`CmsProbe`) are measurement tools outside the query paths.
+      |crossJoin or a partitioned window — the W1 pattern.
       |""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.start(4, aqe = false)
     spark.sparkContext.setLogLevel("ERROR")
     val sections = Audited.map { name =>
       val q = Registry.all.find(_._1 == name)

@@ -296,18 +296,7 @@ object RefQueries {
     a.unionByName(b, allowMissingColumns = true).dumpOrdered("name")
   }
 
-  /** Headline aggregate in the reference's A-group shape over the bench
-    * fact table. Sums are exact and cross-engine hash-identical but stay on
-    * the fast codegen path: 2-decimal doubles are scaled to integer cents
-    * (long), summed as longs (whole-stage codegen, no BigDecimal), and only
-    * the final 6 group rows are converted — to DOUBLE, the cross-engine
-    * output type (exact: the long sums stay below 2^53, and long→double plus
-    * one correctly-rounded division matches DuckDB's decimal→double cast;
-    * DECIMAL output would diverge in precision — Spark (18,2)/(28,4) vs
-    * DuckDB's sum-widened (38,2)/(38,4) — and fail the driver's
-    * representation-sensitive hash). */
-  /** The cents-scaled aggregate alone — shared with `Q1Probe` so the
-    * probe always times the SHIPPED computation.
+  /** The cents-scaled aggregate alone, over any lineitem source.
     *
     * Cents scaling is the FLOOR FORM `(x·100 + 0.5)::long`, not
     * `round(x·100)`: Spark's `Round` routes every double through a
@@ -322,7 +311,7 @@ object RefQueries {
     * the real lineitem measures"), and the DuckDB oracle's native round()
     * differential re-proves at every SF. Negative measures would need
     * the round form back (floor(v+0.5) rounds -2.5 toward +∞). */
-  private[graft] def q1AggBody(src: DataFrame): DataFrame = {
+  private def q1AggBody(src: DataFrame): DataFrame = {
     def cents(c: org.apache.spark.sql.Column) =
       (c * 100 + lit(0.5)).cast("long")
     val qtyC = cents(col("l_quantity"))
@@ -336,6 +325,16 @@ object RefQueries {
         count(lit(1)).as("count_order"))
   }
 
+  /** Headline aggregate in the reference's A-group shape over the bench
+    * fact table. Sums are exact and cross-engine hash-identical but stay on
+    * the fast codegen path: 2-decimal doubles are scaled to integer cents
+    * (long), summed as longs (whole-stage codegen, no BigDecimal), and only
+    * the final 6 group rows are converted — to DOUBLE, the cross-engine
+    * output type (exact: the long sums stay below 2^53, and long→double plus
+    * one correctly-rounded division matches DuckDB's decimal→double cast;
+    * DECIMAL output would diverge in precision — Spark (18,2)/(28,4) vs
+    * DuckDB's sum-widened (38,2)/(38,4) — and fail the driver's
+    * representation-sensitive hash). */
   private def q1Agg(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     q1AggBody(Tables.lineitemHot(spark, dir))
       .select(col("l_returnflag"), col("l_linestatus"),
@@ -357,8 +356,8 @@ object RefQueries {
     * aggregate (including the otherwise codegen-able count) dropped to
     * the interpreted ObjectHashAggregate path. Split, each pass stays
     * single-width and the distinct pass keeps codegen; measured 6.2×
-    * on the sibling approx query (SketchAggProbe, values
-    * bit-identical; the join key is the ≤3-row status domain). */
+    * on the sibling approx query (values bit-identical; the join key
+    * is the ≤3-row status domain). */
   private def sketchStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
     val pct = orders.groupBy(col("o_orderstatus"))

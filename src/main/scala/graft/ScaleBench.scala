@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-probe runner (VERDICT r5 #3): times the headline queries plus the
   * LSH/dedup family on an arbitrary SF directory (the ScaleGen ~sf1 copy,
@@ -83,23 +83,15 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // Split sizing for the probe hardware (the brief's "size
-      // maxPartitionBytes to the target SF"): the probe tables top out
-      // ~1 GB, so the 128 MB default yields ~9 scan tasks on 32 cores —
-      // the scan-bound queries (q1-class) leave 2/3 of the machine idle.
-      // 32 MB ≈ bytes/(2-3×cores) at sf10 (measured: q1 1.04 → 0.62 s);
-      // a real 100 TB cluster keeps the default — thousands of tasks
-      // come free there.
-      .config("spark.sql.files.maxPartitionBytes", "32MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.envCores(32), aqe = false)
+    // Split sizing for the probe hardware (the brief's "size
+    // maxPartitionBytes to the target SF"): the probe tables top out
+    // ~1 GB, so the 128 MB default yields ~9 scan tasks on 32 cores —
+    // the scan-bound queries (q1-class) leave 2/3 of the machine idle.
+    // 32 MB ≈ bytes/(2-3×cores) at sf10 (measured: q1 1.04 → 0.62 s);
+    // a real 100 TB cluster keeps the default — thousands of tasks
+    // come free there.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "32MB")
     graft.functions.VectorFunctions.register(spark)
 
     val names = sys.env.get("SPARK_GRAFT_QUERIES") match {

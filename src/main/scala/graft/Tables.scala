@@ -152,8 +152,8 @@ object Tables {
   /** True when the table's parquet is already a multi-file directory:
     * the scan parallelizes by file, so the parallelism-restoring Hot
     * cache would only add an in-memory columnar decode on top of it —
-    * measured SLOWER than the vectorized parquet reader (`Q1Probe` at
-    * sf10: q1 1.70 s cached vs 1.25 s direct). Single-file driver
+    * measured SLOWER than the vectorized parquet reader (q1 at sf10:
+    * 1.70 s cached vs 1.25 s direct). Single-file driver
     * testdata keeps the cached path. Applies ONLY to the two Hots whose
     * sole rationale is scan parallelism (lineitem/orders);
     * [[documentsHot]] stays cached at every layout (multi-consumer
@@ -240,8 +240,8 @@ object Tables {
       // ClusteredDistribution — a1's groupBy(user_id) and w1's
       // (event_type, user_id) pre-agg (a superset of the partition key)
       // plan as single-stage complete aggregates with NO exchange.
-      // Measured at sf0.1: a1 aggregate 0.21 s → one stage (~0.1 s class);
-      // probed in A1Probe. This is the "reuse one partitioning across
+      // Measured at sf0.1: a1 aggregate 0.21 s → one stage (~0.1 s class).
+      // This is the "reuse one partitioning across
       // stages" play from SURVEY §perf: pay the shuffle once at cache
       // fill, not per query. user_id is high-cardinality vs 32 partitions,
       // so balance matches round-robin closely; scenario-keyed consumers

@@ -192,8 +192,8 @@ object TrainQueries {
 
   // -- sequence materialization ----------------------------------------
 
-  private[graft] val PackBin = 512 // tokens per packed sequence (= packPlan)
-  private[graft] val PackBuckets = 8
+  private val PackBin = 512 // tokens per packed sequence (= packPlan)
+  private val PackBuckets = 8
 
   /** MATERIALIZED packed training sequences — the step after
     * `data_pack_plan`'s offsets: documents concatenate into their
@@ -206,20 +206,11 @@ object TrainQueries {
     * (bucket, bin) whose `collect_list` payload is bounded by the bin's
     * token budget — never a whole-corpus collect. Deterministic order
     * inside the sequence via array_sort on (doc_id, text) structs. */
-  private def packSequences(spark: SparkSession, dir: String): DataFrame =
-    packSequencesWith(spark, dir, PackBuckets)
-
-  /** [[packSequences]] at an explicit bucket count — the parallelism
-    * knob: buckets pack independently (the running-offset window and the
-    * per-sequence assembly both partition by bucket), so a production
-    * run sizes buckets to the cluster, not to the oracle's fixed 8.
-    * `PackProbe` measures the knob at the scale SFs. */
-  def packSequencesWith(spark: SparkSession, dir: String,
-                        buckets: Int): DataFrame = {
+  private def packSequences(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tok"),
-        (col("doc_id") % buckets).as("bucket"))
+        (col("doc_id") % PackBuckets).as("bucket"))
       .withColumn("bin",
         expr(s"coalesce(sum(n_tok) over (partition by bucket order by doc_id" +
           s" rows between unbounded preceding and 1 preceding), 0L)" +

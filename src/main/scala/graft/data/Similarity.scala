@@ -996,19 +996,6 @@ object Similarity {
       .drop(ud)
   }
 
-  /** PQ in the OPQ-rotated space: train the reflection, rotate both
-    * sides, serve through the UNCHANGED [[pqTopK]] ADC path — same
-    * (m, k, rounds) code budget as plain PQ, different quantization
-    * cells. */
-  def opqTopK(queries: DataFrame, corpus: DataFrame, pcaRounds: Int,
-              m: Int, k: Int, rounds: Int, topK: Int,
-              qId: String = "q_id", qVec: String = "q_vec",
-              cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val u = opqHouseholder(corpus, pcaRounds, cVec)
-    pqTopK(opqRotate(queries, qVec, u), opqRotate(corpus, cVec, u),
-      m, k, rounds, topK, qId, qVec, cId, cVec)
-  }
-
   /** Per-vector projection onto [[pc1]]: the scalar whitening feature
     * (outlier score) — `(x - mean) · v`. */
   def pc1Scores(corpus: DataFrame, rounds: Int, idCol: String = "vec_id",

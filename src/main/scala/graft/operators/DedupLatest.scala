@@ -68,7 +68,7 @@ object DedupLatest {
   /** Pre-round-6 formulation of [[latestByScalar]]: N independent NULL-masked
     * `max_by`s. Semantically identical, but the string-typed `Max_By` buffers
     * force SortAggregate (no hash aggregation) — kept only as the parity
-    * reference for DedupLatestSpec and OpProbe A/B numbers. */
+    * reference ArgMaxFieldsSpec checks [[latestByScalar]] against. */
   def latestByScalarMaxBy(df: DataFrame, keys: Seq[String], ord: String, ordKey: Column,
                           payload: Seq[String]): DataFrame = {
     val aggs: Seq[Column] =

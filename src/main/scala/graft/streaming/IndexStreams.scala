@@ -296,22 +296,6 @@ object IndexStreams {
       }
       .start()
 
-  /** Streaming RETRIEVAL-index ingest — the maintenance side of the
-    * fourth index family ([[graft.data.Indexing.writePostingsIndex]]
-    * lifecycle): every micro-batch of documents lands in the
-    * term-sharded postings with the df/N artifacts updated by exact
-    * increments ([[graft.data.Indexing.appendPostingsIndex]] —
-    * idempotent, so at-least-once replays add and increment nothing),
-    * and a per-batch ingest receipt (docs and postings indexed so far —
-    * read from the artifacts, a 1-row pull) overwrites its batch-id
-    * partition. Any query served between batches sees every PREVIOUS
-    * batch with recompute-identical integer scores — the law
-    * StreamingSpec pins by serving after each batch.
-    *
-    * Same architecture as the three gates: the durable index IS the
-    * cross-batch state; foreachBatch serializes the appends (the
-    * single-writer window the artifact updates and `compactEvery`
-    * require). */
   /** Streaming TOKENIZED-SHARD ingest — the FIFTH maintained artifact's
     * gate ([[graft.TrainQueries.appendTokenizedShards]] lifecycle):
     * every micro-batch of documents is encoded with the FROZEN
@@ -481,6 +465,22 @@ object IndexStreams {
       }
       .start()
 
+  /** Streaming RETRIEVAL-index ingest — the maintenance side of the
+    * fourth index family ([[graft.data.Indexing.writePostingsIndex]]
+    * lifecycle): every micro-batch of documents lands in the
+    * term-sharded postings with the df/N artifacts updated by exact
+    * increments ([[graft.data.Indexing.appendPostingsIndex]] —
+    * idempotent, so at-least-once replays add and increment nothing),
+    * and a per-batch ingest receipt (docs and postings indexed so far —
+    * read from the artifacts, a 1-row pull) overwrites its batch-id
+    * partition. Any query served between batches sees every PREVIOUS
+    * batch with recompute-identical integer scores — the law
+    * StreamingSpec pins by serving after each batch.
+    *
+    * Same architecture as the three gates: the durable index IS the
+    * cross-batch state; foreachBatch serializes the appends (the
+    * single-writer window the artifact updates and `compactEvery`
+    * require). */
   def postingsIngestStream(docs: DataFrame, indexPath: String,
                            outPath: String, maintain: Boolean,
                            checkpoint: String, compactEvery: Int = 0,

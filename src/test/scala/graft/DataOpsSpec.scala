@@ -903,6 +903,25 @@ class DataOpsSpec extends AnyFunSuite {
       "the merge list of the overwritten corpus was served")
   }
 
+  test("data_sim_opq's rotation memo refits embeddings rewritten in place") {
+    val src = Tables.embeddings(spark, TestSpark.sf)
+    // the same vectors with their coordinates reversed: another principal
+    // axis, so another Householder vector
+    val reversed = src.withColumn("embedding", reverse(col("embedding")))
+    def write(dir: String, emb: org.apache.spark.sql.DataFrame): Unit =
+      emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def opq(dir: String) =
+      Registry.byName("data_sim_opq").build(spark, dir).collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_opq_memo").toString
+    write(dir, src)
+    opq(dir): Unit
+    write(dir, reversed)
+    val fresh = java.nio.file.Files.createTempDirectory("graft_opq_fresh").toString
+    write(fresh, reversed)
+    assert(opq(dir) == opq(fresh),
+      "the rewritten embeddings were rotated by the overwritten corpus's vector")
+  }
+
   test("a manifest snapshot past 32 files reads its rows with no more jobs " +
       "than a 16-file one") {
     import graft.data.IndexManifest

@@ -2,13 +2,15 @@
 # Prints the design-size counts ROADMAP aim 2 tracks, for the tree under
 # the given directory (default: the repository this script lives in):
 #   - raw and code lines (non-blank, not a comment line) under src/main
-#   - SparkSession.builder sites and `def main(` entry points
+#   - SparkSession.builder sites under src/main and under src/test
+#   - `def main(` entry points, and the objects that declare them
 #   - commit*/reconcile*/rewrite entry points of IndexManifest (public
 #     or package-private)
 # Usage: tools/design_counts.sh [repo-dir]
 set -euo pipefail
 root="${1:-$(cd "$(dirname "$0")/.." && pwd)}"
 main="$root/src/main"
+test="$root/src/test"
 manifest="$main/scala/graft/data/IndexManifest.scala"
 
 code_lines() {
@@ -19,8 +21,12 @@ code_lines() {
 files=$(find "$main" -name '*.scala' | sort)
 printf 'src_main_raw_lines          %s\n' "$(cat $files | wc -l)"
 printf 'src_main_code_lines         %s\n' "$(code_lines $files)"
+tests=$(find "$test" -name '*.scala' | sort)
 printf 'spark_session_builder_sites %s\n' "$(cat $files | grep -c 'SparkSession.builder' || true)"
+printf 'test_session_builder_sites  %s\n' "$(cat $tests | grep -c 'SparkSession.builder' || true)"
 printf 'def_main_sites              %s\n' "$(cat $files | grep -c 'def main(' || true)"
+# the object each `def main(` belongs to: the last `object` line above it
+awk '/^object [A-Za-z0-9_]+/ { o = $2 } /def main\(/ { print "  " o }' $files
 printf 'index_manifest_raw_lines    %s\n' "$(wc -l < "$manifest")"
 printf 'index_manifest_code_lines   %s\n' "$(code_lines "$manifest")"
 entry='^  (private\[graft\] )?def (commit|reconcile|rewrite)[A-Za-z]*'
