@@ -470,15 +470,16 @@ object DataQueries {
 
   private def dedupComponentsAppend(spark: SparkSession, dir: String): DataFrame =
     componentsWithSizes(
-      Dedup.componentsIndexServe(spark, compAppendPath(spark, dir)))
+      Dedup.componentsIndexServe(spark,
+        IndexManifest.load(spark, compAppendPath(spark, dir)).get))
 
   /** Cluster-index TIME TRAVEL — artifact pairing at cluster
     * granularity: corpus components built (v1), the batch's merging
     * edges absorbed (v2, `retainVersions = 2` keeps v1 on the
-    * horizon), and the serve pinned to v1 through
-    * [[Dedup.componentsIndexServeAt]] — version 1's rows resolved with
-    * version 1's FORWARDING table. The oracle replays the closure over
-    * the CORPUS pairs only: matching it proves the pin reproduces the
+    * horizon), and [[Dedup.componentsIndexServe]] on a v1 `loadAt`
+    * pin — version 1's rows resolved with version 1's FORWARDING table.
+    * The oracle replays the closure over the CORPUS pairs only:
+    * matching it proves the pin reproduces the
     * pre-merge components exactly — the current forwarding table knows
     * merges that had not happened at v1 and would silently "predict"
     * them into the pinned serve (the postings-df pairing law, cluster
@@ -494,14 +495,15 @@ object DataQueries {
       Dedup.writeComponentsIndex(
         pairs.where(compInCorpus(col("id_a")) && compInCorpus(col("id_b"))),
         "id_a", "id_b", p)
-      val v = graft.data.IndexManifest.load(spark, p).get.version
+      val v = IndexManifest.load(spark, p).get.version
       Dedup.appendComponentsEdges(
         pairs.where(!compInCorpus(col("id_a")) ||
           !compInCorpus(col("id_b"))),
         "id_a", "id_b", p)
       (p, v)
     })
-    componentsWithSizes(Dedup.componentsIndexServeAt(spark, path, pinned))
+    componentsWithSizes(Dedup.componentsIndexServe(spark,
+      IndexManifest.loadAt(spark, path, pinned).get))
   }
 
   /** Cluster-index COMPACTION (the forwarding FOLD): after the batch's
@@ -529,7 +531,8 @@ object DataQueries {
       Dedup.compactComponentsIndex(spark, p)
       p
     })
-    componentsWithSizes(Dedup.componentsIndexServe(spark, path))
+    componentsWithSizes(Dedup.componentsIndexServe(spark,
+      IndexManifest.load(spark, path).get))
   }
 
   /** The maintained component COUNT — the gate receipt's 1-row stats
@@ -538,7 +541,8 @@ object DataQueries {
     * closure count: one wrong increment on any append and the totals
     * diverge. */
   private def dedupComponentsStats(spark: SparkSession, dir: String): DataFrame =
-    Dedup.readComponentsStats(spark, compAppendPath(spark, dir))
+    Dedup.readComponentsStats(spark,
+        IndexManifest.load(spark, compAppendPath(spark, dir)).get)
       .select(col("n_components"))
       .dumpOrdered("n_components")
 
@@ -1288,7 +1292,8 @@ object DataQueries {
     * exactly why frozen-centroid ingest is sound. */
   private def simIvfAppend(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfIndexServe(queriesOf(spark, dir),
-        ivfIndexPath(spark, dir), k = 3, nprobe = 2)
+        IndexManifest.load(spark, ivfIndexPath(spark, dir)).get, k = 3,
+        nprobe = 2)
       .dumpOrdered("q_id", "rnk")
 
   /** The retrain signal ([[Similarity.ivfDrift]]): per-cell growth of
@@ -1296,7 +1301,8 @@ object DataQueries {
     * counts (Spark from the partition column only — a metadata-cost
     * audit; the oracle from the assignment replay). */
   private def simIvfDrift(spark: SparkSession, dir: String): DataFrame =
-    Similarity.ivfDrift(spark, ivfIndexPath(spark, dir))
+    Similarity.ivfDrift(spark,
+        IndexManifest.load(spark, ivfIndexPath(spark, dir)).get)
       .dumpOrdered("cell")
 
   /** Maintained IVF index RETRAINED (VERDICT r11 #2 — the operator
@@ -1326,7 +1332,8 @@ object DataQueries {
 
   private def simIvfRetrain(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfIndexServe(queriesOf(spark, dir),
-        ivfRetrainPath(spark, dir), k = 3, nprobe = 2)
+        IndexManifest.load(spark, ivfRetrainPath(spark, dir)).get, k = 3,
+        nprobe = 2)
       .dumpOrdered("q_id", "rnk")
 
   /** TIME TRAVEL across a RETRAIN — the strongest artifact-pairing law
@@ -1350,13 +1357,13 @@ object DataQueries {
         .select(col("vec_id"), col("embedding"))
       Similarity.writeIvfIndex(ivfCorpusVecs(e), kCells = 8, rounds = 2, p)
       Similarity.appendIvfIndex(ivfBatchVecs(e), p)
-      val v = graft.data.IndexManifest.load(spark, p).get.version
+      val v = IndexManifest.load(spark, p).get.version
       Similarity.retrainIvfIndex(spark, p, kCells = 8, rounds = 2,
         retainVersions = 2)
       (p, v)
     })
-    Similarity.ivfIndexServeAt(queriesOf(spark, dir), path, pinned,
-        k = 3, nprobe = 2)
+    Similarity.ivfIndexServe(queriesOf(spark, dir),
+        IndexManifest.loadAt(spark, path, pinned).get, k = 3, nprobe = 2)
       .dumpOrdered("q_id", "rnk")
   }
 
@@ -1387,7 +1394,7 @@ object DataQueries {
     Dedup.semanticIndexScreen(
         ivfBatchVecs(Tables.embeddingsHot(spark, dir)
           .select(col("vec_id"), col("embedding"))),
-        semIndexPath(spark, dir), SemTau)
+        IndexManifest.load(spark, semIndexPath(spark, dir)).get, SemTau)
       .dumpOrderedTail("vec_id")
 
   /** Semantic-index MAINTENANCE (the [[dedupIndexAppend]] pattern in
@@ -1408,12 +1415,14 @@ object DataQueries {
       Similarity.writeIvfIndex(ivfCorpusVecs(e), kCells = 8, rounds = 2, path)
       // frozen pre-append (manifest-pinned at construction; the eager
       // checkpoint also keeps the memo re-arm cheap)
-      val b = Dedup.semanticIndexScreen(batch, path, SemTau)
+      val b = Dedup.semanticIndexScreen(batch,
+          IndexManifest.load(spark, path).get, SemTau)
         .localCheckpoint(true)
       Similarity.appendIvfIndex(batch, path)
       b
     }
-    val after = Dedup.semanticIndexScreen(batch, path, SemTau)
+    val after = Dedup.semanticIndexScreen(batch,
+      IndexManifest.load(spark, path).get, SemTau)
     before
       .select(col("vec_id"), col("cell"),
         col("n_candidates").as("n_cand_before"))
@@ -1804,13 +1813,13 @@ object DataQueries {
       // the "before" verdicts against the mutated index; checkpointing
       // severs the lineage, freezing the pre-append result.
       val b = Dedup.indexedCellScreen(
-        batchCells, Dedup.readIndex(spark, path), "doc_id")
+        batchCells, IndexManifest.readData(spark, path), "doc_id")
         .localCheckpoint(true)
       Dedup.appendCellIndex(batchCells, path)
       b
     }
     val after = Dedup.indexedCellScreen(
-      batchCells, Dedup.readIndex(spark, path), "doc_id")
+      batchCells, IndexManifest.readData(spark, path), "doc_id")
     before
       .select(col("doc_id"), col("n_cells"),
         col("n_dup_cells").as("n_dup_before"))
@@ -1830,7 +1839,7 @@ object DataQueries {
     * orientation). The oracle is shared with the incremental screen: same
     * semantics, differential-checked through a different physical path. */
   private def dedupIndexServe(spark: SparkSession, dir: String): DataFrame = {
-    val idx = Dedup.readIndex(spark, cellIndexPath(spark, dir))
+    val idx = IndexManifest.readData(spark, cellIndexPath(spark, dir))
     val batchCells = Dedup.cellHashes(
       batchDocs(Tables.documentsHot(spark, dir)),
       "doc_id", "text", ScreenCell)
@@ -1841,8 +1850,8 @@ object DataQueries {
   /** TIME-TRAVEL serve (the retention half of the manifest layer): a
     * private index copy is built (manifest v1), the batch's cells are
     * APPENDED (v2 — the index now screens the batch as 100% duplicate),
-    * and the serve then runs pinned to v1 via
-    * [[graft.data.IndexManifest.readDataAt]]. The oracle is the
+    * and the serve then runs on a v1 `loadAt` pin
+    * ([[IndexManifest.readDataAt]]). The oracle is the
     * corpus-only screen (`duckScreenSql`, shared with the incremental
     * and current-serve paths): matching it proves the pinned read
     * reconstructs EXACTLY the pre-append snapshot from a directory the
@@ -1862,12 +1871,12 @@ object DataQueries {
         new java.io.File(dir).getName).getAbsolutePath
       Dedup.writeCellIndex(corpusDocs(Tables.documentsHot(spark, dir)),
         "doc_id", "text", ScreenCell, p)
-      val v = graft.data.IndexManifest.load(spark, p).get.version
+      val v = IndexManifest.load(spark, p).get.version
       Dedup.appendCellIndex(batchCells, p)
       (p, v)
     })
     Dedup.indexedCellScreen(batchCells,
-        graft.data.IndexManifest.readDataAt(spark, path, pinned), "doc_id")
+        IndexManifest.readDataAt(spark, path, pinned), "doc_id")
       .dumpOrderedTail("doc_id")
   }
 
@@ -1930,7 +1939,7 @@ object DataQueries {
     * stored artifact holds exactly the corpus's band rows and the
     * pruned broadcast serve counts them right. */
   private def dedupBandIndexServe(spark: SparkSession, dir: String): DataFrame = {
-    val idx = Dedup.readIndex(spark, bandIndexPath(spark, dir))
+    val idx = IndexManifest.readData(spark, bandIndexPath(spark, dir))
     val batchBands = Dedup.bandRows(
       batchDocs(Tables.documentsHot(spark, dir)), "doc_id", "text",
       K, Bands, R)
@@ -1956,12 +1965,12 @@ object DataQueries {
         Dedup.bandRows(corpusDocs(Tables.documentsHot(spark, dir)),
           "doc_id", "text", K, Bands, R),
         "doc_id", HotBucketCap, p)
-      val v = graft.data.IndexManifest.load(spark, p).get.version
+      val v = IndexManifest.load(spark, p).get.version
       Dedup.appendBandIndex(batchBands, "doc_id", HotBucketCap, p)
       (p, v)
     })
     Dedup.indexedBandScreen(batchBands,
-        graft.data.IndexManifest.readDataAt(spark, path, pinned), "doc_id")
+        IndexManifest.readDataAt(spark, path, pinned), "doc_id")
       .dumpOrderedTail("doc_id")
   }
 
@@ -1987,13 +1996,13 @@ object DataQueries {
           "doc_id", "text", K, Bands, R),
         "doc_id", HotBucketCap, path)
       val b = Dedup.indexedBandScreen(
-        batchBands, Dedup.readIndex(spark, path), "doc_id")
+        batchBands, IndexManifest.readData(spark, path), "doc_id")
         .localCheckpoint(true)
       Dedup.appendBandIndex(batchBands, "doc_id", HotBucketCap, path)
       b
     }
     val after = Dedup.indexedBandScreen(
-      batchBands, Dedup.readIndex(spark, path), "doc_id")
+      batchBands, IndexManifest.readData(spark, path), "doc_id")
     before
       .select(col("doc_id"), col("n_bands"),
         col("n_hit_bands").as("n_hit_before"))
@@ -2038,7 +2047,7 @@ object DataQueries {
       Dedup.appendBandIndex(batchBands, "doc_id", TombCap, path)
       spark.range(1).toDF("done")
     }
-    Dedup.indexedBandScreen(batchBands, Dedup.readIndex(spark, path),
+    Dedup.indexedBandScreen(batchBands, IndexManifest.readData(spark, path),
         "doc_id")
       .dumpOrderedTail("doc_id")
   }
@@ -2990,7 +2999,8 @@ object DataQueries {
   private def searchIndexServe(spark: SparkSession, dir: String): DataFrame =
     Indexing.postingsIndexServe(
         tfidfQueries(Tables.documentsHot(spark, dir)),
-        postingsIndexPath(spark, dir), TfIdfK, TfIdfScale)
+        IndexManifest.load(spark, postingsIndexPath(spark, dir)).get, TfIdfK,
+        TfIdfScale)
       .dumpOrdered("query_id", "rnk")
 
   /** Retrieval-index MAINTENANCE: a private index copy absorbs the
@@ -3011,7 +3021,8 @@ object DataQueries {
       // a 1-row marker keeps the build inside the memo discipline
       spark.range(1).toDF("done")
     }
-    Indexing.postingsIndexServe(tfidfQueries(docs), path, TfIdfK, TfIdfScale)
+    Indexing.postingsIndexServe(tfidfQueries(docs),
+        IndexManifest.load(spark, path).get, TfIdfK, TfIdfScale)
       .dumpOrdered("query_id", "rnk")
   }
 
@@ -3019,9 +3030,9 @@ object DataQueries {
     * law, because the scores depend on the ARTIFACTS: a private index
     * copy absorbs the ingest batch (df and n_docs increment), then the
     * serve pins the PRE-append manifest version
-    * ([[Indexing.postingsIndexServeAt]] — version v's postings paired
-    * with version v's df/N dictionary). Matching the corpus-only oracle
-    * proves the pairing: the post-append dictionary would flip idfs and
+    * ([[Indexing.postingsIndexServe]] on a `loadAt` pin — version v's
+    * postings paired with version v's df/N dictionary). Matching the
+    * corpus-only oracle proves the pairing: the post-append dictionary would flip idfs and
     * fail the hash even over the correct old postings. */
   private val asofPostings =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
@@ -3032,12 +3043,12 @@ object DataQueries {
       val p = new java.io.File(idxRoot, "postasof_" +
         new java.io.File(dir).getName).getAbsolutePath
       Indexing.writePostingsIndex(corpusDocs(docs), "doc_id", "text", p)
-      val v = graft.data.IndexManifest.load(spark, p).get.version
+      val v = IndexManifest.load(spark, p).get.version
       Indexing.appendPostingsIndex(batchDocs(docs), "doc_id", "text", p)
       (p, v)
     })
-    Indexing.postingsIndexServeAt(tfidfQueries(docs), path, pinned,
-        TfIdfK, TfIdfScale)
+    Indexing.postingsIndexServe(tfidfQueries(docs),
+        IndexManifest.loadAt(spark, path, pinned).get, TfIdfK, TfIdfScale)
       .dumpOrdered("query_id", "rnk")
   }
 

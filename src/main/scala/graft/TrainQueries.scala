@@ -1924,8 +1924,7 @@ object TrainQueries {
       writeTfRecordShards(spark, srcPath, outPath, maxBytesPerFile)
       return
     }
-    val syncedV = graft.data.IndexManifest
-      .readArtifact(spark, outPath, "src").head().getLong(0)
+    val syncedV = outSnap.artifact(spark, "src").head().getLong(0)
     val srcSnap = graft.data.IndexManifest.load(spark, srcPath)
     val newRows: Option[org.apache.spark.sql.DataFrame] =
       (srcSnap, graft.data.IndexManifest.loadAt(spark, srcPath, syncedV)) match {
@@ -1949,8 +1948,8 @@ object TrainQueries {
     // instead of one readArtifact job per consumer; every downstream use
     // is a broadcast/local relation rebuilt from the same rows.
     import spark.implicits._
-    val binsAtRest: Seq[(Long, Long, Long, Long)] = graft.data.IndexManifest
-      .readArtifact(spark, outPath, "bins")
+    val binsAtRest: Seq[(Long, Long, Long, Long)] = outSnap
+      .artifact(spark, "bins")
       .select(col("shard"), col("max_bin"), col("n_records"), col("n_bytes"))
       .collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -2350,8 +2349,8 @@ object TrainQueries {
     val base = pipelineAsofBase(spark, dir)
     val tfrP = s"$base/tfr"
     val tfrV1 = IndexManifest.versions(spark, tfrP).min
-    val srcPin = IndexManifest.readArtifactAt(spark, tfrP, "src", tfrV1)
-      .head().getLong(0)
+    val srcPin = IndexManifest.loadAt(spark, tfrP, tfrV1).get
+      .artifact(spark, "src").head().getLong(0)
     tfrFileAggregateAt(spark, s"$base/shards", Some(srcPin), tfrP,
       Some(tfrV1))
   }

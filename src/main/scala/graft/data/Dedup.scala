@@ -270,14 +270,6 @@ object Dedup {
       Delta(IndexManifest.listDataFiles(corpus.sparkSession, path))): Unit
   }
 
-  /** The pinned read of a maintained index — every serve below goes
-    * through this ([[IndexManifest.readData]]): the file set is the
-    * current manifest's, so a concurrent append/compaction is invisible
-    * until its single commit. */
-  def readIndex(spark: org.apache.spark.sql.SparkSession,
-                path: String): DataFrame =
-    IndexManifest.readData(spark, path)
-
   /** MAINTAIN the stored index: append an ingest batch's NOVEL cell
     * hashes — batch distinct cells anti-joined against the index — as a
     * partitioned APPEND into the same shard directories, exactly the
@@ -328,7 +320,7 @@ object Dedup {
     // the batch instead of asking parquet to infer a schema from nothing
     val idx =
       if (snap.dataFiles.isEmpty) bd.limit(0)
-      else IndexManifest.readData(spark, indexPath)
+      else snap.data(spark)
         .where(col("shard").isin(shards: _*))
     val hits = idx.join(broadcast(bd), Seq("shard", "cell_hash"))
       .select(col("shard"), col("cell_hash"))
@@ -441,7 +433,11 @@ object Dedup {
       .where(col("_bucket_n") > cap)
       .select(col("band"), col("bucket"))
       .localCheckpoint(true)
+    // the append's column order (ref_id, band, bucket): the anti-join
+    // puts its keys first, and files of two orders would make the
+    // pinned read's schema depend on which file it meets first
     rows.join(broadcast(capped), Seq("band", "bucket"), "left_anti")
+      .select(col("ref_id"), col("band"), col("bucket"))
       .withColumn("shard", cellShard(col("bucket")))
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
@@ -450,15 +446,14 @@ object Dedup {
       Delta(IndexManifest.listDataFiles(spark, path), artifacts = Map(ptr))): Unit
   }
 
-  /** The stored tombstone set of a band index — empty for legacy
-    * (pre-manifest) fixtures. Bounded; broadcast by every consumer. */
-  def cappedBuckets(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame =
-    IndexManifest.load(spark, path).flatMap(_.artifacts.get("capped")) match {
-      case Some(_) => IndexManifest.readArtifact(spark, path, "capped")
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Int, String)].toDF("band", "bucket")
+  /** The tombstone set `pin` carries — empty for legacy (pre-manifest)
+    * fixtures. Bounded; broadcast by every consumer. */
+  private def cappedBuckets(spark: org.apache.spark.sql.SparkSession,
+                            pin: Snapshot): DataFrame =
+    if (pin.artifacts.contains("capped")) pin.artifact(spark, "capped")
+    else {
+      import spark.implicits._
+      Seq.empty[(Int, String)].toDF("band", "bucket")
     }
 
   /** Serve an ingest batch's NEAR-dup screen from the STORED band index
@@ -521,7 +516,8 @@ object Dedup {
   def appendBandIndex(batchBands: DataFrame, idCol: String, cap: Int,
                       indexPath: String, retainVersions: Int = 2): Unit = {
     val spark = batchBands.sparkSession
-    val tombs = cappedBuckets(spark, indexPath)
+    val snap = IndexManifest.reconcileAppend(spark, indexPath)
+    val tombs = cappedBuckets(spark, snap)
     val bd = batchBands
       .select(col(idCol).as("ref_id"), col("band"), col("bucket"))
       .distinct()
@@ -531,14 +527,13 @@ object Dedup {
     // bounded (≤ the shard universe), feeding the literal-IN index prune
     val shards = bd.select(col("shard")).distinct().collect()
       .map(r => Integer.valueOf(r.getInt(0))).toSeq
-    val snap = IndexManifest.reconcileAppend(spark, indexPath)
     // a fully-capped build stores ZERO rows (every bucket tombstoned) —
     // type the empty pre-state off the batch, don't infer from nothing
     val idx =
       if (snap.dataFiles.isEmpty)
         bd.select(col("ref_id"), col("band"), col("bucket"), col("shard"))
           .limit(0)
-      else IndexManifest.readData(spark, indexPath)
+      else snap.data(spark)
         .where(col("shard").isin(shards: _*))
     val stored = idx.join(
         broadcast(bd.select(col("shard"), col("band"), col("bucket"))
@@ -716,21 +711,22 @@ object Dedup {
     * corpus-sized-k contract keeps at batch × targetCellSize. Pair
     * [[Similarity.appendIvfIndex]] behind it for the cross-batch
     * first-seen law (a near-copy in a later batch flags against this
-    * one) — the `data_dedup_semantic_index_append` differential. */
-  def semanticIndexScreen(batch: DataFrame, indexPath: String, tau: Double,
+    * one) — the `data_dedup_semantic_index_append` differential.
+    * Centroids and cells both read through `pin`. */
+  def semanticIndexScreen(batch: DataFrame, pin: Snapshot, tau: Double,
                           idCol: String = "vec_id",
                           vecCol: String = "embedding"): DataFrame = {
     graft.functions.VectorFunctions.register(batch.sparkSession)
     import graft.functions.VectorFunctions.vec_dot
     val spark = batch.sparkSession
-    val cents = Similarity.readIvfCentroids(spark, indexPath)
+    val cents = Similarity.readIvfCentroids(spark, pin)
     val assigned = Similarity.assignCellsBroadcast(batch, cents, vecCol)
       .select(col(idCol), col(vecCol), col("cell"),
         sqrt(vec_dot(col(vecCol), col(vecCol))).as("_bnorm"))
       .localCheckpoint(true)
     val probeCells: Seq[Long] = assigned.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val idx = IndexManifest.readData(spark, indexPath)
+    val idx = pin.data(spark)
       .where(col("cell").isin(probeCells: _*))
       .withColumn("cell", col("cell").cast("long"))
     val b = assigned.select(col("cell"), col(idCol).as("_bid"),
@@ -1018,48 +1014,41 @@ object Dedup {
       Delta(IndexManifest.listDataFiles(spark, path), artifacts = Map(fw, st))): Unit
   }
 
-  /** The stored rep-forwarding table — bounded by the count of ever-
-    * superseded representatives; broadcast by every consumer. */
+  /** The rep-forwarding table `pin` pairs with its rows — bounded by
+    * the count of ever-superseded representatives; broadcast by every
+    * consumer. */
   def readComponentsForward(spark: org.apache.spark.sql.SparkSession,
-                            path: String): DataFrame =
-    IndexManifest.readArtifact(spark, path, "forward")
+                            pin: Snapshot): DataFrame =
+    pin.artifact(spark, "forward")
 
   /** The maintained component COUNT — a 1-row artifact read, never an
     * index scan: built once, exact-incremented per append
     * ([[appendComponentsEdges]]'s bounded merge-graph arithmetic). The
     * gate-receipt and monitoring handle. */
   def readComponentsStats(spark: org.apache.spark.sql.SparkSession,
-                          path: String): DataFrame =
-    IndexManifest.readArtifact(spark, path, "stats")
-
-  private def serveComponentsFrom(data: DataFrame, fw: DataFrame): DataFrame =
-    data
-      .join(broadcast(fw), col("rep") === col("old_rep"), "left")
-      .select(col("node_id").as("id"),
-        coalesce(col("canonical"), col("rep")).as("component"))
+                          pin: Snapshot): DataFrame =
+    pin.artifact(spark, "stats")
 
   /** Every stored node's CURRENT component: `(id, component)` — the
-    * stored write-time rep resolved through the forwarding broadcast.
-    * Scale: one streamed scan of the index (map-only against the
-    * broadcast), no shuffle. */
-  def componentsIndexServe(spark: org.apache.spark.sql.SparkSession,
-                           path: String): DataFrame =
-    serveComponentsFrom(IndexManifest.readData(spark, path),
-      readComponentsForward(spark, path))
-
-  /** The TIME-TRAVEL serve of the cluster index — artifact pairing at
+    * stored write-time rep resolved through the forwarding broadcast,
+    * both read through `pin`. Scale: one streamed scan of the index
+    * (map-only against the broadcast), no shuffle.
+    *
+    * A `loadAt` pin is the TIME-TRAVEL serve — artifact pairing at
     * cluster granularity: version v's stored rows resolved through
-    * version v's FORWARDING table ([[IndexManifest.readArtifactAt]]).
-    * The pairing is the law: a later forwarding version knows merges
-    * that had not happened at v, so mixing it with v's rows would
-    * "predict" components no v-time reader ever saw (and after a
-    * compaction folded the table, the CURRENT artifact is empty — old
-    * rows served with it would resurrect pre-merge labels). Same plan
-    * shape as [[componentsIndexServe]]; only the pin differs. */
-  def componentsIndexServeAt(spark: org.apache.spark.sql.SparkSession,
-                             path: String, version: Long): DataFrame =
-    serveComponentsFrom(IndexManifest.readDataAt(spark, path, version),
-      IndexManifest.readArtifactAt(spark, path, "forward", version))
+    * version v's FORWARDING table. The pairing is the law: a later
+    * forwarding version knows merges that had not happened at v, so
+    * mixing it with v's rows would "predict" components no v-time
+    * reader ever saw (and after a compaction folded the table, the
+    * CURRENT artifact is empty — old rows served with it would
+    * resurrect pre-merge labels). */
+  def componentsIndexServe(spark: org.apache.spark.sql.SparkSession,
+                           pin: Snapshot): DataFrame =
+    pin.data(spark)
+      .join(broadcast(readComponentsForward(spark, pin)),
+        col("rep") === col("old_rep"), "left")
+      .select(col("node_id").as("id"),
+        coalesce(col("canonical"), col("rep")).as("component"))
 
   /** MAINTAIN the cluster index: absorb an ingest batch's near-dup
     * EDGES — new nodes enter with their component's canonical label,
@@ -1107,9 +1096,9 @@ object Dedup {
     val shards = touched.select(nodeShard(col("node_id")).as("shard"))
       .distinct().collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
     val snap = IndexManifest.reconcileAppend(spark, path)
-    val idx = IndexManifest.readData(spark, path)
+    val idx = snap.data(spark)
       .where(col("shard").isin(shards: _*))
-    val fw = readComponentsForward(spark, path).localCheckpoint(true)
+    val fw = readComponentsForward(spark, snap).localCheckpoint(true)
     // stored endpoints' CURRENT canonical (forward-resolved)
     val resolved = idx.join(broadcast(touched), Seq("node_id"))
       .join(broadcast(fw), col("rep") === col("old_rep"), "left")
@@ -1176,10 +1165,10 @@ object Dedup {
       if (g == e && hasStats) Map.empty[String, String]
       else {
         val before =
-          if (hasStats) readComponentsStats(spark, path).head().getLong(0)
-          else // one-time adoption of a pre-stats index (the serve is
-               // still pinned to the PRE-append manifest here)
-            componentsIndexServe(spark, path)
+          if (hasStats) readComponentsStats(spark, snap).head().getLong(0)
+          else // one-time adoption of a pre-stats index, served from
+               // the PRE-append snapshot
+            componentsIndexServe(spark, snap)
               .agg(countDistinct(col("component"))).head().getLong(0)
         Map(IndexManifest.writeArtifact(spark, path, "stats",
           spark.range(1)
@@ -1208,8 +1197,8 @@ object Dedup {
     * `repartition(shard)`ed into one [[IndexManifest.stageAppend]]
     * write, one commit, vacuum to `retainVersions` (≥ 2 keeps the
     * pre-fold snapshot serving time-travel — whose OLD forwarding
-    * version stays paired with the old rows via
-    * [[componentsIndexServeAt]]). A racing gate append wins the claim
+    * version stays paired with the old rows in a
+    * [[componentsIndexServe]] on a `loadAt` pin). A racing gate append wins the claim
     * and the fold re-plans over the winner's rows AND artifacts — both
     * land.
     *
@@ -1219,10 +1208,10 @@ object Dedup {
                              retainVersions: Int = 1,
                              preCommitHook: () => Unit = () => ()): (Int, Long) =
     IndexManifest.rewrite(spark, path, retainVersions, preCommitHook) { snap =>
-      val fw = readComponentsForward(spark, path).localCheckpoint(true)
+      val fw = readComponentsForward(spark, snap).localCheckpoint(true)
       if (fw.isEmpty) (Delta(), (0, 0L))
       else {
-        val affected = IndexManifest.readData(spark, path)
+        val affected = snap.data(spark)
           .join(broadcast(fw), col("rep") === col("old_rep"))
           .select(col("shard")).distinct().collect()
           .map(r => s"shard=${r.getInt(0)}").toSet

@@ -36,8 +36,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   1. Repair: [[reconcileAppend]] (appends) or [[reconcile]] (the
   *      exclusive window of a superseding mutation) deletes crash
   *      debris and adopts a directory listing for pre-manifest roots.
-  *   2. Read the pre-state through [[readData]]/[[readArtifact]]
-  *      (pinned to the current manifest).
+  *   2. Read the pre-state through the [[Snapshot]] step 1 returned
+  *      ([[Snapshot.data]]/[[Snapshot.artifact]]) — never through a
+  *      second load of the head.
   *   3. Write new data files through [[stageAppend]] (the added set is
   *      known by construction) and/or new artifact versions
   *      ([[writeArtifact]] — a NEW directory per version, never an
@@ -149,21 +150,48 @@ object IndexManifest {
   private[graft] val manifestBytesWritten =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** A pinned snapshot: data files (relative to the index root,
-    * RESOLVED across segment references — every consumer reads this
-    * flat list) and the current version directory per artifact name.
+  /** A PINNED snapshot — the one way to read a maintained index: data
+    * files (relative to the index root, RESOLVED across segment
+    * references — every consumer reads this flat list), the version
+    * directory per artifact name, and the qualified index `root`.
+    * [[load]] pins the head and [[loadAt]] a retained version; every
+    * data and artifact read of one index operation then goes through
+    * [[data]] and [[artifact]] of that one value, so a serve, append or
+    * rewrite sees exactly one manifest version however many commits
+    * land while it plans — never one version's rows with another's
+    * model. Time travel is the same read on a `loadAt` pin.
     * `segments`/`inline` expose the manifest's internal structure so
     * an append commit can inherit segment references without
     * re-serializing the resolved list. */
   final case class Snapshot(version: Long, dataFiles: Seq[String],
                             artifacts: Map[String, String],
-                            segments: Seq[String] = Seq.empty,
-                            inline: Seq[String] = Seq.empty)
+                            segments: Seq[String], inline: Seq[String],
+                            root: String) {
+
+    /** Exactly this version's data files ([[readFiles]]). Throws when
+      * the version lists none: there is no schema to read. */
+    def data(spark: SparkSession): DataFrame = {
+      if (dataFiles.isEmpty)
+        throw new java.util.NoSuchElementException(
+          s"manifest version $version of $root lists no data files")
+      readFiles(spark, root, dataFiles)
+    }
+
+    /** The artifact version this snapshot pairs with its data files.
+      * `legacyDir` bridges pre-manifest index layouts (e.g. a bare
+      * `_centroids` directory) whose adopted manifest carries no
+      * pointer. */
+    def artifact(spark: SparkSession, name: String,
+                 legacyDir: Option[String] = None): DataFrame =
+      spark.read.parquet(new Path(root,
+        artifacts.getOrElse(name, legacyDir.getOrElse(name))).toString)
+  }
 
   object Snapshot {
     /** The state before any manifest exists — the base of a build's
       * (or an adoption's) first commit. */
-    val Empty: Snapshot = Snapshot(0L, Seq.empty, Map.empty)
+    val Empty: Snapshot = Snapshot(0L, Seq.empty, Map.empty, Seq.empty,
+      Seq.empty, "")
   }
 
   /** One mutation's effect on the snapshot it planned from: data files
@@ -286,7 +314,7 @@ object IndexManifest {
     }.toMap
     val segData = segs.flatMap(s =>
       readLines(fs, new Path(root, s)).filter(_.nonEmpty))
-    Snapshot(v, segData ++ inline, arts, segs, inline)
+    Snapshot(v, segData ++ inline, arts, segs, inline, root.toString)
   }
 
   /** [[parse]] tolerating a RACING VACUUM: two post-append vacuums from
@@ -896,47 +924,26 @@ object IndexManifest {
       Map("basePath" -> root.toString))
   }
 
-  /** The pinned data read: exactly the current manifest's files. Falls
+  /** One data read of the head: [[load]] then [[Snapshot.data]]. Falls
     * back to the directory listing for roots without a manifest
-    * (externally-built fixtures). */
+    * (externally-built fixtures). An operation that reads more than
+    * once pins a [[Snapshot]] and reads through it instead. */
   def readData(spark: SparkSession, path: String): DataFrame =
     load(spark, path) match {
-      case Some(snap) if snap.dataFiles.nonEmpty =>
-        readFiles(spark, path, snap.dataFiles)
+      case Some(snap) if snap.dataFiles.nonEmpty => snap.data(spark)
       case _ => spark.read.parquet(path)
     }
 
-  /** The TIME-TRAVEL data read: exactly the files a specific retained
-    * manifest listed — the snapshot a reader would have planned when
-    * that version was current. Same scan node, pruning, and broadcast
-    * shapes as [[readData]]; only the pinned version differs. Throws
+  /** The TIME-TRAVEL data read: [[loadAt]] then [[Snapshot.data]] —
+    * exactly the files a specific retained manifest listed. Throws
     * once [[vacuum]] has pruned the version (the horizon is explicit,
     * not silently approximated). */
-  def readDataAt(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val snap = loadAt(spark, path, version).getOrElse(
+  def readDataAt(spark: SparkSession, path: String, version: Long): DataFrame =
+    loadAt(spark, path, version).getOrElse(
       throw new java.util.NoSuchElementException(
         s"manifest version $version of $path is not retained " +
           s"(available: ${versions(spark, path).mkString(", ")})"))
-    if (snap.dataFiles.isEmpty)
-      throw new java.util.NoSuchElementException(
-        s"manifest version $version of $path lists no data files")
-    readFiles(spark, path, snap.dataFiles)
-  }
-
-  /** The time-travel artifact read — the model version the given
-    * manifest paired with its data files (a serve at version v must
-    * never mix v's data with a later model). */
-  def readArtifactAt(spark: SparkSession, path: String, name: String,
-                     version: Long): DataFrame = {
-    val snap = loadAt(spark, path, version).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"manifest version $version of $path is not retained"))
-    val rel = snap.artifacts.getOrElse(name,
-      throw new java.util.NoSuchElementException(
-        s"manifest version $version of $path carries no artifact '$name'"))
-    val (_, root) = fsOf(spark, path)
-    spark.read.parquet(new Path(root, rel).toString)
-  }
+      .data(spark)
 
   /** Write the next version of a named artifact (a NEW directory —
     * never an in-place overwrite) and return its manifest pointer.
@@ -959,19 +966,13 @@ object IndexManifest {
     name -> rel
   }
 
-  /** The pinned artifact read. `legacyDir` bridges pre-manifest index
-    * layouts (e.g. a bare `_centroids` directory) so old fixtures stay
-    * readable. */
+  /** One artifact read of the head: [[load]] then
+    * [[Snapshot.artifact]]; a root without a manifest reads `legacyDir`
+    * (or `name`) directly. */
   def readArtifact(spark: SparkSession, path: String, name: String,
-                   legacyDir: Option[String] = None): DataFrame = {
-    val ptr = load(spark, path).flatMap(_.artifacts.get(name))
-    ptr match {
-      case Some(rel) =>
-        val (_, root) = fsOf(spark, path)
-        spark.read.parquet(new Path(root, rel).toString)
-      case None =>
-        val dir = legacyDir.getOrElse(name)
-        spark.read.parquet(s"$path/$dir")
+                   legacyDir: Option[String] = None): DataFrame =
+    load(spark, path) match {
+      case Some(snap) => snap.artifact(spark, name, legacyDir)
+      case None => spark.read.parquet(s"$path/${legacyDir.getOrElse(name)}")
     }
-  }
 }

@@ -388,16 +388,16 @@ object Indexing {
         artifacts = Map(aDf, aStats))): Unit
   }
 
-  /** Manifest-pinned reads of the retrieval index's model artifacts
-    * (legacy `_df`/`_stats` directories as the pre-manifest fallback). */
+  /** The retrieval index's model artifacts as `pin` pairs them with
+    * its postings (legacy `_df`/`_stats` directories as the
+    * pre-manifest fallback). */
   def readPostingsDf(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DataFrame =
-    IndexManifest.readArtifact(spark, path, "df", legacyDir = Some("_df"))
+                     pin: Snapshot): DataFrame =
+    pin.artifact(spark, "df", legacyDir = Some("_df"))
 
   def readPostingsStats(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame =
-    IndexManifest.readArtifact(spark, path, "stats",
-      legacyDir = Some("_stats"))
+                        pin: Snapshot): DataFrame =
+    pin.artifact(spark, "stats", legacyDir = Some("_stats"))
 
   /** MAINTAIN the stored retrieval index: append an ingest batch's
     * NOVEL (term, doc) postings and update the model artifacts by the
@@ -446,7 +446,7 @@ object Indexing {
     val shards = bt.select(col("shard")).distinct().collect()
       .map(r => Integer.valueOf(r.getInt(0))).toSeq
     val snap = IndexManifest.reconcileAppend(spark, path)
-    val idx = IndexManifest.readData(spark, path)
+    val idx = snap.data(spark)
       .where(col("shard").isin(shards: _*))
     val stored = idx.join(
         broadcast(bt.select(col("shard"), col("term"), col("doc_id"))),
@@ -466,14 +466,14 @@ object Indexing {
       path, "shard")
     val dfInc = novel.groupBy(col("term")).agg(count(lit(1)).as("df_inc"))
     val aDf = IndexManifest.writeArtifact(spark, path, "df",
-      readPostingsDf(spark, path)
+      readPostingsDf(spark, snap)
         .join(dfInc, Seq("term"), "full")
         .select(col("term"),
           (coalesce(col("df"), lit(0L)) + coalesce(col("df_inc"), lit(0L)))
             .as("df")))
     val nNew = novel.select(col("doc_id")).distinct().count()
     val aStats = IndexManifest.writeArtifact(spark, path, "stats",
-      readPostingsStats(spark, path)
+      readPostingsStats(spark, snap)
         .select((col("n_docs") + lit(nNew)).as("n_docs")))
     IndexManifest.commit(spark, path, snap,
       Delta(added, artifacts = Map(aDf, aStats)), retainVersions): Unit
@@ -487,8 +487,8 @@ object Indexing {
     * independent derivation of df/N. */
   def rebuildPostingsArtifacts(spark: org.apache.spark.sql.SparkSession,
                                path: String): Unit =
-    IndexManifest.rewrite(spark, path, retainVersions = 2) { _ =>
-      val idx = IndexManifest.readData(spark, path)
+    IndexManifest.rewrite(spark, path, retainVersions = 2) { snap =>
+      val idx = snap.data(spark)
       val aDf = IndexManifest.writeArtifact(spark, path, "df",
         idx.groupBy(col("term")).agg(count(lit(1)).as("df")))
       val aStats = IndexManifest.writeArtifact(spark, path, "stats",
@@ -508,49 +508,27 @@ object Indexing {
     * idf side is the stored dictionary joined to the same broadcast
     * term set (vocabulary-sized stream, never the corpus), and the
     * per-query top-k goes through WindowGroupLimit bounded heaps.
-    * Index and artifacts are manifest-pinned — one consistent
-    * (postings, df, N) snapshot even mid-append.
+    * Postings, df and N all read through the one `pin` — one
+    * consistent (postings, df, N) snapshot even mid-append, since idf
+    * depends on df and N, which every append increments. A `loadAt`
+    * pin is the time-travel serve: version v's postings scored with
+    * v's own dictionary.
     *
     * `queries` rows are deduplicated on (query_id, term) first: the
     * scoring sum counts each posting once per QUERY TERM, so a caller
     * passing repeated terms would otherwise double-count silently
     * (vocabulary-sized distinct — negligible against the scan). */
-  def postingsIndexServe(queries: DataFrame, indexPath: String, k: Int,
+  def postingsIndexServe(queries: DataFrame, pin: Snapshot, k: Int,
                          idfScale: Long): DataFrame = {
     val spark = queries.sparkSession
-    serveFrom(queries, k, idfScale,
-      IndexManifest.readData(spark, indexPath),
-      readPostingsDf(spark, indexPath),
-      readPostingsStats(spark, indexPath))
-  }
-
-  /** The TIME-TRAVEL serve: score against a specific RETAINED manifest
-    * version — its postings files paired with ITS df/N artifact
-    * versions ([[IndexManifest.readArtifactAt]]). The pairing is the
-    * point: idf depends on df and N, which every append increments, so
-    * mixing version v's postings with a later dictionary would produce
-    * scores no consistent index state ever had. Same plan shape as the
-    * current serve; only the pinned version differs. */
-  def postingsIndexServeAt(queries: DataFrame, indexPath: String,
-                           version: Long, k: Int, idfScale: Long): DataFrame = {
-    val spark = queries.sparkSession
-    serveFrom(queries, k, idfScale,
-      IndexManifest.readDataAt(spark, indexPath, version),
-      IndexManifest.readArtifactAt(spark, indexPath, "df", version),
-      IndexManifest.readArtifactAt(spark, indexPath, "stats", version))
-  }
-
-  private def serveFrom(queries: DataFrame, k: Int, idfScale: Long,
-                        idx: DataFrame, dfreq: DataFrame,
-                        stats: DataFrame): DataFrame = {
     val qs = queries.select(col("query_id"), col("term")).distinct()
       .withColumn("shard", termShard(col("term")))
-    val idfq = dfreq
+    val idfq = readPostingsDf(spark, pin)
       .join(broadcast(qs.select(col("term")).distinct()), Seq("term"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(readPostingsStats(spark, pin)))
       .select(col("term"),
         expr(s"($idfScale * (n_docs + 1)) div (df + 1)").as("idf_scaled"))
-    val hits = idx
+    val hits = pin.data(spark)
       .join(broadcast(qs), Seq("shard", "term"))
       .join(broadcast(idfq), Seq("term"))
     val w = org.apache.spark.sql.expressions.Window

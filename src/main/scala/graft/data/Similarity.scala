@@ -294,21 +294,20 @@ object Similarity {
     val cents = fitCentroids(corpus, kCells, rounds, cId, cVec)
     assignCellsBroadcast(corpus, cents, cVec)
       .write.mode("overwrite").partitionBy("cell").parquet(outDir)
-    servePrunedFrom(queries, cents, outDir, k, nprobe, qId, qVec, cId, cVec)
+    servePrunedFrom(queries, cents, queries.sparkSession.read.parquet(outDir),
+      k, nprobe, qId, qVec, cId, cVec)
   }
 
-  /** The query-time half of the at-rest IVF serve, against any
-    * `partitionBy(cell)` directory and any centroid table: route each
+  /** The query-time half of the at-rest IVF serve, against the rows of
+    * any `partitionBy(cell)` layout and any centroid table: route each
     * query to its `nprobe` cells, collect the bounded probe-cell set,
-    * read the directory with a literal IN over the partition column
+    * filter `rows` with a literal IN over the partition column
     * (planning-time pruning — the filter lands in `PartitionFilters`,
     * not a post-scan Filter), and score only the probed cells. */
   private def servePrunedFrom(queries: DataFrame, cents: DataFrame,
-                              outDir: String, k: Int, nprobe: Int,
+                              rows: DataFrame, k: Int, nprobe: Int,
                               qId: String, qVec: String,
-                              cId: String, cVec: String,
-                              pinVersion: Option[Long] = None): DataFrame = {
-    val spark = queries.sparkSession
+                              cId: String, cVec: String): DataFrame = {
     val routed = queries.crossJoin(broadcast(cents))
       .withColumn("d2", fastSqDist(queries)(col(qVec), col("cvec")))
     val wA = Window.partitionBy(col(qId)).orderBy(col("d2"), col("cell"))
@@ -317,16 +316,6 @@ object Similarity {
       .select(col(qId), col(qVec), col("cell"))
     val probeCells: Seq[Long] = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    // manifest-pinned when the directory is a maintained index (falls
-    // back to the directory listing for one-shot layouts): a serve
-    // planned during an append/retrain/compaction sees exactly the
-    // committed pre- or post-state, never a half-mutated union.
-    // `pinVersion` is the time-travel variant: a specific RETAINED
-    // version's file set instead of the current one.
-    val rows = pinVersion match {
-      case Some(v) => IndexManifest.readDataAt(spark, outDir, v)
-      case None => IndexManifest.readData(spark, outDir)
-    }
     val pruned = rows
       .where(col("cell").isin(probeCells: _*))
       .withColumn("cell", col("cell").cast("long"))
@@ -397,8 +386,9 @@ object Similarity {
                      vecCol: String = "embedding",
                      retainVersions: Int = 2): Unit = {
     val spark = batch.sparkSession
-    val cents = readIvfCentroids(spark, path)
-    val assigned = assignCellsBroadcast(batch, cents, vecCol)
+    val snap = IndexManifest.reconcileAppend(spark, path)
+    val assigned = assignCellsBroadcast(batch, readIvfCentroids(spark, snap),
+        vecCol)
       .select(col(idCol), col(vecCol), col("cell"))
       .localCheckpoint(true)
     // bounded (≤ kCells): literal-IN cell prune on the index read — the
@@ -406,8 +396,7 @@ object Similarity {
     // added commit never list a cell directory at all
     val cells = assigned.select(col("cell")).distinct().collect()
       .map(r => java.lang.Long.valueOf(r.getLong(0))).toSeq
-    val snap = IndexManifest.reconcileAppend(spark, path)
-    val idx = IndexManifest.readData(spark, path)
+    val idx = snap.data(spark)
       .where(col("cell").isin(cells: _*))
     val stored = idx.join(
         broadcast(assigned.select(col("cell"), col(idCol)).distinct()),
@@ -419,43 +408,31 @@ object Similarity {
     IndexManifest.commit(spark, path, snap, Delta(added), retainVersions): Unit
   }
 
-  /** The stored coarse quantizer of a maintained IVF index —
-    * manifest-pinned, with the pre-manifest `_centroids` directory as
-    * the legacy fallback. */
+  /** The coarse quantizer `pin` pairs with its cells, with the
+    * pre-manifest `_centroids` directory as the legacy fallback. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                       path: String): DataFrame =
-    IndexManifest.readArtifact(spark, path, "centroids",
-      legacyDir = Some("_centroids"))
+                       pin: Snapshot): DataFrame =
+    pin.artifact(spark, "centroids", legacyDir = Some("_centroids"))
 
   /** Serve queries from the MAINTAINED index (the read-back of
-    * [[writeIvfIndex]] + any [[appendIvfIndex]]s): centroids come from
-    * the stored `_centroids` artifact, the probe read is the usual
+    * [[writeIvfIndex]] + any [[appendIvfIndex]]s): the centroids and the
+    * cell files both come from `pin`, and the probe read is the usual
     * planning-time cell prune. The 100 TB side is only ever read
-    * through pruned directories — never refit, never shuffled. */
-  def ivfIndexServe(queries: DataFrame, indexPath: String, k: Int,
+    * through pruned directories — never refit, never shuffled.
+    *
+    * A `loadAt` pin is the TIME-TRAVEL serve, and the pairing is the
+    * point: a RETRAIN replaces the model outright, so serving a
+    * retained pre-retrain version must route with THAT version's
+    * centroids over THAT version's cell files — the current quantizer
+    * would route queries to cells that did not exist under the old
+    * generation (not subtly wrong scores, structurally wrong probes). */
+  def ivfIndexServe(queries: DataFrame, pin: Snapshot, k: Int,
                     nprobe: Int, qId: String = "q_id",
                     qVec: String = "q_vec", cId: String = "vec_id",
                     cVec: String = "embedding"): DataFrame = {
-    val cents = readIvfCentroids(queries.sparkSession, indexPath)
-    servePrunedFrom(queries, cents, indexPath, k, nprobe, qId, qVec, cId, cVec)
-  }
-
-  /** The TIME-TRAVEL serve, vector edition — the strongest artifact-
-    * pairing case, because a RETRAIN replaces the model outright:
-    * serving a retained pre-retrain version must route with THAT
-    * version's centroids over THAT version's cell files
-    * ([[IndexManifest.readArtifactAt]] + [[IndexManifest.readDataAt]]).
-    * The current quantizer would route queries to cells that did not
-    * exist under the old generation — not subtly wrong scores,
-    * structurally wrong probes. Same plan shape as [[ivfIndexServe]]. */
-  def ivfIndexServeAt(queries: DataFrame, indexPath: String, version: Long,
-                      k: Int, nprobe: Int, qId: String = "q_id",
-                      qVec: String = "q_vec", cId: String = "vec_id",
-                      cVec: String = "embedding"): DataFrame = {
-    val cents = IndexManifest.readArtifactAt(queries.sparkSession,
-      indexPath, "centroids", version)
-    servePrunedFrom(queries, cents, indexPath, k, nprobe, qId, qVec, cId,
-      cVec, pinVersion = Some(version))
+    val spark = queries.sparkSession
+    servePrunedFrom(queries, readIvfCentroids(spark, pin), pin.data(spark),
+      k, nprobe, qId, qVec, cId, cVec)
   }
 
   /** The RETRAIN SIGNAL of the maintained index: per-cell growth since
@@ -469,14 +446,17 @@ object Similarity {
     * from 3 vectors is noise; a cell that doubled while holding 2× the
     * uniform share is the signal).
     *
+    * Both sides read through `pin`, so the baseline and the current
+    * sizes belong to one generation even while a retrain commits.
+    *
     * Scale: both sides are counts over the `cell` PARTITION column —
     * zero data columns read (parquet answers from footers), so the
     * audit costs metadata, not a corpus scan. */
-  def ivfDrift(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfDrift(spark: org.apache.spark.sql.SparkSession, pin: Snapshot,
                growthTau: Double = 2.0): DataFrame = {
-    val build = IndexManifest.readArtifact(spark, path, "cellsizes",
+    val build = pin.artifact(spark, "cellsizes",
       legacyDir = Some("_cellsizes"))
-    val now = IndexManifest.readData(spark, path)
+    val now = pin.data(spark)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_now"))
     val joined = build.join(now, Seq("cell"), "full")
@@ -518,10 +498,9 @@ object Similarity {
     * returns the v1 results, because v2 becomes visible only at the
     * commit. v1's files fall to the closing [[IndexManifest.vacuum]]:
     * `retainVersions = 1` (default) deletes them immediately; ≥ 2
-    * keeps the pre-retrain generation readable
-    * ([[IndexManifest.readDataAt]] with its paired centroids via
-    * [[IndexManifest.readArtifactAt]]) so an executing serve never
-    * races the deletion.
+    * keeps the pre-retrain generation readable ([[ivfIndexServe]] on a
+    * `loadAt` pin routes with its paired centroids) so an executing
+    * serve never races the deletion.
     *
     * One [[IndexManifest.rewrite]] transaction: a gate append landing
     * mid-retrain wins the claim, and the retrain refits over the
@@ -541,7 +520,7 @@ object Similarity {
                       preCommitHook: () => Unit = () => (),
                       retainVersions: Int = 1): Unit =
     IndexManifest.rewrite(spark, path, retainVersions, preCommitHook) { snap =>
-      val rows = IndexManifest.readData(spark, path)
+      val rows = snap.data(spark)
         .select(col(idCol), col(vecCol))
       val cents = fitCentroids(rows, kCells, rounds, idCol, vecCol)
       val v2Files = IndexManifest.stageAppend(

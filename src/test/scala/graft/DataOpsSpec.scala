@@ -10,6 +10,8 @@ class DataOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def pin(p: String) = graft.data.IndexManifest.load(spark, p).get
+
   test("minhashSigAgg is bit-identical to the per-row HOF signature") {
     // The aggregate form is the scale path (codegen'd md5s, map-side
     // minima); the HOF expression is the composable form. Same values —
@@ -693,6 +695,35 @@ class DataOpsSpec extends AnyFunSuite {
     assert(after.find(_._1 == 10L).get._4 == 2L) // candidates: doc 1 + self
   }
 
+  test("band index: the build and its appends write one column order, " +
+      "so the pinned read's schema does not depend on file order") {
+    import graft.data.IndexManifest
+    import scala.jdk.CollectionConverters._
+    val k = 6; val b = 3; val r = 2
+    def bands(id: Long, text: String) = Dedup.bandRows(
+      Seq((id, text)).toDF("doc_id", "text"), "doc_id", "text", k, b, r)
+    val path = java.nio.file.Files.createTempDirectory("graft_band_order")
+      .resolve("bands").toString
+    Dedup.writeBandIndex(bands(1L, "the quick brown fox jumps over the dog"),
+      "doc_id", cap = 64, path)
+    Dedup.appendBandIndex(bands(2L, "unrelated novel words nowhere near it"),
+      "doc_id", cap = 64, path)
+    val snap = IndexManifest.load(spark, path).get
+    val conf = spark.sessionState.newHadoopConf()
+    // the column order each data file's parquet footer declares
+    val orders = snap.dataFiles.map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(snap.root, f), conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSeq
+      finally reader.close()
+    }
+    assert(snap.dataFiles.length >= 2, "build and append must both land")
+    assert(orders.distinct == Seq(Seq("ref_id", "band", "bucket")),
+      s"footer column orders: ${orders.distinct}")
+  }
+
   test("writeBandIndex drops hot buckets at build; appendBandIndex refuses " +
       "saturated buckets") {
     // every corpus doc shares one text -> every (band, bucket) holds 3
@@ -1017,7 +1048,7 @@ class DataOpsSpec extends AnyFunSuite {
     // corpus clusters: {10, 11} (rep 10) and {20, 21} (rep 20), {30} alone
     Dedup.writeComponentsIndex(
       Seq((10L, 11L), (20L, 21L), (30L, 30L)).toDF("a", "b"), "a", "b", path)
-    def serve() = Dedup.componentsIndexServe(spark, path)
+    def serve() = Dedup.componentsIndexServe(spark, pin(path))
       .as[(Long, Long)].collect().toMap
     assert(serve() == Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L,
       30L -> 30L))
@@ -1034,7 +1065,7 @@ class DataOpsSpec extends AnyFunSuite {
       IndexManifest.load(spark, path).get.dataFiles.toSet),
       "a merge must never rewrite stored rows")
     // forwarding is flat: 20 -> 10, no entry chains through another
-    val fw1 = Dedup.readComponentsForward(spark, path)
+    val fw1 = Dedup.readComponentsForward(spark, pin(path))
       .as[(Long, Long)].collect().toMap
     assert(fw1 == Map(20L -> 10L))
     // batch 2: a NEW node with a SMALLER id than the canonical joins —
@@ -1044,7 +1075,7 @@ class DataOpsSpec extends AnyFunSuite {
       Seq((5L, 40L)).toDF("a", "b"), "a", "b", path)
     assert(serve() == Map(5L -> 5L, 10L -> 5L, 11L -> 5L, 20L -> 5L,
       21L -> 5L, 30L -> 30L, 40L -> 5L))
-    assert(Dedup.readComponentsForward(spark, path)
+    assert(Dedup.readComponentsForward(spark, pin(path))
       .as[(Long, Long)].collect().toMap == Map(20L -> 5L, 10L -> 5L))
     // replay of both batches: a no-op (same serve, same forwarding)
     val v = IndexManifest.load(spark, path).get.version
@@ -1052,7 +1083,7 @@ class DataOpsSpec extends AnyFunSuite {
       Seq((11L, 40L), (40L, 21L), (5L, 40L)).toDF("a", "b"), "a", "b", path)
     assert(serve() == Map(5L -> 5L, 10L -> 5L, 11L -> 5L, 20L -> 5L,
       21L -> 5L, 30L -> 30L, 40L -> 5L))
-    assert(Dedup.readComponentsForward(spark, path)
+    assert(Dedup.readComponentsForward(spark, pin(path))
       .as[(Long, Long)].collect().toMap == Map(20L -> 5L, 10L -> 5L))
     assert(IndexManifest.load(spark, path).get.dataFiles.size ==
       IndexManifest.loadAt(spark, path, v).get.dataFiles.size,
@@ -1067,14 +1098,14 @@ class DataOpsSpec extends AnyFunSuite {
       .resolve("comp").toString
     Dedup.writeComponentsIndex(
       Seq((10L, 11L), (20L, 21L), (30L, 30L)).toDF("a", "b"), "a", "b", path)
-    assert(Dedup.readComponentsStats(spark, path).head().getLong(0) == 3L)
+    assert(Dedup.readComponentsStats(spark, pin(path)).head().getLong(0) == 3L)
     val v1 = IndexManifest.load(spark, path).get.version
     // a chain through a new node merges the two stored clusters
     Dedup.appendComponentsEdges(
       Seq((11L, 40L), (40L, 21L)).toDF("a", "b"), "a", "b", path)
     // exact-maintained count: 3 components - 2 engaged + 1 group = 2
-    assert(Dedup.readComponentsStats(spark, path).head().getLong(0) == 2L)
-    def serve() = Dedup.componentsIndexServe(spark, path)
+    assert(Dedup.readComponentsStats(spark, pin(path)).head().getLong(0) == 2L)
+    def serve() = Dedup.componentsIndexServe(spark, pin(path))
       .as[(Long, Long)].collect().toMap
     val cur = serve()
     assert(cur == Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L,
@@ -1082,7 +1113,8 @@ class DataOpsSpec extends AnyFunSuite {
     // TIME TRAVEL: the v1 pin serves v1's rows with v1's (empty)
     // forwarding — the CURRENT table knows 20 -> 10 and would silently
     // predict the merge into the past
-    assert(Dedup.componentsIndexServeAt(spark, path, v1)
+    assert(Dedup.componentsIndexServe(spark,
+      IndexManifest.loadAt(spark, path, v1).get)
       .as[(Long, Long)].collect().toMap ==
       Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L))
     // the FOLD: affected shards rewrite with canonical reps, the
@@ -1090,7 +1122,7 @@ class DataOpsSpec extends AnyFunSuite {
     val (nsh, _) = Dedup.compactComponentsIndex(spark, path,
       retainVersions = 2)
     assert(nsh > 0, "the fold must have rewritten the affected shards")
-    assert(Dedup.readComponentsForward(spark, path).isEmpty,
+    assert(Dedup.readComponentsForward(spark, pin(path)).isEmpty,
       "the fold must truncate the forwarding artifact")
     assert(serve() == cur, "folding must be invisible to the serve")
     assert(IndexManifest.readData(spark, path)
@@ -1099,12 +1131,13 @@ class DataOpsSpec extends AnyFunSuite {
     // time travel ACROSS the fold (retainVersions = 2): the pre-fold
     // version still serves, paired with its own non-empty forwarding
     val preFold = IndexManifest.versions(spark, path).head
-    assert(Dedup.componentsIndexServeAt(spark, path, preFold)
+    assert(Dedup.componentsIndexServe(spark,
+      IndexManifest.loadAt(spark, path, preFold).get)
       .as[(Long, Long)].collect().toMap == cur)
     // idempotent: an empty forwarding table folds nothing
     assert(Dedup.compactComponentsIndex(spark, path)._1 == 0)
     // the stats artifact survives the fold unchanged
-    assert(Dedup.readComponentsStats(spark, path).head().getLong(0) == 2L)
+    assert(Dedup.readComponentsStats(spark, pin(path)).head().getLong(0) == 2L)
   }
 
   test("fold vs gate concurrency: an append landing inside the fold's " +
@@ -1118,7 +1151,7 @@ class DataOpsSpec extends AnyFunSuite {
       Seq((10L, 11L), (20L, 21L), (30L, 30L)).toDF("a", "b"), "a", "b", path)
     // a merge so the fold has forwarding to bake in
     Dedup.appendComponentsEdges(Seq((11L, 21L)).toDF("a", "b"), "a", "b", path)
-    assert(Dedup.readComponentsForward(spark, path)
+    assert(Dedup.readComponentsForward(spark, pin(path))
       .as[(Long, Long)].collect().toMap == Map(20L -> 10L))
     // the gate's append commits INSIDE the fold's claim window: the
     // fold's CAS at snap.version + 1 must lose loudly, reload the
@@ -1135,9 +1168,9 @@ class DataOpsSpec extends AnyFunSuite {
     assert(interleaved, "the seam must have run")
     // both landed: the interleaved node 50 is stored AND the fold
     // truncated the forwarding table with canonical reps baked in
-    assert(Dedup.readComponentsForward(spark, path).isEmpty,
+    assert(Dedup.readComponentsForward(spark, pin(path)).isEmpty,
       "the re-folded forwarding table must be empty")
-    assert(Dedup.componentsIndexServe(spark, path)
+    assert(Dedup.componentsIndexServe(spark, pin(path))
       .as[(Long, Long)].collect().toMap ==
       Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L,
         30L -> 30L, 50L -> 30L),
@@ -1145,7 +1178,7 @@ class DataOpsSpec extends AnyFunSuite {
     assert(IndexManifest.readData(spark, path)
       .where($"rep" === 20L).isEmpty,
       "stored rows must carry canonical reps after the re-fold")
-    assert(Dedup.readComponentsStats(spark, path).head().getLong(0) == 2L)
+    assert(Dedup.readComponentsStats(spark, pin(path)).head().getLong(0) == 2L)
   }
 
   test("retention: compactIndex(retainVersions=2) keeps the pre-compaction " +

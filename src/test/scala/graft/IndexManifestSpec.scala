@@ -137,7 +137,7 @@ class IndexManifestSpec extends AnyFunSuite {
     assert(IndexManifest.readDataAt(spark, p, 2L).count() == 3L)
     assert(IndexManifest.readData(spark, p).count() == 4L)
     // the artifact paired with v2 is gen 1 even though gen 2 is current
-    assert(IndexManifest.readArtifactAt(spark, p, "model", 2L)
+    assert(IndexManifest.loadAt(spark, p, 2L).get.artifact(spark, "model")
       .as[(Long, Long)].head() == (1L, 3L))
     assert(IndexManifest.readArtifact(spark, p, "model")
       .as[(Long, Long)].head() == (2L, 4L))
@@ -693,5 +693,68 @@ class IndexManifestSpec extends AnyFunSuite {
       "reconcile must remove the file no retained manifest references")
     assert(!tmp.exists(), "reconcile must sweep crashed commit temps")
     assert(IndexManifest.readData(spark, p).count() < 3L)
+  }
+
+  test("snapshot law: a serve on a pin taken before a mutation commits " +
+      "returns the pre-mutation answer, and equals the serve on " +
+      "loadAt(pre-version) after the commit") {
+    import org.apache.spark.sql.Row
+    import graft.data.{Dedup, Indexing, Similarity}
+    def dir(name: String) = java.nio.file.Files.createTempDirectory(
+      s"graft_snaplaw_$name").resolve("idx").toString
+    val vA = Seq(1.0f, 0.0f, 0.0f, 0.0f)
+    val vB = Seq(0.0f, 1.0f, 0.0f, 0.0f)
+    val vC = Seq(0.0f, 0.0f, 1.0f, 0.0f)
+    val vecQueries = Seq((100L, vA), (101L, vC)).toDF("q_id", "q_vec")
+    val termQueries = Seq((0L, "alpha"), (0L, "zeta")).toDF("query_id", "term")
+    // (family, build at path, mutation, serve on a pin); every mutation
+    // retains 2 versions, so the pre-version's files stay on disk
+    val families: Seq[(String, String => Unit, String => Unit,
+                       Snapshot => Set[Row])] = Seq(
+      ("postings append",
+        p => Indexing.writePostingsIndex(
+          Seq((1L, "alpha beta"), (2L, "alpha gamma")).toDF("doc_id", "text"),
+          "doc_id", "text", p),
+        // df(alpha) fixed while N grows: every idf(alpha) changes
+        p => Indexing.appendPostingsIndex(
+          Seq((10L, "zeta other"), (11L, "more words")).toDF("doc_id", "text"),
+          "doc_id", "text", p, retainVersions = 2),
+        pin => Indexing.postingsIndexServe(termQueries, pin, 10, 1000000L)
+          .collect().toSet),
+      ("ivf retrain",
+        p => {
+          Similarity.writeIvfIndex(Seq((1L, vA), (2L, vB), (3L, vA), (4L, vB))
+            .toDF("vec_id", "embedding"), kCells = 2, rounds = 1, p)
+          Similarity.appendIvfIndex(Seq((5L, vC), (6L, vC), (7L, vC))
+            .toDF("vec_id", "embedding"), p)
+        },
+        p => Similarity.retrainIvfIndex(spark, p, kCells = 2, rounds = 1,
+          retainVersions = 2),
+        pin => Similarity.ivfIndexServe(vecQueries, pin, k = 2, nprobe = 1)
+          .collect().toSet),
+      ("components fold",
+        p => {
+          Dedup.writeComponentsIndex(
+            Seq((10L, 11L), (20L, 21L)).toDF("a", "b"), "a", "b", p)
+          Dedup.appendComponentsEdges(Seq((11L, 21L)).toDF("a", "b"),
+            "a", "b", p)
+        },
+        // truncates the forwarding table the pre-fold rows still need
+        p => Dedup.compactComponentsIndex(spark, p, retainVersions = 2): Unit,
+        pin => Dedup.componentsIndexServe(spark, pin).collect().toSet))
+    families.foreach { case (family, build, mutate, serve) =>
+      val p = dir(family.replace(' ', '_'))
+      build(p)
+      val pin = IndexManifest.load(spark, p).get
+      val before = serve(pin)
+      assert(before.nonEmpty, s"$family: the pre-mutation answer is empty")
+      mutate(p)
+      assert(IndexManifest.load(spark, p).get.version > pin.version,
+        s"$family: the mutation must commit")
+      assert(serve(pin) == before,
+        s"$family: a serve on the pre-mutation pin changed its answer")
+      assert(serve(IndexManifest.loadAt(spark, p, pin.version).get) == before,
+        s"$family: the loadAt serve disagrees with the pinned serve")
+    }
   }
 }

@@ -12,6 +12,8 @@ class IndexOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def pin(p: String) = graft.data.IndexManifest.load(spark, p).get
+
   test("removeDupSpans removes exactly the corpus-duplicated n-gram spans") {
     // Docs 1 and 2 share the 3-gram "a b c" (a cross-doc duplicate);
     // doc 3 repeats "x y z" twice WITHIN itself (count >= 2 still);
@@ -176,25 +178,25 @@ class IndexOpsSpec extends AnyFunSuite {
     // layout + artifacts (manifest-pinned reads)
     assert(IndexManifest.readData(spark, path).columns.toSet ==
       Set("doc_id", "term", "tf", "shard"))
-    assert(Indexing.readPostingsStats(spark, path).as[Long].head() == 2L)
-    val df0 = Indexing.readPostingsDf(spark, path)
+    assert(Indexing.readPostingsStats(spark, pin(path)).as[Long].head() == 2L)
+    val df0 = Indexing.readPostingsDf(spark, pin(path))
       .as[(String, Long)].collect().toMap
     assert(df0 == Map("alpha" -> 2L, "beta" -> 1L, "gamma" -> 1L,
       "delta" -> 1L))
     Indexing.appendPostingsIndex(batch, "doc_id", "text", path)
-    val df1 = Indexing.readPostingsDf(spark, path)
+    val df1 = Indexing.readPostingsDf(spark, pin(path))
       .as[(String, Long)].collect().toMap
     // exact increments: alpha +1 (doc 10), beta +1 (doc 11), epsilon
     // and zeta enter at 1 (zeta's tf=2 is ONE doc)
     assert(df1 == Map("alpha" -> 3L, "beta" -> 2L, "gamma" -> 1L,
       "delta" -> 1L, "epsilon" -> 1L, "zeta" -> 1L))
-    assert(Indexing.readPostingsStats(spark, path).as[Long].head() == 4L)
+    assert(Indexing.readPostingsStats(spark, pin(path)).as[Long].head() == 4L)
     val n1 = IndexManifest.readData(spark, path).count()
     // idempotent: a full replay appends nothing and increments nothing
     Indexing.appendPostingsIndex(batch, "doc_id", "text", path)
     assert(IndexManifest.readData(spark, path).count() == n1)
-    assert(Indexing.readPostingsStats(spark, path).as[Long].head() == 4L)
-    assert(Indexing.readPostingsDf(spark, path)
+    assert(Indexing.readPostingsStats(spark, pin(path)).as[Long].head() == 4L)
+    assert(Indexing.readPostingsDf(spark, pin(path))
       .as[(String, Long)].collect().toMap == df1)
     // repair: COMMIT a corrupted dictionary version (an adopted index
     // with wrong artifacts), rebuild re-derives df/N from the postings
@@ -203,16 +205,16 @@ class IndexOpsSpec extends AnyFunSuite {
     val snap = IndexManifest.load(spark, path).get
     IndexManifest.commit(spark, path, snap,
       IndexManifest.Delta(artifacts = Map(bogus)))
-    assert(Indexing.readPostingsDf(spark, path)
+    assert(Indexing.readPostingsDf(spark, pin(path))
       .as[(String, Long)].collect().toMap == Map("bogus" -> 999L))
     Indexing.rebuildPostingsArtifacts(spark, path)
-    assert(Indexing.readPostingsDf(spark, path)
+    assert(Indexing.readPostingsDf(spark, pin(path))
       .as[(String, Long)].collect().toMap == df1)
-    assert(Indexing.readPostingsStats(spark, path).as[Long].head() == 4L)
+    assert(Indexing.readPostingsStats(spark, pin(path)).as[Long].head() == 4L)
     // serve equals the integer tf-idf definition computed by hand:
     // score(q="alpha") over 4 docs, idf = (1e6 * 5) div (df + 1)
     val q = Seq((0L, "alpha"), (0L, "zeta")).toDF("query_id", "term")
-    val got = Indexing.postingsIndexServe(q, path, k = 10, idfScale = 1000000L)
+    val got = Indexing.postingsIndexServe(q, pin(path), k = 10, idfScale = 1000000L)
       .orderBy("rnk").select($"doc_id", $"score", $"n_terms")
       .as[(Long, Long, Long)].collect().toSeq
     val idfAlpha = 1000000L * 5 / 4  // df(alpha)=3
@@ -237,7 +239,7 @@ class IndexOpsSpec extends AnyFunSuite {
     val q = Seq((0L, "alpha")).toDF("query_id", "term")
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("rnk")
       .select($"doc_id", $"score").as[(Long, Long)].collect().toSeq
-    val before = rows(Indexing.postingsIndexServe(q, path, 10, 1000000L))
+    val before = rows(Indexing.postingsIndexServe(q, pin(path), 10, 1000000L))
     // three appends of alpha-free docs: df(alpha) stays 2 while N grows
     // 2 -> 5, so idf(alpha) = (1e6·(N+1)) div 3 MUST change (appending
     // alpha docs would grow df and N in lockstep and leave it fixed —
@@ -250,14 +252,15 @@ class IndexOpsSpec extends AnyFunSuite {
         Seq((id, "newterm other")).toDF("doc_id", "text"),
         "doc_id", "text", path, retainVersions = 4)
     }
-    val now = rows(Indexing.postingsIndexServe(q, path, 10, 1000000L))
+    val now = rows(Indexing.postingsIndexServe(q, pin(path), 10, 1000000L))
     assert(now.map(_._1).toSet == Set(1L, 2L))
     assert(now.find(_._1 == 1L).get._2 != before.head._2,
       "the appends must have changed the current idf — otherwise the " +
         "pairing law below would be vacuous")
     // the pinned serve: v1 postings WITH v1's df/N — exactly the
     // pre-append result, not current-dictionary scores over old files
-    assert(rows(Indexing.postingsIndexServeAt(q, path, v1, 10, 1000000L))
+    assert(rows(Indexing.postingsIndexServe(q,
+      IndexManifest.loadAt(spark, path, v1).get, 10, 1000000L))
       == before)
   }
 }

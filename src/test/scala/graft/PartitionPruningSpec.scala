@@ -13,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class PartitionPruningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  private def pin(p: String) = graft.data.IndexManifest.load(spark, p).get
+
   test("month-partitioned write + range filter prunes partitions") {
     val dir = Files.createTempDirectory("graft_part").toString + "/orders_by_month"
     val o = Tables.orders(spark, TestSpark.sf)
@@ -92,7 +94,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     try {
     val served = Dedup.indexedCellScreen(
       Dedup.cellHashes(batch, "doc_id", "text", 2),
-      Dedup.readIndex(spark, dir), "doc_id")
+      graft.data.IndexManifest.readData(spark, dir), "doc_id")
     val plan = served.queryExecution.sparkPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     // the real never-shuffle-the-index contract: no ShuffleExchange may
@@ -137,7 +139,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     try {
       val served = Dedup.indexedBandScreen(
         Dedup.bandRows(batch, "doc_id", "text", 12, 4, 3),
-        Dedup.readIndex(spark, dir), "doc_id")
+        graft.data.IndexManifest.readData(spark, dir), "doc_id")
       val plan = served.queryExecution.sparkPlan.toString
       assert(plan.contains("BroadcastHashJoin"), plan)
       val indexShuffled = served.queryExecution.sparkPlan.collect {
@@ -172,7 +174,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     Similarity.writeIvfIndex(corpus, kCells = 4, rounds = 1, dir)
     // model artifacts persist as versioned, manifest-pinned subdirs the
     // corpus scan skips
-    assert(Similarity.readIvfCentroids(spark, dir).count() == 4L)
+    assert(Similarity.readIvfCentroids(spark, pin(dir)).count() == 4L)
     assert(graft.data.IndexManifest.readArtifact(spark, dir, "cellsizes")
       .count() > 0L)
     val nBuild = spark.read.parquet(dir).count()
@@ -185,13 +187,13 @@ class PartitionPruningSpec extends AnyFunSuite {
       "re-append must be a no-op")
     val q = all.where($"vec_id" < 2)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val served = Similarity.ivfIndexServe(q, dir, k = 3, nprobe = 2)
+    val served = Similarity.ivfIndexServe(q, pin(dir), k = 3, nprobe = 2)
     val got = served.orderBy("q_id", "rnk")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     // from-scratch recompute with the SAME (stored) centroids: fit on
     // the corpus slice, assign corpus∪batch, score the probed cells —
     // frozen-centroid ingest must be invisible to the result
-    val cents = Similarity.readIvfCentroids(spark, dir)
+    val cents = Similarity.readIvfCentroids(spark, pin(dir))
     val assigned = Similarity.assignCellsBroadcast(all, cents)
     val routed = q.crossJoin(broadcast(cents))
       .withColumn("d2", Similarity.sqDist($"q_vec", $"cvec"))
@@ -224,7 +226,7 @@ class PartitionPruningSpec extends AnyFunSuite {
       s"expected a pruned probe read, got $scan of $nCells cells")
     // drift accounting: the appended batch is exactly the added mass,
     // and n_now == n_build + n_added per cell
-    val drift = Similarity.ivfDrift(spark, dir)
+    val drift = Similarity.ivfDrift(spark, pin(dir))
     val rows = drift.select($"n_build", $"n_now", $"n_added")
       .as[(Long, Long, Long)].collect().toSeq
     assert(rows.map(_._3).sum == batch.count())
@@ -235,10 +237,10 @@ class PartitionPruningSpec extends AnyFunSuite {
     val (nComp, fb, fa) = graft.data.Dedup.compactIndex(
       spark, dir, maxFilesPerShard = 1, partitionCol = "cell")
     assert(nComp > 0 && fb > fa, s"no cell compaction: $nComp, $fb -> $fa")
-    assert(Similarity.readIvfCentroids(spark, dir).count() == 4L)
+    assert(Similarity.readIvfCentroids(spark, pin(dir)).count() == 4L)
     assert(graft.data.IndexManifest.readArtifact(spark, dir, "cellsizes")
       .count() > 0L)
-    val got2 = Similarity.ivfIndexServe(q, dir, k = 3, nprobe = 2)
+    val got2 = Similarity.ivfIndexServe(q, pin(dir), k = 3, nprobe = 2)
       .orderBy("q_id", "rnk")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got2 == got, "serve must be identical after cell compaction")
@@ -257,7 +259,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     Similarity.appendIvfIndex(batch, dir)
     val q = all.where($"vec_id" < 2)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    def serve(p: String) = Similarity.ivfIndexServe(q, p, k = 3, nprobe = 2)
+    def serve(p: String) = Similarity.ivfIndexServe(q, pin(p), k = 3, nprobe = 2)
       .orderBy("q_id", "rnk")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     val v1 = serve(dir)
@@ -275,7 +277,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     // the old generation is gone (no row inflation), baseline is reset
     assert(IndexManifest.readData(spark, dir).count() == all.count())
     assert(spark.read.parquet(dir).count() == all.count())
-    val drift = Similarity.ivfDrift(spark, dir)
+    val drift = Similarity.ivfDrift(spark, pin(dir))
       .select($"n_build", $"n_now", $"needs_retrain")
       .as[(Long, Long, Boolean)].collect().toSeq
     assert(drift.nonEmpty && drift.forall(r => r._1 == r._2 && !r._3),
@@ -316,7 +318,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     val fresh = Files.createTempDirectory("graft_ivf_race_fresh")
       .toString + "/at"
     Similarity.writeIvfIndex(all, kCells = 4, rounds = 1, fresh)
-    def serve(p: String) = Similarity.ivfIndexServe(q, p, k = 3, nprobe = 2)
+    def serve(p: String) = Similarity.ivfIndexServe(q, pin(p), k = 3, nprobe = 2)
       .orderBy("q_id", "rnk")
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(serve(dir) == serve(fresh),

@@ -12,6 +12,8 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def pin(p: String) = graft.data.IndexManifest.load(spark, p).get
+
   // The file streaming source wants a directory: stage events.parquet alone
   // in a temp dir (the testdata dir also holds the other tables).
   private lazy val eventsGlob: String = {
@@ -724,7 +726,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(idxPath).count() == 5)
     // every receipt row carries the post-append retrain signal, and the
     // last batch's value agrees with a fresh drift audit of the index
-    val finalNeeds = graft.data.Similarity.ivfDrift(spark, idxPath)
+    val finalNeeds = graft.data.Similarity.ivfDrift(spark, pin(idxPath))
       .where($"needs_retrain").count()
     val sig = spark.read.parquet(outPath)
       .select($"batch_id", $"n_cells_need_retrain")
@@ -776,16 +778,16 @@ class StreamingSpec extends AnyFunSuite {
     // ... and the gate ANSWERED the bell before closing the batch: the
     // index is already retrained (fresh baseline, no flagged cells, all
     // eight vectors in the new generation) with no manual step
-    assert(graft.data.Similarity.ivfDrift(spark, idxPath)
+    assert(graft.data.Similarity.ivfDrift(spark, pin(idxPath))
       .where($"needs_retrain").count() == 0L)
-    val drift = graft.data.Similarity.ivfDrift(spark, idxPath)
+    val drift = graft.data.Similarity.ivfDrift(spark, pin(idxPath))
       .select($"n_build", $"n_now").as[(Long, Long)].collect().toSeq
     assert(drift.forall(r => r._1 == r._2) && drift.map(_._2).sum == 8L)
     // serving runs against the retrained generation
     val served = graft.data.Similarity.ivfIndexServe(
       Seq((100L, vC)).toDF("vec_id", "embedding")
         .select($"vec_id".as("q_id"), $"embedding".as("q_vec")),
-      idxPath, k = 1, nprobe = 1)
+      pin(idxPath), k = 1, nprobe = 1)
       .select($"neighbor_id", $"cos_sim").as[(Long, Double)].collect()
     assert(served.length == 1 && served.head._2 > 0.99,
       s"the vC cluster must serve from the retrained index: ${served.toSeq}")
@@ -808,14 +810,14 @@ class StreamingSpec extends AnyFunSuite {
     val q = IndexStreams.postingsIngestStream(docs, idxPath, outPath,
       maintain = true, base.resolve("ckpt").toString)
     val query = Seq((0L, "alpha")).toDF("query_id", "term")
-    def serve() = Indexing.postingsIndexServe(query, idxPath, 10, 1000000L)
+    def serve() = Indexing.postingsIndexServe(query, pin(idxPath), 10, 1000000L)
       .select($"doc_id").as[Long].collect().toSet
     def recompute(all: Seq[(Long, String)]) = {
       val d = java.nio.file.Files.createTempDirectory("graft_post_rc")
         .resolve("i").toString
       Indexing.writePostingsIndex(all.toDF("doc_id", "text"),
         "doc_id", "text", d)
-      Indexing.postingsIndexServe(query, d, 10, 1000000L)
+      Indexing.postingsIndexServe(query, pin(d), 10, 1000000L)
         .select($"doc_id", $"score").as[(Long, Long)].collect().toSet
     }
     try {
@@ -827,7 +829,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     // integer-identical to a from-scratch rebuild over all five docs:
     // df and N enter every idf, so the increments are what this checks
-    val got = Indexing.postingsIndexServe(query, idxPath, 10, 1000000L)
+    val got = Indexing.postingsIndexServe(query, pin(idxPath), 10, 1000000L)
       .select($"doc_id", $"score").as[(Long, Long)].collect().toSet
     assert(got == recompute(Seq((1L, "alpha beta"), (2L, "alpha gamma"),
       (10L, "alpha delta"), (11L, "alpha alpha"), (12L, "unrelated words"))))
@@ -1000,13 +1002,13 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
     // the serve equals the from-scratch closure over corpus ∪ batches
-    val serve = Dedup.componentsIndexServe(spark, idxPath)
+    val serve = Dedup.componentsIndexServe(spark, pin(idxPath))
       .as[(Long, Long)].collect().toMap
     assert(serve == Map(10L -> 10L, 11L -> 10L, 20L -> 10L, 21L -> 10L,
       30L -> 30L, 40L -> 10L, 100L -> 100L, 101L -> 100L))
     // the fold ran: the broadcast forwarding table is truncated, with
     // no change to any serve result
-    assert(Dedup.readComponentsForward(spark, idxPath).isEmpty)
+    assert(Dedup.readComponentsForward(spark, pin(idxPath)).isEmpty)
     // receipts: exact per-batch component counts from the 1-row stats
     // artifact — never an index aggregate
     val receipts = spark.read.parquet(outPath)
@@ -1019,7 +1021,7 @@ class StreamingSpec extends AnyFunSuite {
     // advances batch over batch, the horizon stays bounded by the knob
     assert(receipts(1)._4 > receipts(0)._4)
     assert(receipts.forall(_._5 <= 2L))
-    assert(Dedup.readComponentsStats(spark, idxPath).head().getLong(0) == 3L)
+    assert(Dedup.readComponentsStats(spark, pin(idxPath)).head().getLong(0) == 3L)
   }
 
   test("edge ingest stream, maintain=false over a PRE-stats index: the " +
@@ -1114,5 +1116,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.count() == batch.count() && batch.count() > 0)
     assert(streamed.exceptAll(batch).isEmpty &&
       batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("gate contract: every gate's receipt carries the retention fields " +
+      "and batch_id, and a replayed batch id replaces its receipt " +
+      "partition") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.data.{Dedup, Indexing, Similarity}
+    import graft.streaming.IndexStreams
+    val corpus = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a b c d")).toDF("doc_id", "text")
+    val docs = Seq((10L, "the quick brown fox jumps over the lazy dog"),
+      (11L, "the lazy dog sleeps")).toDF("doc_id", "text")
+    val vA = Seq(1.0f, 0.0f, 0.0f, 0.0f)
+    val vB = Seq(0.0f, 1.0f, 0.0f, 0.0f)
+    // (gate, build its index at a path, one batch of input, start the
+    // gate on (input, index, receipts, checkpoint))
+    val gates: Seq[(String, String => Unit, DataFrame,
+                    (DataFrame, String, String, String) => StreamingQuery)] =
+      Seq(
+        ("screen", p => Dedup.writeCellIndex(corpus, "doc_id", "text", 2, p),
+          docs, (in, p, out, ck) => IndexStreams.screenStream(in, p, out,
+            cellWords = 2, maintain = true, ck)),
+        ("band", p => Dedup.writeBandIndex(
+            Dedup.bandRows(corpus, "doc_id", "text", 6, 3, 2), "doc_id",
+            cap = 64, p),
+          docs, (in, p, out, ck) => IndexStreams.bandScreenStream(in, p, out,
+            6, 3, 2, cap = 64, maintain = true, ck)),
+        ("vector", p => Similarity.writeIvfIndex(
+            Seq((1L, vA), (2L, vB)).toDF("vec_id", "embedding"),
+            kCells = 2, rounds = 1, p),
+          Seq((10L, vA), (11L, vB)).toDF("vec_id", "embedding"),
+          (in, p, out, ck) => IndexStreams.vectorIngestStream(in, p, out,
+            nprobe = 2, tau = 0.95, maintain = true, ck)),
+        ("shard", _ => (), docs,
+          (in, p, out, ck) => IndexStreams.shardIngestStream(in,
+            TestSpark.sf, p, out, maintain = true, ck)),
+        ("edge", p => Dedup.writeComponentsIndex(
+            Seq((10L, 11L), (20L, 21L)).toDF("a", "b"), "a", "b", p),
+          Seq((11L, 21L), (30L, 31L)).toDF("src", "dst"),
+          (in, p, out, ck) => IndexStreams.edgeIngestStream(in, p, out,
+            maintain = true, ck)),
+        ("postings", p => Indexing.writePostingsIndex(corpus, "doc_id",
+            "text", p),
+          docs, (in, p, out, ck) => IndexStreams.postingsIngestStream(in, p,
+            out, maintain = true, ck)))
+    gates.foreach { case (gate, build, batch, start) =>
+      val base = java.nio.file.Files.createTempDirectory(s"graft_gate_$gate")
+      val Seq(idx, out, ck, in) =
+        Seq("index", "receipts", "ckpt", "input").map(base.resolve(_).toString)
+      build(idx)
+      batch.write.parquet(in)
+      def run(): Unit = {
+        val q = start(spark.readStream.schema(batch.schema).parquet(in),
+          idx, out, ck)
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()
+      val receipts = spark.read.parquet(out)
+      val fields = Seq("manifest_version", "n_retained_versions",
+        "oldest_retained_version", "batch_id")
+      assert(fields.forall(receipts.columns.contains),
+        s"$gate receipt columns: ${receipts.columns.toSeq}")
+      val rows = receipts.select(fields.map(col): _*)
+        .as[(Long, Long, Long, Long)].collect().toSeq
+      assert(rows.nonEmpty && rows.forall { case (v, n, oldest, id) =>
+        id == 0L && v >= 1L && n >= 1L && oldest >= 1L && oldest <= v },
+        s"$gate retention fields: $rows")
+      // remove the last commit entry: the restart replays batch 0
+      val part = new java.io.File(out, "batch_id=0")
+      def partFiles() =
+        part.listFiles().map(_.getName).filter(_.startsWith("part-")).toSet
+      val before = partFiles()
+      Seq("0", ".0.crc").foreach(f =>
+        new java.io.File(s"$ck/commits", f).delete(): Unit)
+      run()
+      val after = partFiles()
+      assert(after.nonEmpty && (before intersect after).isEmpty,
+        s"$gate: the replay must rewrite batch 0's receipt partition")
+      assert(spark.read.parquet(out).count() == rows.length,
+        s"$gate: a replayed batch must replace its receipt, not add to it")
+    }
   }
 }

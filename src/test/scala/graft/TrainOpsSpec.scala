@@ -110,7 +110,8 @@ class TrainOpsSpec extends AnyFunSuite {
     assert(IndexManifest.readDataAt(spark, p, v1)
       .select(col("shard").cast("long"), col("bin"))
       .as[(Long, Long)].collect().toSeq.sorted == binsBefore)
-    assert(IndexManifest.readArtifactAt(spark, p, "manifest", v1)
+    assert(IndexManifest.loadAt(spark, p, v1).get
+      .artifact(spark, "manifest")
       .orderBy("shard").as[(Long, Long, Long, Long, Long)].collect()
       .toSeq == artBefore)
   }

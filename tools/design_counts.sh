@@ -6,12 +6,15 @@
 #   - `def main(` entry points, and the objects that declare them
 #   - commit*/reconcile*/rewrite entry points of IndexManifest (public
 #     or package-private)
+#   - `.foreachBatch` call sites in the index ingest gates (IndexStreams)
+#   - time-travel serve twins (`def <name>ServeAt`) under graft/data
 # Usage: tools/design_counts.sh [repo-dir]
 set -euo pipefail
 root="${1:-$(cd "$(dirname "$0")/.." && pwd)}"
 main="$root/src/main"
 test="$root/src/test"
 manifest="$main/scala/graft/data/IndexManifest.scala"
+gates="$main/scala/graft/streaming/IndexStreams.scala"
 
 code_lines() {
   # a comment line starts (after indentation) with //, /*, * or */
@@ -32,3 +35,7 @@ printf 'index_manifest_code_lines   %s\n' "$(code_lines "$manifest")"
 entry='^  (private\[graft\] )?def (commit|reconcile|rewrite)[A-Za-z]*'
 printf 'index_manifest_entry_points %s\n' "$(grep -cE "$entry" "$manifest" || true)"
 grep -oE "$entry" "$manifest" | sed -E 's/^ +(private\[graft\] )?def /  /'
+printf 'index_gate_foreachbatch_sites %s\n' \
+  "$(grep -cE '^[[:space:]]*\.foreachBatch' "$gates" || true)"
+printf 'serve_at_twins              %s\n' \
+  "$(cat "$main"/scala/graft/data/*.scala | grep -cE 'def [A-Za-z0-9_]+ServeAt' || true)"
