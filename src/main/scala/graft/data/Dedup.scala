@@ -470,15 +470,19 @@ object Dedup {
     * partition pruning on the bucket-shard directory key, and the
     * output is bounded by batch × cap. Docs with zero hits re-enter
     * through the left join. Self-collisions (a batch doc already
-    * appended) count like any other — the append law depends on it. */
+    * appended) count like any other — the append law depends on it.
+    * The two distinct counts are set sizes, not two `countDistinct`s:
+    * Spark plans several distinct aggregates as an Expand whose
+    * projection order is not stable between runs, so the plan could not
+    * be compared across runs. */
   def indexedBandScreen(batchBands: DataFrame, index: DataFrame,
       idCol: String): DataFrame = {
     val bb = batchBands.withColumn("shard", cellShard(col("bucket")))
     val totals = bb.groupBy(col(idCol)).agg(count(lit(1)).as("n_bands"))
     val hits = index.join(broadcast(bb), Seq("shard", "band", "bucket"))
       .groupBy(col(idCol))
-      .agg(countDistinct(col("band")).as("n_hit_bands"),
-        countDistinct(col("ref_id")).as("n_candidates"))
+      .agg(size(collect_set(col("band"))).cast("long").as("n_hit_bands"),
+        size(collect_set(col("ref_id"))).cast("long").as("n_candidates"))
     totals.join(hits, Seq(idCol), "left")
       .select(col(idCol), col("n_bands"),
         coalesce(col("n_hit_bands"), lit(0L)).as("n_hit_bands"),

@@ -1,8 +1,13 @@
 package graft.etl
 
+import java.util.concurrent.{CompletionException, Executors}
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Csv, Sanitize, UnionByName}
 
@@ -46,26 +51,22 @@ object ReportJob {
   /** Per-lender partitioned CSV write in the reference dialect
     * (run_exports_query.py:75-89): `outDir/report_lender=<lender>/…`,
     * tab-delimited, QUOTE_ALL, BOM, ''-null — the scalable
-    * dynamic-partition write ([[partitionedForWrite]]), then the BOM pass
-    * over the files it wrote.
+    * dynamic-partition write ([[partitionedForWrite]]) through
+    * [[Csv.tabCsvWriter]], which writes each file BOM first. Replaces
+    * everything under `outDir`.
     *
-    * @return the per-lender files, BOM'd, with their statuses. */
-  def writePerLender(report: DataFrame, outDir: String): Seq[FileStatus] = {
-    partitionedForWrite(report)
-      .write
+    * @return the per-lender files, in lender-path order, with their
+    *         statuses. */
+  def writePerLender(report: DataFrame, outDir: String): Seq[FileStatus] =
+    writeLenders(report, outDir, "overwrite")
+
+  private def writeLenders(report: DataFrame, outDir: String,
+                           mode: String): Seq[FileStatus] = {
+    Csv.tabCsvWriter(partitionedForWrite(report))
       .partitionBy("report_lender")
-      .option("sep", "\t")
-      .option("header", true)
-      .option("quoteAll", true)
-      .option("nullValue", "")
-      .option("emptyValue", "\"\"")
-      .option("escape", "\\")
-      .option("lineSep", "\n")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ssxx")
-      .mode("overwrite")
-      .csv(outDir)
-    Csv.prependBom(report.sparkSession,
-      lenderFiles(report.sparkSession, outDir).map(_.getPath))
+      .mode(mode)
+      .save(outDir)
+    lenderFiles(report.sparkSession, outDir)
   }
 
   /** The per-lender files under `outDir`, listed on the driver: the part
@@ -100,23 +101,21 @@ object ReportJob {
     (view.where(!malformed), view.where(malformed))
   }
 
-  /** merge_all_lenders.py over the per-lender files under `outDir`
-    * (listed on the driver): see [[mergeFiles]]. */
-  def mergeAll(spark: SparkSession, outDir: String, resultDir: String): DataFrame =
-    mergeFiles(spark, lenderFiles(spark, outDir), resultDir)
-
-  /** merge_all_lenders.py: read every per-lender file as all-string,
-    * union by column NAME (merge_all_lenders.py:55), re-parse `time`
-    * leniently, write one consolidated file. Each file's header is read on
-    * the driver; files that share a header are read together with it as
-    * their all-string schema, and the groups are unioned by name, missing
-    * columns null — one read of every file would apply the first file's
-    * header to all of them by position. The files are known, so no read
-    * lists a directory or infers a header.
+  /** merge_all_lenders.py over the per-lender files under `outDir`, for
+    * a directory of files that may come from different writes ([[run]]
+    * joins the files of its own write instead): read every file as
+    * all-string, union by column NAME (merge_all_lenders.py:55), re-parse
+    * `time` leniently, write one consolidated file. The files are listed
+    * on the driver and each file's header is read there; files that share
+    * a header are read together with it as their all-string schema, and
+    * the groups are unioned by name, missing columns null — one read of
+    * every file would apply the first file's header to all of them by
+    * position. The files are known, so no read lists a directory or
+    * infers a header.
     *
     * @return the consolidated file, all-string, as written. */
-  private def mergeFiles(spark: SparkSession, files: Seq[FileStatus],
-                         resultDir: String): DataFrame = {
+  def mergeAll(spark: SparkSession, outDir: String, resultDir: String): DataFrame = {
+    val files = lenderFiles(spark, outDir)
     require(files.nonEmpty, "no per-lender report files to merge")
     val headers = Csv.readHeaders(spark, files.map(_.getPath))
     val groups = files.zip(headers).groupBy(_._2).toSeq
@@ -131,15 +130,52 @@ object ReportJob {
   }
 
   /** Full monthly run: quarantine split → report → per-lender CSVs →
-    * consolidated CSV. Quarantine is written AFTER the partitioned report
-    * write — `.mode("overwrite")` on the report truncates `outDir` first,
-    * which would otherwise delete the quarantine side-cart. */
+    * consolidated CSV, each output byte written once.
+    *  - `outDir` is deleted once; then the quarantine side-cart
+    *    (`outDir/_quarantine`, parquet) is written on a second driver
+    *    thread WHILE the per-lender write appends the lender directories,
+    *    so neither write truncates the other's output and the quarantine
+    *    costs no time on the report's path.
+    *  - The consolidated file is the per-lender files joined on the
+    *    driver ([[consolidate]]): one BOM and one header, then each
+    *    file's rows in lender-path order — no Spark job. The join is
+    *    exact because the files come from one write of one schema: every
+    *    header is the same, and `time` is already in the dialect that
+    *    [[mergeAll]] re-parses it into.
+    *
+    * @return the consolidated file, all-string, as written. */
   def run(view: DataFrame, startDate: String, endDate: String,
           outDir: String, resultDir: String): DataFrame = {
+    val spark = view.sparkSession
     val (clean, quarantined) = splitQuarantine(view)
     val report = ExportsEtl.forAllLenders(clean, startDate, endDate)
-    val files = writePerLender(report, outDir)
-    quarantined.write.mode("overwrite").parquet(s"$outDir/_quarantine")
-    mergeFiles(view.sparkSession, files, resultDir)
+    val out = new Path(outDir)
+    out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    val side = Executors.newSingleThreadExecutor()
+    val files = try {
+      val quarantine = SQLExecution.withThreadLocalCaptured(
+          ClassicConversions.castToImpl(spark), side) {
+        quarantined.write.parquet(s"$outDir/_quarantine")
+      }
+      val written = writeLenders(report, outDir, "append")
+      try quarantine.join()
+      catch { case e: CompletionException => throw e.getCause }
+      written
+    } finally side.shutdown()
+    consolidate(report, files, resultDir)
+  }
+
+  /** [[run]]'s consolidation: `files`, the per-lender files of one
+    * [[writePerLender]]-shaped write of `report`, joined on the driver
+    * into `resultDir` ([[Csv.joinTabCsv]]) — no Spark job.
+    *
+    * @return the consolidated file, all-string, as written. */
+  def consolidate(report: DataFrame, files: Seq[FileStatus],
+                  resultDir: String): DataFrame = {
+    require(files.nonEmpty, "no per-lender report files to consolidate")
+    val columns = StructType(report.schema.filterNot(_.name == "report_lender"))
+    val spark = report.sparkSession
+    val joined = Csv.joinTabCsv(spark, files, columns, resultDir)
+    Csv.readKnownTabCsv(spark, Seq(joined), columns.fieldNames.toSeq)
   }
 }

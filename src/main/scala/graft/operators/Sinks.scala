@@ -1,10 +1,12 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.{CodecStreams, FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.csv.{CSVFileFormat, CSVUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
@@ -25,28 +27,56 @@ object Csv {
     // same human shape minus the meaningless offset.
     "timestampNTZFormat" -> "yyyy-MM-dd HH:mm:ss")
 
-  /** Write the reference per-lender/consolidated CSV shape. `singleFile`
-    * gives the reference's one-file-per-output contract (S7): the
-    * partitions are written in parallel without headers and joined on
-    * the driver behind one header, in partition order — the file
+  /** A writer of `df` in the reference dialect through
+    * [[BomCsvFileFormat]]: every file it writes starts with the BOM, then
+    * the header and rows Spark's CSV writer renders. */
+  def tabCsvWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.write.format(classOf[BomCsvFileFormat].getName).options(WriteOptions)
+
+  /** Write the reference per-lender/consolidated CSV shape through
+    * [[tabCsvWriter]], one file per partition, each BOM first.
+    * `singleFile` gives the reference's one-file-per-output contract (S7):
+    * the partitions are written in parallel and joined on the driver
+    * behind one BOM and one header, in partition order — the file
     * coalesce(1) would write, without funnelling the whole input through
-    * one task. Leave false to keep one file per partition at scale.
-    * Spark cannot emit a BOM natively, so the BOM is prepended on the
-    * driver, in the same pass as the join (driver-side via the Hadoop
-    * FileSystem, so it works on distributed filesystems too).
+    * one task.
     *
     * @return the written files with their statuses. */
-  def writeTabCsv(df: DataFrame, path: String, singleFile: Boolean = false,
-                  bom: Boolean = true): Seq[FileStatus] = {
-    df.write.options(WriteOptions + ("header" -> (!singleFile).toString))
-      .mode("overwrite").csv(path)
+  def writeTabCsv(df: DataFrame, path: String,
+                  singleFile: Boolean = false): Seq[FileStatus] = {
     val spark = df.sparkSession
-    if (singleFile) Seq(joinParts(spark, path, df.schema, bom))
-    else if (bom) prependBom(spark, partFiles(spark, path).map(_.getPath))
-    else partFiles(spark, path)
+    tabCsvWriter(df).mode("overwrite").save(path)
+    val parts = partFiles(spark, path)
+    if (!singleFile) parts
+    else {
+      val paths = parts.map(_.getPath)
+      val target = paths.headOption.getOrElse(new Path(path, "part-00000-joined.csv"))
+      val tmp = new Path(path, s"${target.getName}.joined")
+      joinInto(spark, paths, df.schema, tmp)
+      val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      paths.foreach(fs.delete(_, false))
+      fs.rename(tmp, target)
+      Seq(fs.getFileStatus(target))
+    }
   }
 
-  private val Bom: Array[Byte] = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
+  /** Replace the directory `path` with one consolidated file of `files`,
+    * the files of one [[tabCsvWriter]] write of `schema`: one BOM and one
+    * header, then each file's rows in the order of `files`, joined on the
+    * driver ([[joinInto]]) — no Spark job. A `_SUCCESS` marker follows
+    * the file, as after a Spark write.
+    *
+    * @return the consolidated file's status. */
+  def joinTabCsv(spark: SparkSession, files: Seq[FileStatus], schema: StructType,
+                 path: String): FileStatus = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dir, true)
+    val joined = joinInto(spark, files.map(_.getPath), schema,
+      new Path(dir, "part-00000.csv"))
+    fs.create(new Path(dir, "_SUCCESS"), true).close()
+    joined
+  }
 
   /** The part files a write left directly under `dir`, sorted by path —
     * for Spark's `part-NNNNN-…` names, by partition. */
@@ -57,36 +87,48 @@ object Csv {
       .toSeq
   }
 
-  /** Join the header-less part files under `dir` into its first part
-    * file: the optional BOM, the header Spark's CSV writer renders for
-    * `schema` in the reference dialect, then every part in partition
-    * order. */
-  private def joinParts(spark: SparkSession, dir: String, schema: StructType,
-                        bom: Boolean): FileStatus = {
+  /** Write `target`: the BOM, the header Spark's CSV writer renders for
+    * `schema` in the reference dialect, then the rows of each of `files`
+    * in order — driver-side via the Hadoop FileSystem, so it works on
+    * distributed filesystems too. Each file must be a [[tabCsvWriter]]
+    * file of `schema`, starting with that same BOM and header; they are
+    * checked and skipped. */
+  private def joinInto(spark: SparkSession, files: Seq[Path], schema: StructType,
+                       target: Path): FileStatus = {
     val header = new java.io.StringWriter
     val gen = new UnivocityGenerator(schema, header, new CSVOptions(
       WriteOptions, false, spark.sessionState.conf.sessionLocalTimeZone))
     gen.writeHeaders()
     gen.flush()
-    val parts = partFiles(spark, dir).map(_.getPath)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = parts.headOption.getOrElse(
-      new Path(dir, "part-00000-joined.csv"))
-    val tmp = new Path(dir, s"${target.getName}.joined")
-    val out = fs.create(tmp, true)
+    val prefix = BomCsvFileFormat.Bom ++
+      header.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(target, true)
     try {
-      if (bom) out.write(Bom)
-      out.write(header.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      parts.foreach { p =>
+      out.write(prefix)
+      files.foreach { p =>
         val in = fs.open(p)
-        try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-        finally in.close()
+        try {
+          val head = new Array[Byte](prefix.length)
+          in.readFully(head)
+          require(head.sameElements(prefix),
+            s"$p does not start with the BOM and the header of $schema")
+          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
+        } finally in.close()
       }
     } finally out.close()
-    parts.foreach(fs.delete(_, false))
-    fs.rename(tmp, target)
     fs.getFileStatus(target)
   }
+
+  /** The reader options of the reference dialect: tab-separated, header
+    * line, backslash escape, no type inference. */
+  private val ReadOptions = Map("sep" -> "\t", "header" -> "true",
+    "inferSchema" -> "false", "escape" -> "\\")
+
+  /** S6: read a glob of CSVs with an all-string schema (pandas
+    * `dtype=str`): no inference, empty fields → null. */
+  def readTabCsvAllString(spark: SparkSession, glob: String): DataFrame =
+    spark.read.options(ReadOptions).csv(glob)
 
   /** `f` over `items` on a driver pool of min(items, available
     * processors) threads; results in the order of `items`. */
@@ -99,38 +141,6 @@ object Csv {
       finally pool.shutdown()
     }
   }
-
-  /** Prepend the UTF-8 BOM to each of `files` (a copy behind the BOM,
-    * then a rename over the original), concurrently on a driver pool —
-    * driver-side via the Hadoop FileSystem, so it works on distributed
-    * filesystems too. Returns each rewritten file's status (one stat per
-    * file), in the order of `files`. */
-  def prependBom(spark: SparkSession, files: Seq[Path]): Seq[FileStatus] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    onDriverPool(files) { src =>
-      val fs = src.getFileSystem(conf)
-      val tmp = new Path(src.getParent, src.getName + ".bom")
-      val in = fs.open(src)
-      val outS = fs.create(tmp, true)
-      try {
-        outS.write(Bom)
-        org.apache.hadoop.io.IOUtils.copyBytes(in, outS, 65536, false)
-      } finally { in.close(); outS.close() }
-      fs.delete(src, false)
-      fs.rename(tmp, src)
-      fs.getFileStatus(src)
-    }
-  }
-
-  /** The reader options of the reference dialect: tab-separated, header
-    * line, backslash escape, no type inference. */
-  private val ReadOptions = Map("sep" -> "\t", "header" -> "true",
-    "inferSchema" -> "false", "escape" -> "\\")
-
-  /** S6: read a glob of CSVs with an all-string schema (pandas
-    * `dtype=str`): no inference, empty fields → null. */
-  def readTabCsvAllString(spark: SparkSession, glob: String): DataFrame =
-    spark.read.options(ReadOptions).csv(glob)
 
   /** The headers of files in the reference dialect, read on the driver
     * pool: Spark's own first-line read, the BOM stripped, then parsed and
@@ -170,6 +180,52 @@ object Csv {
     if (back.head(1).exists(_.length != expectedColumns.length))
       problems += "first-row arity mismatch"
     problems.toSeq
+  }
+}
+
+/** Spark's CSV source, writing the reference dialect's UTF-8 BOM: each
+  * file starts with the three BOM bytes, then exactly what Spark's own
+  * `CsvOutputWriter` writes — the header when asked, then the rows
+  * through `UnivocityGenerator`. The BOM is written in the task, so every
+  * byte reaches the disk once. Reads are Spark's CSV reads. Named by
+  * class: `df.write.format(classOf[BomCsvFileFormat].getName)`. */
+class BomCsvFileFormat extends CSVFileFormat {
+  override def prepareWrite(spark: SparkSession, job: Job,
+                            options: Map[String, String],
+                            dataSchema: StructType): OutputWriterFactory = {
+    val csv = super.prepareWrite(spark, job, options, dataSchema)
+    val conf = spark.sessionState.conf
+    val params = new CSVOptions(options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    new OutputWriterFactory {
+      override def getFileExtension(context: TaskAttemptContext): String =
+        csv.getFileExtension(context)
+      override def newInstance(path: String, dataSchema: StructType,
+                               context: TaskAttemptContext): OutputWriter =
+        new BomCsvFileFormat.Writer(path, dataSchema, context, params)
+    }
+  }
+}
+
+object BomCsvFileFormat {
+  private[operators] val Bom: Array[Byte] = Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
+
+  /** `CsvOutputWriter` with the BOM written before the generator's first
+    * byte. */
+  private class Writer(val path: String, dataSchema: StructType,
+                       context: TaskAttemptContext, params: CSVOptions)
+      extends OutputWriter {
+    private val gen = {
+      val out = CodecStreams.createOutputStream(context, new Path(path))
+      out.write(Bom)
+      val charset = java.nio.charset.Charset.forName(params.charset)
+      new UnivocityGenerator(dataSchema, new java.io.OutputStreamWriter(out, charset),
+        params)
+    }
+    if (params.headerFlag) gen.writeHeaders()
+
+    override def write(row: InternalRow): Unit = gen.write(row)
+    override def close(): Unit = gen.close()
   }
 }
 

@@ -32,6 +32,24 @@ class CsvSpec extends AnyFunSuite {
     assert(lines(2) == "\"2\"\t\"\"\t\"\"")
   }
 
+  test("multi-file writeTabCsv starts each part with one BOM; headers read back BOM-free") {
+    val dir = Files.createTempDirectory("graftcsv").toString + "/multi"
+    val df = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "s").repartition(3)
+    val files = Csv.writeTabCsv(df, dir)
+    assert(files.size == 3)
+    val bom = Seq(0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
+    files.foreach { f =>
+      val bytes = Files.readAllBytes(Paths.get(f.getPath.toUri)).toSeq
+      assert(bytes.take(3) == bom, f)
+      assert(!bytes.drop(3).startsWith(bom), s"$f starts with two BOMs")
+      assert(new String(bytes.drop(3).toArray, "UTF-8").split("\n")(0) == "\"id\"\t\"s\"")
+    }
+    assert(Csv.readHeaders(spark, files.map(_.getPath)) == Seq.fill(3)(Seq("id", "s")))
+    val back = Csv.readTabCsvAllString(spark, dir)
+    assert(back.columns.toSeq == Seq("id", "s"))
+    assert(back.select("id").as[String].collect().map(_.toInt).sorted.toSeq == (1 to 40))
+  }
+
   test("readTabCsvAllString round-trips with all-string schema, empty → null (S6)") {
     val dir = Files.createTempDirectory("graftcsv").toString + "/rt"
     val df = Seq((1L, Option("x"), Option(2.5)), (2L, None, None)).toDF("a", "b", "c")

@@ -84,10 +84,7 @@ class ReportJobSpec extends AnyFunSuite {
     // A malformed-results row (truncated JSON): from_json yields NULL, so
     // without the quarantine split it would silently reclassify the
     // scenario; with it, the ROW is side-carted and the job completes.
-    val poison = Seq((java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
-        "sPOISON", """[{"lenderName":"alpha","doesService":""", "alpha"))
-      .toDF("time", "scenarioId", "results", "exportedLender")
-    val poisoned = fixture.viewForJob.unionByName(poison, allowMissingColumns = true)
+    val poisoned = fixture.viewForJob.unionByName(poisonRow, allowMissingColumns = true)
 
     val tmp = Files.createTempDirectory("graft_quarantine").toString
     val merged = ReportJob.run(poisoned, "2024-01-01", "2025-01-01",
@@ -97,7 +94,7 @@ class ReportJobSpec extends AnyFunSuite {
     val q = spark.read.parquet(s"$tmp/output/_quarantine")
     assert(q.select("scenarioId").as[String].collect().toSeq == Seq("sPOISON"))
 
-    // all lender reports written, none corrupted by the BOM pass
+    // all lender reports written beside the quarantine, none truncated by it
     val lenderDirs = new java.io.File(s"$tmp/output").listFiles()
       .filter(d => d.isDirectory && !d.getName.startsWith("_"))
       .map(_.getName).sorted
@@ -111,18 +108,100 @@ class ReportJobSpec extends AnyFunSuite {
     assert(merged.count() == expected)
   }
 
-  /** A view where each of `n` lenders is exported for its own scenario:
+  /** A view where each of `lenders` is exported for its own scenario:
     * every lender gets a report (one row per surviving scenario). */
-  private def manyLenderView(n: Int) = (1 to n).map { i =>
-    val lender = f"l$i%02d"
-    ExportsViewRow(java.sql.Timestamp.valueOf("2024-03-01 10:00:00"), s"s$i",
-      s"""[{"lenderName":"$lender","doesService":true,""" +
-        s""""maxBorrowingCapacity":"800000","performance":""" +
-        """{"lenderPassedServicing":"true","lenderExportWinner":"true"}}]""",
-      Some(lender), "PAYG", "Fixed", "Purchase", Some(100.0 * i), Some(2L),
-      Some(1L), "Purchase", Some(0L), Some(0.8), "70-80", Some(0L),
-      Some(120000.0), Some(500.0), Some(0.0), isValidExport = true)
+  private def lenderView(lenders: Seq[String]) = lenders.zipWithIndex.map {
+    case (lender, j) =>
+      val i = j + 1
+      ExportsViewRow(java.sql.Timestamp.valueOf("2024-03-01 10:00:00"), s"s$i",
+        s"""[{"lenderName":"$lender","doesService":true,""" +
+          s""""maxBorrowingCapacity":"800000","performance":""" +
+          """{"lenderPassedServicing":"true","lenderExportWinner":"true"}}]""",
+        Some(lender), "PAYG", "Fixed", "Purchase", Some(100.0 * i), Some(2L),
+        Some(1L), "Purchase", Some(0L), Some(0.8), "70-80", Some(0L),
+        Some(120000.0), Some(500.0), Some(0.0), isValidExport = true)
   }.toDF()
+
+  private def manyLenderView(n: Int) = lenderView((1 to n).map(i => f"l$i%02d"))
+
+  /** A malformed-results row (truncated JSON) for lender alpha. */
+  private def poisonRow = Seq((java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
+      "sPOISON", """[{"lenderName":"alpha","doesService":""", "alpha"))
+    .toDF("time", "scenarioId", "results", "exportedLender")
+
+  private def bytes(f: java.io.File): Seq[Byte] = Files.readAllBytes(f.toPath).toSeq
+  private def lines(b: Seq[Byte]): Seq[String] =
+    new String(b.toArray, "UTF-8").split("\n").toSeq
+  /** The names under `dir`, without the filesystem's `.crc` side files. */
+  private def listing(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName).filterNot(_.startsWith("."))
+      .sorted.toSeq
+  private def partFilesIn(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).toSeq
+
+  /** `run`'s consolidated file is its per-lender files joined: one BOM and
+    * header, then each file's body in lender-path order, with a `_SUCCESS`
+    * marker; as a multiset its lines are mergeAll's over the same files;
+    * and the consolidation runs no Spark job. */
+  private def assertJoined(view: org.apache.spark.sql.DataFrame, name: String): Unit = {
+    val tmp = Files.createTempDirectory(name).toString
+    val (out, result) = (s"$tmp/output", s"$tmp/result")
+    val merged = ReportJob.run(view, "2024-01-01", "2025-01-01", out, result)
+
+    val lenderFiles = new java.io.File(out).listFiles()
+      .filter(d => d.isDirectory && !d.getName.startsWith("_")).sortBy(_.getName)
+      .flatMap(d => partFilesIn(d.getPath)).toSeq
+    val perLender = lenderFiles.map(bytes)
+    val prefix = perLender.head.take(perLender.head.indexOf('\n'.toByte) + 1)
+    assert(prefix.take(3) == Seq(0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
+    assert(perLender.forall(_.startsWith(prefix)), "per-lender headers differ")
+    assert(listing(result) == Seq("_SUCCESS", "part-00000.csv"))
+    val joined = bytes(partFilesIn(result).head)
+    assert(joined == prefix ++ perLender.flatMap(_.drop(prefix.length)),
+      "the consolidated file is not BOM + header + the bodies in lender-path order")
+
+    ReportJob.mergeAll(spark, out, s"$tmp/merged")
+    val viaMerge = bytes(partFilesIn(s"$tmp/merged").head)
+    assert(lines(joined).sorted == lines(viaMerge).sorted)
+    assert(merged.count() == lines(joined).size - 1)
+
+    val report = graft.etl.ExportsEtl.forAllLenders(
+      ReportJob.splitQuarantine(view)._1, "2024-01-01", "2025-01-01")
+    val files = ReportJob.writePerLender(report, s"$tmp/again")
+    val jobs = JobTasks(spark) {
+      ReportJob.consolidate(report, files, s"$tmp/again_result"): Unit
+    }
+    assert(jobs.isEmpty, s"the consolidation ran jobs of $jobs tasks")
+    assert(bytes(partFilesIn(s"$tmp/again_result").head) == joined)
+  }
+
+  test("run joins the golden fixture's per-lender files into the consolidated file") {
+    assertJoined(new ExportsEtlSpec().viewForJob, "graft_join_golden")
+  }
+
+  test("run joins 40 lenders' files into the consolidated file") {
+    assertJoined(manyLenderView(40), "graft_join_many")
+  }
+
+  test("a re-run into the same directories leaves only its own output") {
+    val tmp = Files.createTempDirectory("graft_rerun").toString
+    val (out, result) = (s"$tmp/output", s"$tmp/result")
+    ReportJob.run(lenderView(Seq("alpha", "beta", "gamma"))
+        .unionByName(poisonRow, allowMissingColumns = true),
+      "2024-01-01", "2025-01-01", out, result)
+    assert(spark.read.parquet(s"$out/_quarantine").count() == 1)
+    val merged = ReportJob.run(lenderView(Seq("alpha", "beta")),
+      "2024-01-01", "2025-01-01", out, result)
+
+    assert(listing(out) ==
+      Seq("_SUCCESS", "_quarantine", "report_lender=alpha", "report_lender=beta"))
+    assert(spark.read.parquet(s"$out/_quarantine").count() == 0)
+    assert(listing(result) == Seq("_SUCCESS", "part-00000.csv"))
+    assert(listing(tmp) == Seq("output", "result"), "a staging directory is left")
+    assert(merged.select("associated_lender").as[String].collect().distinct.sorted.toSeq ==
+      Seq("alpha", "beta"))
+  }
 
   test("the per-lender write spreads over the shuffle partitions, and the " +
       "merge of past-32 known files lists nothing and infers no header") {
